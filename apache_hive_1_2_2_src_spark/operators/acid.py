@@ -72,9 +72,8 @@ from pyspark.sql import functions as F
 
 from apache_hive_1_2_2_src_spark.operators.helpers import dec
 from apache_hive_1_2_2_src_spark.registry import register
-from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
 from apache_hive_1_2_2_src_spark.sources.io import _tmp
-from apache_hive_1_2_2_src_spark.tables import load_table
+from apache_hive_1_2_2_src_spark.tables import hadoop_fs, load_table
 
 # The shared edit-batch derivation (modulus rules — see module docstring):
 #   delta v1: key%7==0 -> UPDATE price+10 ; key%7==1 -> DELETE
@@ -223,7 +222,7 @@ def resolve_acid_state(
     Returns ``(base_dirname | None, base_txn, [(min, max, dirname), …])``
     with the surviving deltas in txn order.
     """
-    _, fs, P = _hadoop_fs(spark, table_path)
+    _, fs, P = hadoop_fs(spark, table_path)
     root = P(table_path)
     if not fs.exists(root):
         raise FileNotFoundError(table_path)
@@ -332,7 +331,7 @@ def materialize_acid_layout(spark: SparkSession, sf_dir: str, path: str) -> str:
     hold (k, st, p, op) — versions live in the directory names — plus a
     ``_tmp_junk`` decoy dir the resolver must ignore. The tree is rebuilt
     from scratch each call (the compaction queries mutate it)."""
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     fs.delete(P(path), True)
     base, d1, d2 = _acid_versions(spark, sf_dir)
     base.drop("ver").write.parquet(f"{path}/base_0")
@@ -496,7 +495,7 @@ def read_acid_table_partitioned(
     # one part file, even for 0-row frames), and a FILE named like an
     # acid dir would be picked up (nothing creates those).
     prefix = f"{part_col}="
-    _, fs, P = _hadoop_fs(spark, table_path)
+    _, fs, P = hadoop_fs(spark, table_path)
     root = P(table_path)
     if not fs.exists(root):
         raise FileNotFoundError(table_path)
@@ -644,7 +643,7 @@ def materialize_acid_layout_partitioned(
     migrates partitions), each holding its own ``base_0 + delta_1_1 +
     delta_2_2``, plus a ``_tmp_junk`` decoy inside one partition AND a
     non-partition junk dir at the root — both must be ignored."""
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     fs.delete(P(path), True)
     base, d1, d2 = _acid_versions(spark, sf_dir)
     for df, dname in ((base, "base_0"), (d1, "delta_1_1"), (d2, "delta_2_2")):
@@ -772,7 +771,7 @@ def materialize_acid_layout_bucketed(
         write_hive_bucketed,
     )
 
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     fs.delete(P(path), True)
     base, d1, d2 = _acid_versions(spark, sf_dir)
     for df, dname in ((base, "base_0"), (d1, "delta_1_1"), (d2, "delta_2_2")):
@@ -903,7 +902,7 @@ def materialize_acid_layout_full(
         write_hive_bucketed,
     )
 
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     fs.delete(P(path), True)
     base, d1, d2 = _acid_versions(spark, sf_dir)
     for df, dname in ((base, "base_0"), (d1, "delta_1_1"), (d2, "delta_2_2")):
@@ -1060,7 +1059,7 @@ _INIT_MINOR_THRESHOLD = 3  # demo-scale stand-in for
 )
 def acid_initiator_policy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _tmp("acid_initiator_tree")
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     fs.delete(P(path), True)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     rows = o.select(
@@ -1152,7 +1151,7 @@ def materialize_acid_layout_txn(
     and delta_4_4 (an OPEN writer's mass delete of the k%3==0 slice —
     data that is physically on disk but must be invisible below the
     watermark). d2 plays the ABORTED txn."""
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     fs.delete(P(path), True)
     base, d1, d2 = _acid_versions(spark, sf_dir)
     o = load_table(spark, sf_dir, "orders").select(
@@ -1228,7 +1227,7 @@ def clean_acid_obsolete(spark: SparkSession, table_path: str) -> list[str]:
     dir; no data is read."""
     base_dir, _txn, chosen = resolve_acid_state(spark, table_path)
     keep = {base_dir} | {nm for _mn, _mx, nm in chosen}
-    _, fs, P = _hadoop_fs(spark, table_path)
+    _, fs, P = hadoop_fs(spark, table_path)
     removed = []
     for st in fs.listStatus(P(table_path)):
         if not st.isDirectory():
@@ -1273,7 +1272,7 @@ def acid_cleaner_after_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
     removed = clean_acid_obsolete(spark, table)
     if removed != ["delta_1_1", "delta_2_2"]:
         raise AssertionError(f"cleaner removed wrong set: {removed}")
-    _, fs, P = _hadoop_fs(spark, table)
+    _, fs, P = hadoop_fs(spark, table)
     left = sorted(
         st.getPath().getName()
         for st in fs.listStatus(P(table))
@@ -1523,7 +1522,7 @@ def materialize_acid_layout_concurrent(
       delta_3_3  writer A, ABORTED:   delete k%6==0
       delta_4_4  writer B, OPEN:      price+99 on k%4==2
     """
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     fs.delete(P(path), True)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"

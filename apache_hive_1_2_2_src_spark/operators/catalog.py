@@ -34,7 +34,7 @@ from pyspark.sql import functions as F  # noqa: F401  (kept for parity with sibl
 
 from apache_hive_1_2_2_src_spark.registry import register
 from apache_hive_1_2_2_src_spark.tmputil import scratch_dir
-from apache_hive_1_2_2_src_spark.tables import load_table
+from apache_hive_1_2_2_src_spark.tables import hadoop_fs, load_table
 
 
 def _scratch_db(spark: SparkSession) -> str:
@@ -633,9 +633,7 @@ def load_data_inpath(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Through the Hadoop FS API (same discipline as write_hive_bucketed)
         # so the move works on any store with atomic rename, not just
         # file:// — on HDFS/s3a this is the identical MoveTask contract.
-        from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
-
-        _, fs, P = _hadoop_fs(spark, inpath)
+        _, fs, P = hadoop_fs(spark, inpath)
         stats = [
             st
             for st in fs.listStatus(P(inpath))
@@ -893,8 +891,6 @@ def show_functions_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("catalog", "ddl", "partition"),
 )
 def exchange_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
-
     db = _scratch_db(spark)
     _drop_db(spark, db)
     base = scratch_dir("exch")
@@ -912,7 +908,7 @@ def exchange_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         spark.sql(f"MSCK REPAIR TABLE {src}")
         # EXCHANGE PARTITION (o_orderstatus='F'): dir move + metadata ops
-        _, fs, P = _hadoop_fs(spark, a_loc)
+        _, fs, P = hadoop_fs(spark, a_loc)
         if not fs.rename(
             P(f"{a_loc}/o_orderstatus=F"), P(f"{b_loc}/o_orderstatus=F")
         ):
@@ -1048,12 +1044,8 @@ def show_create_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stats_footer_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import (
-        _hadoop_fs,
-    )
-
     src = os.path.join(sf_dir, "lineitem.parquet")
-    _, fs, P = _hadoop_fs(spark, src)
+    _, fs, P = hadoop_fs(spark, src)
     root = P(src)
     if fs.getFileStatus(root).isDirectory():
         # Keep the FULLY-QUALIFIED URI (scheme + authority + path): the
@@ -1147,12 +1139,8 @@ def stats_footer_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stats_footer_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import (
-        _hadoop_fs,
-    )
-
     src = os.path.join(sf_dir, "lineitem.parquet")
-    _, fs, P = _hadoop_fs(spark, src)
+    _, fs, P = hadoop_fs(spark, src)
     root = P(src)
     if fs.getFileStatus(root).isDirectory():
         # Fully-qualified URIs for the same reason as stats_footer_count:

@@ -63,7 +63,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apache_hive_1_2_2_src_spark.registry import register
-from apache_hive_1_2_2_src_spark.tables import load_table
+from apache_hive_1_2_2_src_spark.tables import hadoop_fs, load_table
 
 _2_32 = 4_294_967_296
 _2_31 = 2_147_483_648
@@ -157,16 +157,6 @@ def hive_bucket_of(value, n_buckets: int, kind: str = "string") -> int:
     return (hive_hash_value(value, kind) % _2_31) % n_buckets
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(jvm, FileSystem, Path-class) for ``path`` — works for file://,
-    hdfs://, s3a://… anywhere a Hadoop FS implementation is on the
-    classpath, unlike local glob/shutil."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, fs, jvm.org.apache.hadoop.fs.Path
-
-
 def _parquet_files(fs, path_cls, d: str) -> list[str]:
     p = path_cls(d)
     if not fs.exists(p):
@@ -218,7 +208,7 @@ def write_hive_bucketed(
     if sorted_by is not None:
         staged = staged.sortWithinPartitions("__hb", sorted_by)
     staged.write.mode("overwrite").partitionBy("__hb").parquet(staging)
-    jvm, fs, P = _hadoop_fs(spark, path)
+    jvm, fs, P = hadoop_fs(spark, path)
     try:
         # ONE inputFiles() round trip enumerates all staged leaf files
         # (the JVM lists in parallel) — beats BOTH prior forms measured
@@ -307,7 +297,7 @@ def read_hive_bucketed(
         # check below keeps the per-path form's loud failure on a
         # missing/extra bucket file — a glob over a corrupt layout would
         # otherwise silently read fewer buckets (wrong rows, no error).
-        _, fs, P = _hadoop_fs(spark, path)
+        _, fs, P = hadoop_fs(spark, path)
         found = sorted(
             st.getPath().getName()
             for st in fs.listStatus(P(path))
@@ -513,7 +503,7 @@ def hive_bucket_map_join(
     silently lose every pair whose two hashes disagree mod m vs mod n
     (Hive raises the same error via CLUSTERED BY metadata)."""
     spark_ = spark
-    _, fs, P = _hadoop_fs(spark_, path_a)
+    _, fs, P = hadoop_fs(spark_, path_a)
     for side, path in (("left", path_a), ("right", path_b)):
         found = sorted(
             st.getPath().getName()
@@ -692,7 +682,7 @@ def validate_hive_sorted_bucketed(
 
     Results are cached per (path, n_buckets, key) against the layout's
     file fingerprint — see ``_SORTED_VALIDATED`` above."""
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     stats = sorted(
         (st.getPath().getName(), st.getLen(), st.getModificationTime())
         for st in fs.listStatus(P(path))
@@ -879,7 +869,7 @@ def hive_smb_merge_join(
     positional files per side, verified up front). Non-key column names must be disjoint
     across the two sides (checked); same-named KEYS are fine (the merge
     keeps one copy)."""
-    _, fs, P = _hadoop_fs(spark, path_a)
+    _, fs, P = hadoop_fs(spark, path_a)
     for side, path in (("left", path_a), ("right", path_b)):
         found = sorted(
             st.getPath().getName()
@@ -1128,7 +1118,7 @@ def write_hive_partitioned_bucketed(
     if sorted_by is not None:
         staged = staged.sortWithinPartitions(part_col, "__hb", sorted_by)
     staged.write.mode("overwrite").partitionBy(part_col, "__hb").parquet(staging)
-    jvm, fs, P = _hadoop_fs(spark, path)
+    jvm, fs, P = hadoop_fs(spark, path)
     from concurrent.futures import ThreadPoolExecutor
 
     try:
@@ -1211,7 +1201,7 @@ _PB_LAYOUT_VALIDATED: dict[tuple[str, int], dict] = {}
 def list_hive_partitions(spark: SparkSession, path: str, part_col: str) -> dict:
     """{partition value (unescaped str, None for the NULL partition) ->
     directory name} for a nested layout — ONE listStatus, flat in p."""
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     out: dict = {}
     for st in fs.listStatus(P(path)):
         name = st.getPath().getName()
@@ -1267,7 +1257,7 @@ def read_hive_partitioned_bucketed(
     if bad:
         raise ValueError(f"bucket ids out of range: {bad}")
     buckets = sorted(set(buckets))
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     want = [f"{b:06d}_0" for b in range(n_buckets)]
     from concurrent.futures import ThreadPoolExecutor
 
@@ -1643,7 +1633,7 @@ def validate_hive_sorted_partitioned_bucketed(
         if missing:
             raise ValueError(f"partitions not present at {path}: {missing}")
         chosen = list(dict.fromkeys(parts))
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     stats = []
     for v in chosen:
         d = by_val[v]

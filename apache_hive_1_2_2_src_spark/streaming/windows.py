@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from apache_hive_1_2_2_src_spark.operators.helpers import dsum, sql_dsum
 from apache_hive_1_2_2_src_spark.registry import register
 from apache_hive_1_2_2_src_spark.tmputil import scratch_dir
-from apache_hive_1_2_2_src_spark.tables import load_table
+from apache_hive_1_2_2_src_spark.tables import hadoop_fs, load_table
 
 
 # Explicit schema for the staged events inbox written by _stage_events_inbox.
@@ -487,9 +487,7 @@ def reclaim_state_generation(sess: SparkSession, state: str) -> None:
       never a mix.
     - neither present: first generation, nothing to reclaim.
     """
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
-
-    _, fs, P = _hadoop_fs(sess, state)
+    _, fs, P = hadoop_fs(sess, state)
     tgt, told, tgen = P(state), P(state + "__old"), P(state + "__next")
     if fs.exists(tgt):
         fs.delete(told, True)
@@ -514,9 +512,7 @@ def commit_state_generation(
     twice over: overwriting the parquet dir a plan is simultaneously
     reading races file deletion, and a crash mid-overwrite would lose
     state merged by checkpoint-committed earlier batches."""
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
-
-    _, fs, P = _hadoop_fs(sess, state)
+    _, fs, P = hadoop_fs(sess, state)
     tgt, told, tgen = P(state), P(state + "__old"), P(state + "__next")
     gen.write.mode("overwrite").parquet(state + "__next")
     n_gen = sess.read.parquet(state + "__next").count()
@@ -575,8 +571,6 @@ def streaming_foreachbatch_upsert(
 ) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
-
     base = _tmp_base("hive_spark_upsert_")
     state, ckpt = os.path.join(base, "state"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, sf_dir)
@@ -603,7 +597,7 @@ def streaming_foreachbatch_upsert(
         # merge re-converges by argmax idempotence.
         sess = batch.sparkSession
         reclaim_state_generation(sess, state)
-        _, fs, P = _hadoop_fs(sess, state)
+        _, fs, P = hadoop_fs(sess, state)
         cur = batch.select("user_id", "ts", "event_id", "value")
         if fs.exists(P(state)):
             cur = cur.unionByName(sess.read.parquet(state))
@@ -666,8 +660,6 @@ def _bucketed_upsert_drain(
     tests/test_round19_ops.py)."""
     from pyspark.sql.window import Window
 
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
-
     def ub_of(c: str):
         return F.pmod(F.xxhash64(F.col(c)), F.lit(n_buckets)).cast("int")
 
@@ -692,7 +684,7 @@ def _bucketed_upsert_drain(
 
     def merge(batch: DataFrame, _epoch: int) -> None:
         sess = batch.sparkSession
-        _, fs, P = _hadoop_fs(sess, state)
+        _, fs, P = hadoop_fs(sess, state)
         side = state + "__next_root"
         # entry-time reclaim: a stale side root is a pre-swap crash (state
         # intact — delete it); each bucket dir reclaims its own crash
@@ -807,15 +799,13 @@ def _bucketed_upsert_drain(
 def streaming_upsert_bucketed_state(
     spark: SparkSession, sf_dir: str, n_buckets: int = 8
 ) -> DataFrame:
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
-
     base = _tmp_base("hive_spark_bupsert_")
     state, ckpt = os.path.join(base, "state"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, sf_dir)
     _bucketed_upsert_drain(
         spark, inbox, state, ckpt, n_buckets, max_files_per_trigger=16
     )
-    _, fs, P = _hadoop_fs(spark, state)
+    _, fs, P = hadoop_fs(spark, state)
     bucket_dirs = [
         f"{state}/b{j:05d}"
         for j in range(n_buckets)
@@ -1169,11 +1159,10 @@ def file_source_ledger_retention_confs(
 )
 def streaming_acid_delta_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apache_hive_1_2_2_src_spark.operators.acid import read_acid_table
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
 
     base = _tmp_base("hive_spark_stream_acid_")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
-    _, fs, P = _hadoop_fs(spark, table)
+    _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
     fs.mkdirs(P(table))
     inbox = _stage_events_inbox(spark, sf_dir)
@@ -1264,9 +1253,7 @@ def compact_partitioned_store(
     an atomic metadata op; on S3A a dir rename is a non-atomic
     copy+delete, so the quiesce window is longer but the entry-time
     reclaim still restores any interruption."""
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
-
-    _, fs, P = _hadoop_fs(spark, path)
+    _, fs, P = hadoop_fs(spark, path)
     tgt, old, side = P(path), P(path + "__old"), P(path + "__compact")
 
     if fs.exists(tgt):
@@ -2231,13 +2218,11 @@ def write_partitioned_delta(
     Retry-idempotent: a replayed batch_id deletes ITS OWN delta dirs
     before renaming, so the replay replaces rather than double-appends
     (pinned by the redrain test in tests/test_acid_dirs.py)."""
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
-
     delta = f"delta_{batch_id + 1}_{batch_id + 1}"
     stage = f"{table}/.stage_{batch_id + 1}"
     rows.write.mode("overwrite").partitionBy(part_col).parquet(stage)
     sp = rows.sparkSession
-    _, fs_, P_ = _hadoop_fs(sp, table)
+    _, fs_, P_ = hadoop_fs(sp, table)
     for st_ in fs_.listStatus(P_(stage)):
         name = st_.getPath().getName()
         if not name.startswith(f"{part_col}="):
@@ -2288,11 +2273,10 @@ def streaming_acid_partitioned_ingest(spark: SparkSession, sf_dir: str) -> DataF
     from apache_hive_1_2_2_src_spark.operators.acid import (
         read_acid_table_partitioned,
     )
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
 
     base = _tmp_base("hive_spark_stream_pacid_")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
-    _, fs, P = _hadoop_fs(spark, table)
+    _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
     fs.mkdirs(P(table))
     inbox = _stage_events_inbox(spark, sf_dir)
@@ -2374,15 +2358,12 @@ def streaming_acid_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFram
         read_acid_bucketed_point,
         read_acid_table,
     )
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import (
-        _hadoop_fs,
-        write_hive_bucketed,
-    )
+    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import write_hive_bucketed
 
     n = 8
     base = _tmp_base("hive_spark_stream_bacid_")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
-    _, fs, P = _hadoop_fs(spark, table)
+    _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
     fs.mkdirs(P(table))
     inbox = _stage_events_inbox(spark, sf_dir)
@@ -2466,10 +2447,7 @@ def write_partitioned_bucketed_delta(
     top-level commit marker per batch (readers resolve deltas against
     the marker set), or stage the whole batch under one dir and expose
     it via a final symlink/manifest swap."""
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import (
-        _hadoop_fs,
-        write_hive_partitioned_bucketed,
-    )
+    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import write_hive_partitioned_bucketed
 
     delta = f"delta_{batch_id + 1}_{batch_id + 1}"
     stage = f"{table}/.stage_{batch_id + 1}"
@@ -2477,7 +2455,7 @@ def write_partitioned_bucketed_delta(
         rows, part_col, key, n_buckets, stage, kind=kind
     )
     sp = rows.sparkSession
-    _, fs_, P_ = _hadoop_fs(sp, table)
+    _, fs_, P_ = hadoop_fs(sp, table)
     for st_ in fs_.listStatus(P_(stage)):
         name = st_.getPath().getName()
         if not name.startswith(f"{part_col}="):
@@ -2549,15 +2527,12 @@ def streaming_acid_full_layout_ingest(
         read_acid_full_point,
         read_acid_table_partitioned,
     )
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import (
-        _hadoop_fs,
-        hive_bucket_of,
-    )
+    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import hive_bucket_of
 
     n = 8
     base = _tmp_base("hive_spark_stream_flacid_")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
-    _, fs, P = _hadoop_fs(spark, table)
+    _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
     fs.mkdirs(P(table))
     inbox = _stage_events_inbox(spark, sf_dir)
@@ -2690,7 +2665,6 @@ def streaming_acid_compact_during_ingest(
         resolve_acid_state,
     )
     from apache_hive_1_2_2_src_spark.sources.hive_bucketing import (
-        _hadoop_fs,
         hive_bucket_of,
         write_hive_bucketed,
     )
@@ -2698,7 +2672,7 @@ def streaming_acid_compact_during_ingest(
     n = 8
     base = _tmp_base("hive_spark_stream_cacid_")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
-    _, fs, P = _hadoop_fs(spark, table)
+    _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
     fs.mkdirs(P(table))
     # own 4-drop inbox (the _lsh_probe_dedup staging pattern): the shared
@@ -2852,12 +2826,11 @@ def streaming_acid_upsert_delete_ingest(
         read_acid_full_point,
         read_acid_table_partitioned,
     )
-    from apache_hive_1_2_2_src_spark.sources.hive_bucketing import _hadoop_fs
 
     n = 8
     base = _tmp_base("hive_spark_stream_udacid_")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
-    _, fs, P = _hadoop_fs(spark, table)
+    _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
     fs.mkdirs(P(table))
     ev = load_table(spark, sf_dir, "events")

@@ -92,11 +92,9 @@ def main() -> None:
     def merge_flat(batch, _epoch):
         sess = batch.sparkSession
         sw.reclaim_state_generation(sess, state_f)
-        from apache_hive_1_2_2_src_spark.sources.hive_bucketing import (
-            _hadoop_fs,
-        )
+        from apache_hive_1_2_2_src_spark.tables import hadoop_fs
 
-        _, fs, P = _hadoop_fs(sess, state_f)
+        _, fs, P = hadoop_fs(sess, state_f)
         cur = batch.select("user_id", "ts", "event_id", "value")
         if fs.exists(P(state_f)):
             cur = cur.unionByName(sess.read.parquet(state_f))

@@ -25,10 +25,13 @@ def main() -> int:
         if a.startswith("--reps"):
             # ADVICE r19: accept both --reps=N and --reps N
             if "=" in a:
-                reps = int(a.split("=", 1)[1])
+                val = a.split("=", 1)[1]
             else:
                 i += 1
-                reps = int(argv[i])
+                val = argv[i] if i < len(argv) else ""
+            if not val.isdigit() or int(val) < 1:
+                raise SystemExit(f"usage: --reps N (N >= 1), got {val!r}")
+            reps = int(val)
         elif a.startswith("--"):
             raise SystemExit(f"unknown option: {a}")
         else:
