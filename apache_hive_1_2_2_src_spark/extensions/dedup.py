@@ -56,6 +56,95 @@ def _shingles(w: Column, n: int = 3) -> Column:
     return F.array_distinct(F.transform(idx, gram))
 
 
+def minhash_band_sigs(
+    sh: DataFrame, key: str, k: int = 16, bands: int = 4
+) -> DataFrame:
+    """(key, sh) shingle rows -> (key, band, sig) band-signature rows: k
+    min-hashes per key (min over xxhash64(shingle, seed_i)), each band's
+    k/bands hashes joined into one ``sig`` string. The one MinHash-LSH
+    signature for the batch pairs and both streaming LSH drains."""
+    rows = k // bands
+    minh = sh.groupBy(key).agg(
+        *[F.min(F.xxhash64(F.col("sh"), F.lit(i))).alias(f"h{i}") for i in range(k)]
+    )
+    band_sigs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat_ws(
+                    ":", *[F.col(f"h{b * rows + r}") for r in range(rows)]
+                ).alias("sig"),
+            )
+            for b in range(bands)
+        ]
+    )
+    return minh.select(key, F.explode(band_sigs).alias("bs")).select(
+        key, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
+    )
+
+
+def band_candidates(new_sig: DataFrame, old_sig: DataFrame) -> DataFrame:
+    """Distinct (new_id, old_id) doc pairs sharing a (band, sig) bucket,
+    the partner strictly earlier (smaller doc_id)."""
+    return (
+        new_sig.alias("nb")
+        .join(
+            old_sig.alias("ob"),
+            (F.col("nb.band") == F.col("ob.band"))
+            & (F.col("nb.sig") == F.col("ob.sig"))
+            & (F.col("ob.doc_id") < F.col("nb.doc_id")),
+        )
+        .select(
+            F.col("nb.doc_id").alias("new_id"),
+            F.col("ob.doc_id").alias("old_id"),
+        )
+        .distinct()
+    )
+
+
+def jaccard_prior_verdicts(
+    roster: DataFrame,
+    cand: DataFrame,
+    new_sh: DataFrame,
+    old_sh: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """Per-doc keep/drop verdicts over ``roster`` (doc_id): n_dup_prior
+    counts the (new_id, old_id) candidates whose exact shingle Jaccard
+    reaches ``threshold``. ``new_sh`` holds the (doc_id, sh) rows of the
+    new_id side, ``old_sh`` those of the old_id side."""
+    n_new = new_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    n_old = old_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    common = (
+        cand.join(new_sh.alias("sa"), F.col("new_id") == F.col("sa.doc_id"))
+        .join(
+            old_sh.alias("sb"),
+            (F.col("old_id") == F.col("sb.doc_id"))
+            & (F.col("sa.sh") == F.col("sb.sh")),
+        )
+        .groupBy("new_id", "old_id")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    jac = F.col("n_common") / (
+        F.col("na.n_sh") + F.col("nb.n_sh") - F.col("n_common")
+    )
+    dups = (
+        common.join(n_new.alias("na"), F.col("new_id") == F.col("na.doc_id"))
+        .join(n_old.alias("nb"), F.col("old_id") == F.col("nb.doc_id"))
+        .filter(jac >= threshold)
+        .groupBy("new_id")
+        .agg(F.count(F.lit(1)).alias("n_dup_prior"))
+        .withColumnRenamed("new_id", "doc_id")
+    )
+    return roster.join(dups, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("n_dup_prior", F.lit(0)).cast("long").alias("n_dup_prior"),
+        F.when(F.coalesce("n_dup_prior", F.lit(0)) > 0, "drop")
+        .otherwise("keep")
+        .alias("verdict"),
+    )
+
+
 @register(
     "dedup_exact",
     oracle="""
@@ -276,7 +365,6 @@ def minhash_lsh_pairs(
     """
     from pyspark.sql import Window
 
-    rows_per_band = k // bands
     # The shingle inverted index feeds three consumers (minhash build,
     # candidate verify ×2) — persist it so the explode+split runs once, not
     # three times. At cluster scale this is the checkpointed intermediate
@@ -285,25 +373,7 @@ def minhash_lsh_pairs(
     sh = _pin_shingle_index(
         d.select("doc_id", F.explode(_shingles(F.col("w"))).alias("sh"))
     )
-    # k min-hashes per doc: min over xxhash64(shingle, seed_i).
-    minh = sh.groupBy("doc_id").agg(
-        *[F.min(F.xxhash64(F.col("sh"), F.lit(i))).alias(f"h{i}") for i in range(k)]
-    )
-    # Band signatures: concat the band's hashes; explode (band_id, sig).
-    band_sigs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ":", *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).alias("sig"),
-            )
-            for b in range(bands)
-        ]
-    )
-    buckets = minh.select("doc_id", F.explode(band_sigs).alias("bs")).select(
-        "doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
+    buckets = minhash_band_sigs(sh, "doc_id", k, bands)
     # Hot-bucket cap: count per (band, sig) rides the same shuffle key as
     # the candidate self-join, so this adds no extra exchange.
     buckets = (

@@ -15,18 +15,30 @@ Scale notes: window(ts, ...) is an ordinary groupBy on a derived column —
 one shuffle of ~|windows × event_types| rows after map-side partial agg. The
 session window uses Spark's built-in session_window (state-store-backed when
 streaming; a sort-based agg in batch). Nothing here collects to the driver.
+
+Every streaming query here drains through ``streaming/epoch_store.py``:
+``stage_drops`` stages ordered inbox drops, ``drain`` runs the availableNow
+drain (and raises on timeout), and ``EpochStore`` is the epoch-keyed state
+store of the foreachBatch probes (its docstring states the store contract).
 """
 
 from __future__ import annotations
 
-import atexit
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apache_hive_1_2_2_src_spark.operators.helpers import dsum, sql_dsum
 from apache_hive_1_2_2_src_spark.registry import register
+from apache_hive_1_2_2_src_spark.streaming.epoch_store import (
+    EpochStore,
+    append_async,
+    concurrently,
+    drain,
+    range_drop,
+    stage_drops,
+)
 from apache_hive_1_2_2_src_spark.tmputil import scratch_dir
 from apache_hive_1_2_2_src_spark.tables import hadoop_fs, load_table
 
@@ -63,33 +75,9 @@ def _assert_stream_schema(staged: DataFrame) -> None:
 
 # One staged inbox per sf_dir per process: the plain-events streaming
 # queries (ingest, watermark window, stateful agg, upsert) read identical
-# content, so re-encoding the table once per query is waste. Cache dirs are
-# removed at process exit.
+# content, so re-encoding the table once per query is waste. Each inbox is
+# a scratch_dir, removed at process exit like every other scratch dir.
 _INBOX_CACHE: dict[str, str] = {}
-
-# Every sink/checkpoint tmpdir created by the streaming queries, removed at
-# process exit so repeated sweeps do not grow /tmp without bound.
-_TMP_BASES: list[str] = []
-
-
-def _tmp_base(prefix: str) -> str:
-    base = scratch_dir(prefix.removeprefix("hive_spark_").rstrip("_"))
-    _TMP_BASES.append(base)
-    return base
-
-
-def _cleanup_tmp() -> None:
-    import shutil
-
-    for p in _INBOX_CACHE.values():
-        shutil.rmtree(os.path.dirname(p), ignore_errors=True)
-    _INBOX_CACHE.clear()
-    for b in _TMP_BASES:
-        shutil.rmtree(b, ignore_errors=True)
-    _TMP_BASES.clear()
-
-
-atexit.register(_cleanup_tmp)
 
 
 def _stage_events_inbox(spark: SparkSession, sf_dir: str) -> str:
@@ -249,7 +237,7 @@ def window_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "ingest"),
 )
 def streaming_ingest_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp_base("hive_spark_stream_")
+    base = scratch_dir("stream")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     # File streams need a DIRECTORY of arriving files; stage the events
     # table into one (the micro-batch "txn batch" being committed). Staging
@@ -260,14 +248,10 @@ def streaming_ingest_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _read_events_stream(spark, inbox).withColumn(
         "ingest_batch", F.spark_partition_id()
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.format("parquet").option("path", sink),
+        ckpt, 120, "streaming_ingest_demo",
     )
-    q.awaitTermination(120)
     back = spark.read.parquet(sink)
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -304,7 +288,7 @@ def streaming_ingest_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "watermark"),
 )
 def streaming_watermark_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp_base("hive_spark_wm_")
+    base = scratch_dir("wm")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, sf_dir)
     stream = (
@@ -314,15 +298,10 @@ def streaming_watermark_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").cast("string").alias("win_start"), "event_type", "n")
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.format("parquet").outputMode("append").option("path", sink),
+        ckpt, 120, "streaming_watermark_window",
     )
-    q.awaitTermination(120)
     back = spark.read.parquet(sink)
     return back.agg(
         F.count(F.lit(1)).alias("n_closed_windows"),
@@ -353,7 +332,7 @@ def streaming_stateful_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    base = _tmp_base("hive_spark_state_")
+    base = scratch_dir("state")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, sf_dir)
 
@@ -378,15 +357,10 @@ def streaming_stateful_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.format("parquet").outputMode("append").option("path", sink),
+        ckpt, 120, "streaming_stateful_user_agg",
     )
-    q.awaitTermination(120)
     return spark.read.parquet(sink)
 
 
@@ -444,7 +418,7 @@ def window_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup", "watermark"),
 )
 def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp_base("hive_spark_sdedup_")
+    base = scratch_dir("sdedup")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     inbox = os.path.join(base, "inbox")
     # Stage events + an every-5th-event duplicate overlay (same payload,
@@ -456,16 +430,13 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     _assert_stream_schema(staged)
     staged.write.mode("overwrite").parquet(inbox)
     stream = _read_events_stream(spark, inbox)
-    q = (
+    drain(
         stream.withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
         .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", sink),
+        ckpt, 120, "streaming_dedup_exact",
     )
-    q.awaitTermination(120)
     back = spark.read.parquet(sink)
     return back.agg(
         F.count(F.lit(1)).alias("n_after_dedup"),
@@ -571,7 +542,7 @@ def streaming_foreachbatch_upsert(
 ) -> DataFrame:
     from pyspark.sql.window import Window
 
-    base = _tmp_base("hive_spark_upsert_")
+    base = scratch_dir("upsert")
     state, ckpt = os.path.join(base, "state"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, sf_dir)
 
@@ -607,19 +578,13 @@ def streaming_foreachbatch_upsert(
         n_users = cur.select("user_id").distinct().count()
         commit_state_generation(sess, state, latest(cur), n_users)
 
-    source = _read_events_stream(spark, inbox, max_files_per_trigger)
-    q = (
-        source.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     # A multi-batch drain rewrites the full state table per batch — slower
-    # than the single-batch queries' 120 s budget. Raising AND checking the
-    # timeout: falling through would read a partially-merged state table.
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("streaming_foreachbatch_upsert: drain exceeded 300 s")
+    # than the single-batch queries' 120 s budget.
+    drain(
+        _read_events_stream(spark, inbox, max_files_per_trigger)
+        .writeStream.foreachBatch(merge),
+        ckpt, 300, "streaming_foreachbatch_upsert",
+    )
     return spark.read.parquet(state).select(
         "user_id",
         F.col("ts").cast("string").alias("last_ts"),
@@ -749,16 +714,11 @@ def _bucketed_upsert_drain(
         # measurement reads this.
         LAST_BUCKETED_UPSERT["rows_written"].append(int(sum(exp.values())))
 
-    source = _read_events_stream(spark, inbox, max_files_per_trigger)
-    q = (
-        source.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        _read_events_stream(spark, inbox, max_files_per_trigger)
+        .writeStream.foreachBatch(merge),
+        ckpt, 300, "streaming_upsert_bucketed_state",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("streaming_upsert_bucketed_state: drain exceeded 300 s")
 
 
 @register(
@@ -799,7 +759,7 @@ def _bucketed_upsert_drain(
 def streaming_upsert_bucketed_state(
     spark: SparkSession, sf_dir: str, n_buckets: int = 8
 ) -> DataFrame:
-    base = _tmp_base("hive_spark_bupsert_")
+    base = scratch_dir("bupsert")
     state, ckpt = os.path.join(base, "state"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, sf_dir)
     _bucketed_upsert_drain(
@@ -841,24 +801,19 @@ def streaming_upsert_bucketed_state(
     tags=("streaming", "join", "ingest"),
 )
 def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp_base("hive_spark_senrich_")
+    base = scratch_dir("senrich")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     enriched = _read_events_stream(spark, inbox).join(
         F.broadcast(dim), F.col("user_id") == F.col("c_custkey")
     )
-    q = (
+    drain(
         enriched.select("user_id", "value", "c_mktsegment")
         .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", sink),
+        ckpt, 120, "streaming_static_enrich",
     )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise RuntimeError("streaming_static_enrich: drain exceeded 120 s")
     return (
         spark.read.parquet(sink)
         .groupBy("c_mktsegment")
@@ -898,7 +853,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "watermark"),
 )
 def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp_base("hive_spark_ssjoin_")
+    base = scratch_dir("ssjoin")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, sf_dir)
     clicks = (
@@ -926,17 +881,12 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") > F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOURS")),
     )
-    q = (
+    drain(
         joined.select("c_user", "p_event")
         .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", sink),
+        ckpt, 180, "streaming_stream_join",
     )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise RuntimeError("streaming_stream_join: drain exceeded 180 s")
     return spark.read.parquet(sink).agg(
         F.count(F.lit(1)).alias("n_attributed"),
         F.countDistinct("p_event").alias("n_purchases"),
@@ -968,21 +918,16 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "ingest", "partition"),
 )
 def streaming_partitioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp_base("hive_spark_pingst_")
+    base = scratch_dir("pingst")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, sf_dir)
-    q = (
+    drain(
         _read_events_stream(spark, inbox)
         .writeStream.format("parquet")
         .partitionBy("event_type")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", sink),
+        ckpt, 120, "streaming_partitioned_ingest",
     )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise RuntimeError("streaming_partitioned_ingest: drain exceeded 120 s")
     part_dirs = {d for d in os.listdir(sink) if d.startswith("event_type=")}
     if not {"event_type=click", "event_type=purchase"} <= part_dirs:
         raise RuntimeError(
@@ -1050,7 +995,7 @@ def streaming_partitioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "session", "watermark"),
 )
 def streaming_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp_base("hive_spark_sdyn_")
+    base = scratch_dir("sdyn")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, sf_dir)
     gap = F.when(F.col("event_type") == "purchase", "30 minutes").otherwise(
@@ -1067,15 +1012,10 @@ def streaming_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame
             "n_ev",
         )
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.format("parquet").outputMode("append").option("path", sink),
+        ckpt, 120, "streaming_session_dynamic_gap",
     )
-    q.awaitTermination(120)
     back = spark.read.parquet(sink)
     return back.agg(
         F.count(F.lit(1)).cast("long").alias("n_closed_sessions"),
@@ -1160,7 +1100,7 @@ def file_source_ledger_retention_confs(
 def streaming_acid_delta_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apache_hive_1_2_2_src_spark.operators.acid import read_acid_table
 
-    base = _tmp_base("hive_spark_stream_acid_")
+    base = scratch_dir("stream_acid")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
     _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
@@ -1184,19 +1124,11 @@ def streaming_acid_delta_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{table}/delta_{batch_id + 1}_{batch_id + 1}")
         )
 
-    q = (
+    drain(
         _read_events_stream(spark, inbox, max_files_per_trigger=8)
-        .writeStream.foreachBatch(write_delta)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(write_delta),
+        ckpt, 180, "acid delta ingest",
     )
-    if not q.awaitTermination(180):
-        # falling through would list/merge the delta tree while foreachBatch
-        # is still writing dirs into it (module convention — see the other
-        # streaming queries)
-        q.stop()
-        raise TimeoutError("acid delta ingest drain did not finish in 180s")
     merged = read_acid_table(spark, table)
     return merged.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1213,6 +1145,12 @@ LAST_LSH_STORES: dict = {}
 # Last streaming_ivf_index_maintenance run's cell store — the r18 compactor
 # pin reads the REAL post-drain IVF store, not a synthetic one.
 LAST_IVF_STORES: dict = {}
+
+
+def _distinct(df: DataFrame, col: str | Column) -> list:
+    """The distinct values of one column of ``df``, collected: the
+    partition list a pruned store read takes."""
+    return [r[0] for r in df.select(col).distinct().collect()]
 
 
 def compact_partitioned_store(
@@ -1340,295 +1278,113 @@ def _lsh_probe_dedup(
     (say 4096) — the verify then reads |partners| partitions out of 4096
     instead of the whole corpus-sized store. Verdicts are k-invariant
     (pinned store_buckets=1 vs 8 in tests/test_streaming_lsh_dedup.py)."""
-    from apache_hive_1_2_2_src_spark.extensions.dedup import _shingles, _words
+    from apache_hive_1_2_2_src_spark.extensions.dedup import (
+        _shingles,
+        _words,
+        band_candidates,
+        jaccard_prior_verdicts,
+        minhash_band_sigs,
+    )
 
-    K, BANDS, ROWS = 16, 4, 4
     THRESHOLD = 0.7
 
-    base = _tmp_base("hive_spark_slsh_")
+    base = scratch_dir("slsh")
     inbox = os.path.join(base, "inbox")
-    sig_dir = os.path.join(base, "sig_store")
-    sh_dir = os.path.join(base, "sh_store")
-    out_dir = os.path.join(base, "verdicts")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(inbox, exist_ok=True)
+    sig_store = EpochStore(os.path.join(base, "sig_store"), "sb", store_buckets)
+    sh_store = EpochStore(os.path.join(base, "sh_store"), "db", store_buckets)
+    out = EpochStore(os.path.join(base, "verdicts"))
     # exposed for the scale-harness regression gate (tests read the real
     # post-drain stores and assert the probes' bytes-ratio stays pruned)
-    LAST_LSH_STORES["sig"] = sig_dir
-    LAST_LSH_STORES["shingle"] = sh_dir
+    LAST_LSH_STORES["sig"] = sig_store.root
+    LAST_LSH_STORES["shingle"] = sh_store.root
     LAST_LSH_STORES["store_buckets"] = store_buckets
 
-    # Stage the corpus as n_batches "daily drops": contiguous doc_id ranges,
-    # one parquet file per drop, mtimes forced strictly increasing so the
-    # file stream replays them in ingest order (FileStreamSource orders by
-    # modification time; same-ms writes would tie).
+    # Stage the corpus as n_batches "daily drops": contiguous doc_id
+    # ranges, replayed in ingest order. Row order within a drop file is
+    # free; the drain is insensitive to it (verdicts are groupBy/join
+    # products of the set).
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hi = d.agg(F.max("doc_id")).first()[0]
-    step = int(hi) // n_batches + 1
-    # r19: stage all drops in ONE write job (guide §2.4 — the old loop
-    # ran n_batches filtered scans + coalesce(1) writes). partitionBy
-    # splits the drops into drop=<b>/ dirs; repartition on the drop key
-    # first keeps it one file per dir (a hash collision putting two
-    # drops in one task still writes one file per dir). Same contiguous
-    # doc_id ranges, same file schema (doc_id, text — partitionBy strips
-    # the drop column), same forced-mtime replay order; row order within
-    # a drop file may differ from the old scan order, which the drain is
-    # insensitive to (verdicts are groupBy/join products of the set).
-    stage = os.path.join(base, "stage_all")
-    # r20 (ADVICE r19): integer `div` instead of double-divide-and-
-    # truncate — exact for every long (the old form matched the
-    # [b*step,(b+1)*step) ranges only for non-negative doc_ids within
-    # double precision; ids beyond 2^53 lose exactness at boundaries).
-    d.withColumn(
-        "drop", F.expr(f"CAST(doc_id DIV {int(step)} AS INT)")
-    ).repartition(n_batches, "drop").write.mode("overwrite").partitionBy(
-        "drop"
-    ).parquet(stage)
-    for b in range(n_batches):
-        ddir = os.path.join(stage, f"drop={b}")
-        if not os.path.isdir(ddir):
-            # empty doc_id range: dynamic partitioning writes no dir; the
-            # old per-drop loop wrote an empty file — keep that contract
-            # (the stream still replays n_batches drops).
-            d.where(F.lit(False)).coalesce(1).write.mode("overwrite").parquet(
-                ddir
-            )
-        part = next(f for f in os.listdir(ddir) if f.endswith(".parquet"))
-        dest = os.path.join(inbox, f"drop_{b}.parquet")
-        os.rename(os.path.join(ddir, part), dest)
-        os.utime(dest, (1_600_000_000 + 60 * b, 1_600_000_000 + 60 * b))
+    stage_drops(
+        d.withColumn("drop", range_drop("doc_id", hi, n_batches)), n_batches, inbox
+    )
 
     def probe_and_index(batch: DataFrame, epoch_id: int) -> None:
         sp = batch.sparkSession
-        # r20: store-present flags captured at epoch ENTRY, before this
-        # epoch's own appends (which now overlap the probe, below) can
-        # create the dirs.
-        had_sig = os.path.isdir(sig_dir)
-        had_sh = os.path.isdir(sh_dir)
+        # store-present flags captured at epoch ENTRY, before this epoch's
+        # own appends (which overlap the probe, below) can create the dirs.
+        had_sig, had_sh = sig_store.exists(), sh_store.exists()
         # the verdict roster is the raw batch (one-file scan); only the
         # shingle explode needs the spread copy below.
         roster = batch.select("doc_id")
         # r19: each micro-batch arrives as ONE file (one scan partition),
         # so the shingle explode + 16-hash minhash otherwise runs as a
         # single serial task per epoch — spread the batch across cores
-        # first (guide §2.5 input-parallelism fix; one tiny extra shuffle
-        # of |batch| doc rows; all downstream results are groupBy/join
-        # products, partitioning-invariant).
+        # first (one tiny extra shuffle of |batch| doc rows; all downstream
+        # results are groupBy/join products, partitioning-invariant).
         batch = batch.repartition(sp.sparkContext.defaultParallelism)
         sh_b = batch.select(
             "doc_id", F.explode(_shingles(_words())).alias("sh")
         ).persist()
-        minh = sh_b.groupBy("doc_id").agg(
-            *[
-                F.min(F.xxhash64(F.col("sh"), F.lit(i))).alias(f"h{i}")
-                for i in range(K)
-            ]
-        )
-        band_sigs = F.array(
-            *[
-                F.struct(
-                    F.lit(bb).alias("band"),
-                    F.concat_ws(
-                        ":", *[F.col(f"h{bb * ROWS + r}") for r in range(ROWS)]
-                    ).alias("sig"),
-                )
-                for bb in range(BANDS)
-            ]
-        )
         buckets_b = (
-            minh.select("doc_id", F.explode(band_sigs).alias("bs"))
-            .select(
-                "doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-            )
+            minhash_band_sigs(sh_b, "doc_id")
             .withColumn("sb", F.pmod(F.xxhash64(F.col("sig")), F.lit(store_buckets)))
             .persist()
         )
         # Signature-store probe, PRUNED: equal sig => equal sb, so only the
         # store partitions holding the batch's own signature buckets can
-        # contain a candidate — the read lists no other sb= dirs. (r19:
-        # the distinct+collect job is skipped outright when no store
-        # exists yet — epoch 0 paid it for nothing.)
-        needed_sb = (
-            [r.sb for r in buckets_b.select("sb").distinct().collect()]
-            if had_sig
-            else []
-        )
-        # r20: the two store appends start HERE — overlapping the probe,
-        # verify, and verdicts work instead of running after it (guide
-        # §2.6). This is safe because every store read below carries an
-        # `epoch < epoch_id` partition filter, so a concurrently landing
-        # epoch=<this> append is invisible to this epoch's own reads
-        # (which also makes a foreachBatch RETRY of epoch N exact: the
-        # previous attempt's own epoch=N contribution is filtered out
-        # rather than double-counted as 'prior' state). The needed_sb
-        # collect above has already materialized sh_b/buckets_b, so the
-        # append jobs write cached frames; both must still COMPLETE
-        # before the epoch returns (exactly-once: the offset commit may
-        # only cover fully-landed state).
-        from concurrent.futures import ThreadPoolExecutor
-        from concurrent.futures import wait as futwait
-
-        def _append_sig() -> None:
-            buckets_b.repartition(store_buckets, "sb").write.partitionBy(
-                "sb"
-            ).mode("overwrite").parquet(
-                os.path.join(sig_dir, f"epoch={epoch_id}")
-            )
-
-        def _append_sh() -> None:
-            sh_b.withColumn(
-                "db", F.pmod(F.col("doc_id"), F.lit(store_buckets))
-            ).repartition(store_buckets, "db").write.partitionBy("db").mode(
-                "overwrite"
-            ).parquet(os.path.join(sh_dir, f"epoch={epoch_id}"))
-
-        pool = ThreadPoolExecutor(max_workers=2)
-        appends = [pool.submit(_append_sig), pool.submit(_append_sh)]
-        cand = None
-        try:
-            if had_sig and needed_sb:
-                prior_sig = (
-                    sp.read.parquet(sig_dir)
-                    .where(F.col("sb").isin(needed_sb))
-                    .where(F.col("epoch") < F.lit(epoch_id))
-                    .select("doc_id", "band", "sig")
-                )
-            else:
-                prior_sig = sp.createDataFrame(
-                    [], "doc_id bigint, band int, sig string"
-                )
-            all_sig = prior_sig.unionByName(
-                buckets_b.select("doc_id", "band", "sig")
+        # contain a candidate. No store yet: the collect job is skipped.
+        needed_sb = _distinct(buckets_b, "sb") if had_sig else []
+        # r20: the two store appends overlap the probe, verify and
+        # verdicts work (every store read is `epoch < epoch_id`). The
+        # needed_sb collect above has already materialized sh_b/buckets_b,
+        # so the appends write cached frames.
+        with append_async(
+            epoch_id,
+            (sig_store, buckets_b),
+            (
+                sh_store,
+                sh_b.withColumn("db", F.pmod(F.col("doc_id"), F.lit(store_buckets))),
+            ),
+        ):
+            prior_sig = sig_store.prior(
+                sp, epoch_id, "doc_id bigint, band int, sig string", needed_sb
             )
             # Probe: batch docs vs (index ∪ batch), partner strictly
             # earlier (smaller doc_id == earlier drop or earlier within
             # this drop).
-            cand = (
-                buckets_b.alias("nb")
-                .join(
-                    all_sig.alias("ob"),
-                    (F.col("nb.band") == F.col("ob.band"))
-                    & (F.col("nb.sig") == F.col("ob.sig"))
-                    & (F.col("ob.doc_id") < F.col("nb.doc_id")),
-                )
-                .select(
-                    F.col("nb.doc_id").alias("new_id"),
-                    F.col("ob.doc_id").alias("old_id"),
-                )
-                .distinct()
-                .persist()
-            )
-            # Shingle-store verify read, PRUNED to the candidate
-            # partners' doc partitions — the big win: the shingle store
-            # is corpus-sized, but near-dup partners are few, so this
-            # reads |partner dbs| of the k db= dirs instead of the whole
-            # store. Batch docs' shingles come from sh_b (not yet in the
-            # store).
+            all_sig = prior_sig.unionByName(buckets_b.select("doc_id", "band", "sig"))
+            cand = band_candidates(buckets_b, all_sig).persist()
+            # Shingle-store verify read, PRUNED to the candidate partners'
+            # doc partitions — the big win: the shingle store is
+            # corpus-sized, but near-dup partners are few. Batch docs'
+            # shingles come from sh_b (not yet in the store).
             partner_dbs = (
-                [
-                    r.db
-                    for r in cand.select(
-                        F.pmod(F.col("old_id"), F.lit(store_buckets)).alias(
-                            "db"
-                        )
-                    )
-                    .distinct()
-                    .collect()
-                ]
+                _distinct(cand, F.pmod(F.col("old_id"), F.lit(store_buckets)))
                 if had_sh
                 else []
             )
-            if had_sh and partner_dbs:
-                prior_sh = (
-                    sp.read.parquet(sh_dir)
-                    .where(F.col("db").isin(partner_dbs))
-                    .where(F.col("epoch") < F.lit(epoch_id))
-                    .select("doc_id", "sh")
-                )
-            else:
-                prior_sh = sp.createDataFrame([], "doc_id bigint, sh string")
-            all_sh = prior_sh.unionByName(sh_b)
-            # r20: the new_id side of the verify join and its norm only
-            # ever touch BATCH docs (new_id comes from buckets_b), and
-            # doc_ids are unique across drops, so sh_b alone serves that
-            # side — the pruned store scan no longer flows into the sa
-            # join or na norm (at scale: one side of the verify drops
-            # from store-sized to batch-sized).
-            n_sh = all_sh.groupBy("doc_id").agg(
-                F.count(F.lit(1)).alias("n_sh")
+            all_sh = sh_store.prior(
+                sp, epoch_id, "doc_id bigint, sh string", partner_dbs
+            ).unionByName(sh_b)
+            # r20: the new_id side of the verify only ever touches BATCH
+            # docs and doc_ids do not recur across drops, so sh_b alone
+            # serves that side (at scale: batch-sized, not store-sized).
+            out.append(
+                epoch_id,
+                jaccard_prior_verdicts(roster, cand, sh_b, all_sh, THRESHOLD),
             )
-            n_sh_b = sh_b.groupBy("doc_id").agg(
-                F.count(F.lit(1)).alias("n_sh")
-            )
-            common = (
-                cand.join(
-                    sh_b.alias("sa"), F.col("new_id") == F.col("sa.doc_id")
-                )
-                .join(
-                    all_sh.alias("sb"),
-                    (F.col("old_id") == F.col("sb.doc_id"))
-                    & (F.col("sa.sh") == F.col("sb.sh")),
-                )
-                .groupBy("new_id", "old_id")
-                .agg(F.count(F.lit(1)).alias("n_common"))
-            )
-            jac = F.col("n_common") / (
-                F.col("na.n_sh") + F.col("nb.n_sh") - F.col("n_common")
-            )
-            dups = (
-                common.join(
-                    n_sh_b.alias("na"), F.col("new_id") == F.col("na.doc_id")
-                )
-                .join(n_sh.alias("nb"), F.col("old_id") == F.col("nb.doc_id"))
-                .filter(jac >= THRESHOLD)
-                .groupBy("new_id")
-                .agg(F.count(F.lit(1)).alias("n_dup_prior"))
-                .withColumnRenamed("new_id", "doc_id")
-            )
-            verdicts = roster.join(dups, "doc_id", "left").select(
-                "doc_id",
-                F.coalesce("n_dup_prior", F.lit(0))
-                .cast("long")
-                .alias("n_dup_prior"),
-                F.when(F.coalesce("n_dup_prior", F.lit(0)) > 0, "drop")
-                .otherwise("keep")
-                .alias("verdict"),
-            )
-            # epoch-keyed overwrite: a foreachBatch retry with the same
-            # batch_id REPLACES its own output and index contribution
-            # instead of double-appending — the exactly-once recipe the
-            # ACID delta query uses (partition-discovery dirs double as
-            # the idempotence key).
-            verdicts.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"epoch={epoch_id}")
-            )
-        finally:
-            # wait in ALL paths: the epoch may only return (and the
-            # offset commit may only cover) fully-landed state, and a
-            # failed epoch's restart must never race a still-in-flight
-            # append thread from this attempt.
-            futwait(appends)
-            pool.shutdown()
-        for f_ in appends:
-            f_.result()
-        sh_b.unpersist()
-        buckets_b.unpersist()
-        if cand is not None:
-            cand.unpersist()
+        for frame in (sh_b, buckets_b, cand):
+            frame.unpersist()
 
-    q = (
+    drain(
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(inbox)
-        .writeStream.foreachBatch(probe_and_index)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(probe_and_index),
+        os.path.join(base, "ckpt"), 300, "LSH dedup",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("LSH dedup drain did not finish in 300s")
-    return spark.read.parquet(out_dir).select("doc_id", "n_dup_prior", "verdict")
+    return spark.read.parquet(out.root).select("doc_id", "n_dup_prior", "verdict")
 
 
 # Exact-Jaccard prior-dup-count oracle — defined in extensions.dedup (the
@@ -1695,6 +1451,11 @@ def streaming_dedup_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("streaming", "dedup", "lsh", "compaction", "incremental"),
 )
 def streaming_dedup_compact_store(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from apache_hive_1_2_2_src_spark.extensions.dedup import (
+        band_candidates,
+        jaccard_prior_verdicts,
+    )
+
     THRESHOLD = 0.7
     _lsh_probe_dedup(spark, sf_dir, n_batches=3).count()
     sig_dir = LAST_LSH_STORES["sig"]
@@ -1703,7 +1464,7 @@ def streaming_dedup_compact_store(spark: SparkSession, sf_dir: str) -> DataFrame
 
     # r20: the two store compactions are independent (different dirs,
     # each internally read→side-write→validate→swap) — overlap them
-    # (guide §2.6) instead of compacting serially.
+    # instead of compacting serially.
     def _compact(store: str, part_col: str) -> None:
         before, after = compact_partitioned_store(spark, store, part_col)
         if after > k or after >= before:
@@ -1712,64 +1473,13 @@ def streaming_dedup_compact_store(spark: SparkSession, sf_dir: str) -> DataFrame
                 f"files (buckets={k})"
             )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as cpool:
-        for f_ in [
-            cpool.submit(_compact, sig_dir, "sb"),
-            cpool.submit(_compact, sh_dir, "db"),
-        ]:
-            f_.result()
+    concurrently(lambda: _compact(sig_dir, "sb"), lambda: _compact(sh_dir, "db"))
 
     sig = spark.read.parquet(sig_dir).select("doc_id", "band", "sig")
     sh = spark.read.parquet(sh_dir).select("doc_id", "sh")
-    cand = (
-        sig.alias("nb")
-        .join(
-            sig.alias("ob"),
-            (F.col("nb.band") == F.col("ob.band"))
-            & (F.col("nb.sig") == F.col("ob.sig"))
-            & (F.col("ob.doc_id") < F.col("nb.doc_id")),
-        )
-        .select(
-            F.col("nb.doc_id").alias("new_id"),
-            F.col("ob.doc_id").alias("old_id"),
-        )
-        .distinct()
-    )
-    n_sh = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    common = (
-        cand.join(sh.alias("sa"), F.col("new_id") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("old_id") == F.col("sb.doc_id"))
-            & (F.col("sa.sh") == F.col("sb.sh")),
-        )
-        .groupBy("new_id", "old_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common") / (
-        F.col("na.n_sh") + F.col("nb.n_sh") - F.col("n_common")
-    )
-    dups = (
-        common.join(n_sh.alias("na"), F.col("new_id") == F.col("na.doc_id"))
-        .join(n_sh.alias("nb"), F.col("old_id") == F.col("nb.doc_id"))
-        .filter(jac >= THRESHOLD)
-        .groupBy("new_id")
-        .agg(F.count(F.lit(1)).alias("n_dup_prior"))
-        .withColumnRenamed("new_id", "doc_id")
-    )
-    return (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .join(dups, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_dup_prior", F.lit(0)).cast("long").alias("n_dup_prior"),
-            F.when(F.coalesce("n_dup_prior", F.lit(0)) > 0, "drop")
-            .otherwise("keep")
-            .alias("verdict"),
-        )
+    roster = load_table(spark, sf_dir, "documents").select("doc_id")
+    return jaccard_prior_verdicts(
+        roster, band_candidates(sig, sig), sh, sh, THRESHOLD
     )
 
 
@@ -1811,56 +1521,31 @@ def _collapsed_probe_dedup(
     Verdicts equal streaming_dedup_lsh_incremental's row for row (same
     exact-Jaccard oracle; both driver-certified), batch-count-invariant
     like every probe here."""
-    from apache_hive_1_2_2_src_spark.extensions.dedup import _shingles, _words
+    from apache_hive_1_2_2_src_spark.extensions.dedup import (
+        _shingles,
+        _words,
+        minhash_band_sigs,
+    )
 
-    K, BANDS, ROWS = 16, 4, 4
     THRESHOLD = 0.7
 
-    base = _tmp_base("hive_spark_cslsh_")
+    base = scratch_dir("cslsh")
     inbox = os.path.join(base, "inbox")
-    sig_dir = os.path.join(base, "sig_store")
-    sh_dir = os.path.join(base, "sh_store")
-    led_dir = os.path.join(base, "member_ledger")
-    out_dir = os.path.join(base, "verdicts")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(inbox, exist_ok=True)
-    LAST_COLLAPSED_STORES["sig"] = sig_dir
-    LAST_COLLAPSED_STORES["shingle"] = sh_dir
-    LAST_COLLAPSED_STORES["ledger"] = led_dir
+    sig_store = EpochStore(os.path.join(base, "sig_store"), "sb", store_buckets)
+    sh_store = EpochStore(os.path.join(base, "sh_store"), "gb", store_buckets)
+    led_store = EpochStore(os.path.join(base, "member_ledger"), "lb", store_buckets)
+    out = EpochStore(os.path.join(base, "verdicts"))
+    LAST_COLLAPSED_STORES["sig"] = sig_store.root
+    LAST_COLLAPSED_STORES["shingle"] = sh_store.root
+    LAST_COLLAPSED_STORES["ledger"] = led_store.root
     LAST_COLLAPSED_STORES["store_buckets"] = store_buckets
 
+    # the same contiguous doc_id drops as _lsh_probe_dedup
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hi = d.agg(F.max("doc_id")).first()[0]
-    step = int(hi) // n_batches + 1
-    # r19: stage all drops in ONE write job (guide §2.4 — the old loop
-    # ran n_batches filtered scans + coalesce(1) writes). partitionBy
-    # splits the drops into drop=<b>/ dirs; repartition on the drop key
-    # first keeps it one file per dir (a hash collision putting two
-    # drops in one task still writes one file per dir). Same contiguous
-    # doc_id ranges, same file schema (doc_id, text — partitionBy strips
-    # the drop column), same forced-mtime replay order; row order within
-    # a drop file may differ from the old scan order, which the drain is
-    # insensitive to (verdicts are groupBy/join products of the set).
-    stage = os.path.join(base, "stage_all")
-    # r20 (ADVICE r19): exact integer `div` — see _lsh_probe_dedup.
-    d.withColumn(
-        "drop", F.expr(f"CAST(doc_id DIV {int(step)} AS INT)")
-    ).repartition(n_batches, "drop").write.mode("overwrite").partitionBy(
-        "drop"
-    ).parquet(stage)
-    for b in range(n_batches):
-        ddir = os.path.join(stage, f"drop={b}")
-        if not os.path.isdir(ddir):
-            # empty doc_id range: dynamic partitioning writes no dir; the
-            # old per-drop loop wrote an empty file — keep that contract
-            # (the stream still replays n_batches drops).
-            d.where(F.lit(False)).coalesce(1).write.mode("overwrite").parquet(
-                ddir
-            )
-        part = next(f for f in os.listdir(ddir) if f.endswith(".parquet"))
-        dest = os.path.join(inbox, f"drop_{b}.parquet")
-        os.rename(os.path.join(ddir, part), dest)
-        os.utime(dest, (1_600_000_000 + 60 * b, 1_600_000_000 + 60 * b))
+    stage_drops(
+        d.withColumn("drop", range_drop("doc_id", hi, n_batches)), n_batches, inbox
+    )
 
     gbucket = lambda c: F.pmod(F.xxhash64(F.col(c)), F.lit(store_buckets))  # noqa: E731
 
@@ -1868,12 +1553,11 @@ def _collapsed_probe_dedup(
         if batch.isEmpty():
             return
         sp = batch.sparkSession
-        # r20: store-present flags captured at epoch ENTRY — this
-        # epoch's own appends overlap the probe below (guide §2.6) and
-        # may create the dirs mid-epoch.
-        had_sig = os.path.isdir(sig_dir)
-        had_sh = os.path.isdir(sh_dir)
-        had_led = os.path.isdir(led_dir)
+        # store-present flags captured at epoch ENTRY — this epoch's own
+        # appends overlap the probe below and may create the dirs mid-epoch.
+        had_sig, had_sh, had_led = (
+            sig_store.exists(), sh_store.exists(), led_store.exists()
+        )
         g = batch.select("doc_id", "text", F.md5("text").alias("gkey"))
         members_b = g.select("gkey", "doc_id").persist()
         reps_b = (
@@ -1883,35 +1567,15 @@ def _collapsed_probe_dedup(
         )
         # r19: spread the representatives before shingling — AQE
         # coalesces the gkey groupBy to ~1 partition, serializing the
-        # shingle explode (guide §2.5; results partitioning-invariant).
+        # shingle explode (results partitioning-invariant).
         sh_b = reps_b.repartition(
             sp.sparkContext.defaultParallelism
         ).select(
             "gkey", F.explode(_shingles(_words())).alias("sh")
         ).persist()
         n_sh_b = sh_b.groupBy("gkey").agg(F.count(F.lit(1)).alias("n_sh"))
-        minh = sh_b.groupBy("gkey").agg(
-            *[
-                F.min(F.xxhash64(F.col("sh"), F.lit(i))).alias(f"h{i}")
-                for i in range(K)
-            ]
-        )
-        band_sigs = F.array(
-            *[
-                F.struct(
-                    F.lit(bb).alias("band"),
-                    F.concat_ws(
-                        ":", *[F.col(f"h{bb * ROWS + r}") for r in range(ROWS)]
-                    ).alias("sig"),
-                )
-                for bb in range(BANDS)
-            ]
-        )
         buckets_b = (
-            minh.select("gkey", F.explode(band_sigs).alias("bs"))
-            .select(
-                "gkey", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-            )
+            minhash_band_sigs(sh_b, "gkey")
             .withColumn("sb", F.pmod(F.xxhash64(F.col("sig")), F.lit(store_buckets)))
             .persist()
         )
@@ -1919,114 +1583,36 @@ def _collapsed_probe_dedup(
 
         # r20: the two prune collects that depend only on the BATCH
         # (signature buckets for the probe, ledger buckets for the
-        # new-gkey anti-join) are independent — run them concurrently
-        # (guide §2.6).
-        from concurrent.futures import ThreadPoolExecutor
-        from concurrent.futures import wait as futwait
+        # new-gkey anti-join) are independent — run them concurrently.
+        needed_sb, batch_lb = concurrently(
+            (lambda: _distinct(buckets_b, "sb")) if had_sig else list,
+            (lambda: _distinct(members_b, gbucket("gkey"))) if had_led else list,
+        )
+        # Content already in the stores appends ledger rows only: the
+        # anti-join keeps group-level state unique under re-ingestion.
+        new_gkeys = batch_gkeys.join(
+            led_store.prior(sp, epoch_id, "gkey string", batch_lb).distinct(),
+            "gkey",
+            "left_anti",
+        ).persist()
 
-        needed_sb: list = []
-        batch_lb: list = []
-        if had_sig or had_led:
-            with ThreadPoolExecutor(max_workers=2) as cpool:
-                f_sb = (
-                    cpool.submit(
-                        lambda: [
-                            r.sb
-                            for r in buckets_b.select("sb")
-                            .distinct()
-                            .collect()
-                        ]
-                    )
-                    if had_sig
-                    else None
-                )
-                f_lb = (
-                    cpool.submit(
-                        lambda: [
-                            r.b
-                            for r in members_b.select(
-                                gbucket("gkey").alias("b")
-                            )
-                            .distinct()
-                            .collect()
-                        ]
-                    )
-                    if had_led
-                    else None
-                )
-                if f_sb is not None:
-                    needed_sb = f_sb.result()
-                if f_lb is not None:
-                    batch_lb = f_lb.result()
-
-        # ---- appends start HERE, overlapping the probe/verify/expansion
-        # below (guide §2.6): every store read in this epoch carries an
-        # `epoch < epoch_id` partition filter, so a concurrently landing
-        # epoch=<this> append (including the LEDGER append the new_gkeys
-        # anti-join reads around) is invisible to this epoch's own reads
-        # — which also makes a foreachBatch RETRY exact: a previous
-        # attempt's own epoch=N contribution is filtered out instead of
-        # being double-counted as 'prior' state. All three must COMPLETE
-        # before the epoch returns (exactly-once: the offset commit may
-        # only cover fully-landed state).
-        if had_led and batch_lb:
-            existing = (
-                sp.read.parquet(led_dir)
-                .where(F.col("lb").isin(batch_lb))
-                .where(F.col("epoch") < F.lit(epoch_id))
-                .select("gkey")
-                .distinct()
-            )
-            new_gkeys = batch_gkeys.join(existing, "gkey", "left_anti")
-        else:
-            new_gkeys = batch_gkeys
-        new_gkeys = new_gkeys.persist()
-
-        def _append_sig() -> None:
-            buckets_b.join(new_gkeys, "gkey").repartition(
-                store_buckets, "sb"
-            ).write.partitionBy("sb").mode("overwrite").parquet(
-                os.path.join(sig_dir, f"epoch={epoch_id}")
-            )
-
-        def _append_sh() -> None:
-            sh_b.join(new_gkeys, "gkey").withColumn(
-                "gb", gbucket("gkey")
-            ).repartition(store_buckets, "gb").write.partitionBy("gb").mode(
-                "overwrite"
-            ).parquet(os.path.join(sh_dir, f"epoch={epoch_id}"))
-
-        def _append_led() -> None:
-            members_b.withColumn("lb", gbucket("gkey")).repartition(
-                store_buckets, "lb"
-            ).write.partitionBy("lb").mode("overwrite").parquet(
-                os.path.join(led_dir, f"epoch={epoch_id}")
-            )
-
-        pool = ThreadPoolExecutor(max_workers=3)
-        appends = [
-            pool.submit(_append_sig),
-            pool.submit(_append_sh),
-            pool.submit(_append_led),
-        ]
-        gp = None
-        partners = None
-        try:
+        # ---- the appends overlap the probe/verify/expansion below; every
+        # store read in this epoch is `epoch < epoch_id`, so the
+        # concurrently landing epoch=<this> rows (the ledger append the
+        # new_gkeys anti-join reads around included) stay invisible.
+        with append_async(
+            epoch_id,
+            (sig_store, buckets_b.join(new_gkeys, "gkey")),
+            (
+                sh_store,
+                sh_b.join(new_gkeys, "gkey").withColumn("gb", gbucket("gkey")),
+            ),
+            (led_store, members_b.withColumn("lb", gbucket("gkey"))),
+        ):
             # ---- candidate GROUP pairs: batch groups vs (store ∪ batch)
-            if had_sig and needed_sb:
-                prior_sig = (
-                    sp.read.parquet(sig_dir)
-                    .where(F.col("sb").isin(needed_sb))
-                    .where(F.col("epoch") < F.lit(epoch_id))
-                    .select("gkey", "band", "sig")
-                )
-            else:
-                prior_sig = sp.createDataFrame(
-                    [], "gkey string, band int, sig string"
-                )
-            all_sig = prior_sig.unionByName(
-                buckets_b.select("gkey", "band", "sig")
-            )
+            all_sig = sig_store.prior(
+                sp, epoch_id, "gkey string, band int, sig string", needed_sb
+            ).unionByName(buckets_b.select("gkey", "band", "sig"))
             gp = (
                 buckets_b.alias("nb")
                 .join(
@@ -2043,34 +1629,18 @@ def _collapsed_probe_dedup(
             )
 
             # ---- exact-Jaccard verify at the representative level
-            partner_gb = (
-                [
-                    r.b
-                    for r in gp.select(gbucket("gb2").alias("b"))
-                    .distinct()
-                    .collect()
-                ]
-                if had_sh
-                else []
+            partner_gb = _distinct(gp, gbucket("gb2")) if had_sh else []
+            # anti-join drops store rows for gkeys also in this batch
+            # — re-arriving content would otherwise double its shingles
+            all_sh = (
+                sh_store.prior(sp, epoch_id, "gkey string, sh string", partner_gb)
+                .join(batch_gkeys, "gkey", "left_anti")
+                .unionByName(sh_b)
             )
-            if had_sh and partner_gb:
-                # anti-join drops store rows for gkeys also in this batch
-                # — re-arriving content would otherwise double its
-                # shingles
-                prior_sh = (
-                    sp.read.parquet(sh_dir)
-                    .where(F.col("gb").isin(partner_gb))
-                    .where(F.col("epoch") < F.lit(epoch_id))
-                    .select("gkey", "sh")
-                    .join(batch_gkeys, "gkey", "left_anti")
-                )
-            else:
-                prior_sh = sp.createDataFrame([], "gkey string, sh string")
-            all_sh = prior_sh.unionByName(sh_b)
             # r20: the ga side of the verify join and its norm only ever
             # touch BATCH groups (ga comes from buckets_b), and the
-            # anti-join keeps batch gkeys' shingles out of prior_sh, so
-            # sh_b alone serves that side (at scale: one side of the
+            # anti-join keeps batch gkeys' shingles out of the store read,
+            # so sh_b alone serves that side (at scale: one side of the
             # verify drops from store-sized to batch-sized).
             n_sh = all_sh.groupBy("gkey").agg(F.count(F.lit(1)).alias("n_sh"))
             common = (
@@ -2100,28 +1670,10 @@ def _collapsed_probe_dedup(
             partners = verified.unionByName(self_pairs).distinct().persist()
 
             # ---- expansion: windowed queries ∪ events, rows never pairs
-            partner_lb = (
-                [
-                    r.b
-                    for r in partners.select(gbucket("gb2").alias("b"))
-                    .distinct()
-                    .collect()
-                ]
-                if had_led
-                else []
-            )
-            if had_led and partner_lb:
-                prior_members = (
-                    sp.read.parquet(led_dir)
-                    .where(F.col("lb").isin(partner_lb))
-                    .where(F.col("epoch") < F.lit(epoch_id))
-                    .select("gkey", "doc_id")
-                )
-            else:
-                prior_members = sp.createDataFrame(
-                    [], "gkey string, doc_id bigint"
-                )
-            all_members = prior_members.unionByName(members_b)
+            partner_lb = _distinct(partners, gbucket("gb2")) if had_led else []
+            all_members = led_store.prior(
+                sp, epoch_id, "gkey string, doc_id bigint", partner_lb
+            ).unionByName(members_b)
             events = partners.join(
                 all_members.alias("m"), F.col("gb2") == F.col("m.gkey")
             ).select(
@@ -2152,32 +1704,18 @@ def _collapsed_probe_dedup(
                     .alias("verdict"),
                 )
             )
-            verdicts.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"epoch={epoch_id}")
-            )
-        finally:
-            # wait in ALL paths — see _lsh_probe_dedup.
-            futwait(appends)
-            pool.shutdown()
-        for f_ in appends:
-            f_.result()
+            out.append(epoch_id, verdicts)
         for frame in (members_b, sh_b, buckets_b, gp, partners, new_gkeys):
-            if frame is not None:
-                frame.unpersist()
+            frame.unpersist()
 
-    q = (
+    drain(
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(inbox)
-        .writeStream.foreachBatch(probe_and_index)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(probe_and_index),
+        os.path.join(base, "ckpt"), 300, "collapsed LSH dedup",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("collapsed LSH dedup drain did not finish in 300s")
-    return spark.read.parquet(out_dir).select("doc_id", "n_dup_prior", "verdict")
+    return spark.read.parquet(out.root).select("doc_id", "n_dup_prior", "verdict")
 
 
 @register(
@@ -2274,7 +1812,7 @@ def streaming_acid_partitioned_ingest(spark: SparkSession, sf_dir: str) -> DataF
         read_acid_table_partitioned,
     )
 
-    base = _tmp_base("hive_spark_stream_pacid_")
+    base = scratch_dir("stream_pacid")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
     _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
@@ -2293,16 +1831,11 @@ def streaming_acid_partitioned_ingest(spark: SparkSession, sf_dir: str) -> DataF
             table, "et", batch_id,
         )
 
-    q = (
+    drain(
         _read_events_stream(spark, inbox, max_files_per_trigger=8)
-        .writeStream.foreachBatch(write_delta)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(write_delta),
+        ckpt, 180, "partitioned acid ingest",
     )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("partitioned acid ingest drain did not finish in 180s")
     merged = read_acid_table_partitioned(spark, table, "et")
     return merged.groupBy(F.col("et").alias("event_type")).agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -2361,7 +1894,7 @@ def streaming_acid_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     from apache_hive_1_2_2_src_spark.sources.hive_bucketing import write_hive_bucketed
 
     n = 8
-    base = _tmp_base("hive_spark_stream_bacid_")
+    base = scratch_dir("stream_bacid")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
     _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
@@ -2384,16 +1917,11 @@ def streaming_acid_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFram
             kind="long",
         )
 
-    q = (
+    drain(
         _read_events_stream(spark, inbox, max_files_per_trigger=8)
-        .writeStream.foreachBatch(write_delta)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(write_delta),
+        ckpt, 240, "bucketed acid ingest",
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError("bucketed acid ingest drain did not finish in 240s")
     totals = read_acid_table(spark, table).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("k").alias("n_keys"),
@@ -2530,7 +2058,7 @@ def streaming_acid_full_layout_ingest(
     from apache_hive_1_2_2_src_spark.sources.hive_bucketing import hive_bucket_of
 
     n = 8
-    base = _tmp_base("hive_spark_stream_flacid_")
+    base = scratch_dir("stream_flacid")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
     _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
@@ -2551,16 +2079,11 @@ def streaming_acid_full_layout_ingest(
             table, "et", "k", n, batch_id,
         )
 
-    q = (
+    drain(
         _read_events_stream(spark, inbox, max_files_per_trigger=8)
-        .writeStream.foreachBatch(write_delta)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(write_delta),
+        ckpt, 300, "full-layout acid ingest",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("full-layout acid ingest drain did not finish in 300s")
     totals = read_acid_table_partitioned(spark, table, "et").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("k").alias("n_keys"),
@@ -2670,32 +2193,24 @@ def streaming_acid_compact_during_ingest(
     )
 
     n = 8
-    base = _tmp_base("hive_spark_stream_cacid_")
+    base = scratch_dir("stream_cacid")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
     _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
     fs.mkdirs(P(table))
-    # own 4-drop inbox (the _lsh_probe_dedup staging pattern): the shared
-    # memoized inbox is ONE part file, which availableNow drains as a
-    # single micro-batch — this query's whole point is transactions
-    # continuing AFTER the compaction, so it needs real batch boundaries
-    # (event_id ranges, mtime-ordered so FileStreamSource replays them in
-    # ingest order).
+    # own 4-drop inbox: the shared memoized inbox is ONE part file, which
+    # availableNow drains as a single micro-batch — this query's whole
+    # point is transactions continuing AFTER the compaction, so it needs
+    # real batch boundaries (event_id ranges replayed in ingest order).
     inbox = os.path.join(base, "inbox")
-    os.makedirs(inbox, exist_ok=True)
     ev = load_table(spark, sf_dir, "events")
     hi = ev.agg(F.max("event_id")).first()[0]
-    step = int(hi) // 4 + 1
-    staged_all = ev.withColumn("ts_us", F.unix_micros("ts")).drop("ts")
-    for b in range(4):
-        stage = os.path.join(base, f"stage_{b}")
-        staged_all.where(
-            (F.col("event_id") >= b * step) & (F.col("event_id") < (b + 1) * step)
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        dest = os.path.join(inbox, f"drop_{b}.parquet")
-        os.rename(os.path.join(stage, part), dest)
-        os.utime(dest, (1_600_000_000 + 60 * b, 1_600_000_000 + 60 * b))
+    stage_drops(
+        ev.withColumn("ts_us", F.unix_micros("ts"))
+        .drop("ts")
+        .withColumn("drop", range_drop("event_id", hi, 4)),
+        4, inbox,
+    )
     pv = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") == 77)
@@ -2729,18 +2244,13 @@ def streaming_acid_compact_during_ingest(
                 "k", n, f"{pdir}/base_2", kind="long",
             )
 
-    q = (
+    drain(
         # one file per micro-batch so the compactor demonstrably runs
         # BETWEEN transactions with more ingest still to come
         _read_events_stream(spark, inbox, max_files_per_trigger=1)
-        .writeStream.foreachBatch(write_delta)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(write_delta),
+        ckpt, 300, "compact-during-ingest",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("compact-during-ingest drain did not finish in 300s")
     base_dir, _txn, deltas = resolve_acid_state(spark, pdir)
     if base_dir != "base_2":
         raise AssertionError(
@@ -2828,7 +2338,7 @@ def streaming_acid_upsert_delete_ingest(
     )
 
     n = 8
-    base = _tmp_base("hive_spark_stream_udacid_")
+    base = scratch_dir("stream_udacid")
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
     _, fs, P = hadoop_fs(spark, table)
     fs.delete(P(table), True)
@@ -2836,19 +2346,15 @@ def streaming_acid_upsert_delete_ingest(
     ev = load_table(spark, sf_dir, "events")
     staged_all = ev.withColumn("ts_us", F.unix_micros("ts")).drop("ts")
     inbox = os.path.join(base, "inbox")
-    os.makedirs(inbox, exist_ok=True)
     drops = (
         staged_all,  # batch 0: insert everything
         staged_all.where(F.col("event_id") % 7 == 0),  # batch 1: updates
         staged_all.where(F.col("event_id") % 11 == 0),  # batch 2: deletes
     )
-    for b, df in enumerate(drops):
-        stage = os.path.join(base, f"stage_{b}")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        dest = os.path.join(inbox, f"drop_{b}.parquet")
-        os.rename(os.path.join(stage, part), dest)
-        os.utime(dest, (1_600_000_000 + 60 * b, 1_600_000_000 + 60 * b))
+    tagged = [df.withColumn("drop", F.lit(b)) for b, df in enumerate(drops)]
+    stage_drops(
+        tagged[0].unionByName(tagged[1]).unionByName(tagged[2]), 3, inbox
+    )
 
     def write_delta(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -2863,16 +2369,11 @@ def streaming_acid_upsert_delete_ingest(
         )
         write_partitioned_bucketed_delta(rows, table, "et", "k", n, batch_id)
 
-    q = (
+    drain(
         _read_events_stream(spark, inbox, max_files_per_trigger=1)
-        .writeStream.foreachBatch(write_delta)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(write_delta),
+        ckpt, 300, "upsert/delete ingest",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("upsert/delete ingest drain did not finish in 300s")
     # _merge_latest already drops tombstoned keys (OrcRawRecordMerger
     # semantics) — the merged view IS the live set
     live = read_acid_table_partitioned(spark, table, "et")
@@ -2984,12 +2485,10 @@ def streaming_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         kmeans_centroids_quantized,
     )
 
-    base = _tmp_base("hive_spark_sivf_")
+    base = scratch_dir("sivf")
     inbox = os.path.join(base, "inbox")
-    store = os.path.join(base, "cell_store")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(inbox, exist_ok=True)
-    LAST_IVF_STORES["cell"] = store
+    store = EpochStore(os.path.join(base, "cell_store"), "cell", _KMQ_K)
+    LAST_IVF_STORES["cell"] = store.root
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # The quantizer trains ONCE on the initial corpus slice (FAISS's
@@ -3001,16 +2500,7 @@ def streaming_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
 
     # three ordered drops covering the FULL vector set (initial + new)
     hi = e.agg(F.max("vec_id")).first()[0]
-    step = int(hi) // 3 + 1
-    for b in range(3):
-        stage = os.path.join(base, f"stage_{b}")
-        e.where(
-            (F.col("vec_id") >= b * step) & (F.col("vec_id") < (b + 1) * step)
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        dest = os.path.join(inbox, f"drop_{b}.parquet")
-        os.rename(os.path.join(stage, part), dest)
-        os.utime(dest, (1_600_000_000 + 60 * b, 1_600_000_000 + 60 * b))
+    stage_drops(e.withColumn("drop", range_drop("vec_id", hi, 3)), 3, inbox)
 
     # r19: cosine projected before the window (sort comparators
     # re-evaluate raw order expressions per comparison).
@@ -3019,31 +2509,23 @@ def streaming_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     def assign_and_append(batch: DataFrame, epoch_id: int) -> None:
-        assigned = (
+        # one file per cell dir per epoch, epoch-keyed overwrite
+        store.append(
+            epoch_id,
             batch.crossJoin(F.broadcast(cent))
             .withColumn("__acos", _cos(F.col("embedding"), F.col("ce")))
             .withColumn("rnk", F.row_number().over(assign_w))
             .where(F.col("rnk") == 1)
-            .select("vec_id", "embedding", F.col("cid").alias("cell"))
+            .select("vec_id", "embedding", F.col("cid").alias("cell")),
         )
-        # one file per cell dir per epoch; epoch-keyed overwrite = the
-        # exactly-once retry recipe every state store here uses
-        assigned.repartition(_KMQ_K, "cell").write.partitionBy("cell").mode(
-            "overwrite"
-        ).parquet(os.path.join(store, f"epoch={epoch_id}"))
 
-    q = (
+    drain(
         spark.readStream.schema("vec_id bigint, embedding array<float>")
         .option("maxFilesPerTrigger", 1)
         .parquet(inbox)
-        .writeStream.foreachBatch(assign_and_append)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(assign_and_append),
+        os.path.join(base, "ckpt"), 180, "ivf index ingest",
     )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("ivf index ingest drain did not finish in 180s")
 
     # ---- post-drain probe: top-2 cells per query, partition-pruned read
     probes = (
@@ -3059,7 +2541,7 @@ def streaming_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         )
     )
     probed = sorted({r.pcid for r in probes.select("pcid").distinct().collect()})
-    idx = spark.read.parquet(store).where(F.col("cell").isin(probed))
+    idx = spark.read.parquet(store.root).where(F.col("cell").isin(probed))
     # runtime pruning assertion from EXECUTION ground truth
     # (input_file_name; df.inputFiles() ignores filter-based pruning —
     # tools/scale_harness.py's documented pitfall)
@@ -3157,6 +2639,11 @@ def streaming_dedup_phash_incremental(
 # ratio stays pruned
 LAST_PHASH_STORE: dict = {}
 
+# the pHash fingerprint store's columns (partition column pb aside)
+_FP_SCHEMA = (
+    "key bigint, band_idx int, band_val int, b0 int, b1 int, b2 int, b3 int"
+)
+
 
 def _phash_probe_dedup(
     spark: SparkSession, sf_dir: str, n_batches: int, store_k: int = 8
@@ -3175,29 +2662,19 @@ def _phash_probe_dedup(
         stage_phash_payloads,
     )
 
-    STORE_K = store_k
-    base = _tmp_base("hive_spark_sphash_")
+    base = scratch_dir("sphash")
     inbox = os.path.join(base, "inbox")
-    store = os.path.join(base, "fp_store")
-    out_dir = os.path.join(base, "verdicts")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(inbox, exist_ok=True)
+    store = EpochStore(os.path.join(base, "fp_store"), "pb", store_k)
+    out = EpochStore(os.path.join(base, "verdicts"))
 
-    LAST_PHASH_STORE["store"] = store
-    LAST_PHASH_STORE["store_k"] = STORE_K
+    LAST_PHASH_STORE["store"] = store.root
+    LAST_PHASH_STORE["store_k"] = store_k
     pay = spark.read.parquet(stage_phash_payloads(spark, sf_dir))
     # ordered drops by doc range (key = doc_id*10 + vcode, so doc
     # order IS key order: later drops always carry larger keys)
-    step = 200 // n_batches + 1
-    for b in range(n_batches):
-        stage = os.path.join(base, f"stage_{b}")
-        pay.where(
-            (F.col("doc_id") >= b * step) & (F.col("doc_id") < (b + 1) * step)
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        dest = os.path.join(inbox, f"drop_{b}.parquet")
-        os.rename(os.path.join(stage, part), dest)
-        os.utime(dest, (1_600_000_000 + 60 * b, 1_600_000_000 + 60 * b))
+    stage_drops(
+        pay.withColumn("drop", range_drop("doc_id", 200, n_batches)), n_batches, inbox
+    )
 
     def hash_batches(batches):
         for pdf in batches:
@@ -3251,14 +2728,14 @@ def _phash_probe_dedup(
                 "pb",
                 F.pmod(
                     F.xxhash64(F.col("band_idx"), F.col("band_val")),
-                    F.lit(STORE_K),
+                    F.lit(store_k),
                 ),
             )
             .persist()
         )
-        needed_pb = [r.pb for r in bands.select("pb").distinct().collect()]
-        if os.path.isdir(store) and needed_pb:
-            prior = sp.read.parquet(store).where(F.col("pb").isin(needed_pb))
+        needed_pb = _distinct(bands, "pb") if store.exists() else []
+        prior = store.prior(sp, epoch_id, _FP_SCHEMA, needed_pb)
+        if needed_pb:
             # runtime pruning assertion from EXECUTION ground truth
             # (input_file_name; df.inputFiles() ignores filter pruning)
             touched = {
@@ -3275,20 +2752,7 @@ def _phash_probe_dedup(
                 raise AssertionError(
                     f"store probe escaped its band partitions: {bad[:3]}"
                 )
-            prior = prior.select(
-                "key", "band_idx", "band_val", "b0", "b1", "b2", "b3"
-            )
-        else:
-            prior = sp.createDataFrame(
-                [],
-                "key bigint, band_idx int, band_val int, "
-                "b0 int, b1 int, b2 int, b3 int",
-            )
-        allb = prior.unionByName(
-            bands.select(
-                "key", "band_idx", "band_val", "b0", "b1", "b2", "b3"
-            )
-        )
+        allb = prior.unionByName(bands.select(*prior.columns))
         cand = (
             bands.alias("nb")
             .join(
@@ -3331,29 +2795,18 @@ def _phash_probe_dedup(
                 .alias("verdict"),
             )
         )
-        verdicts.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
-        bands.select(
-            "key", "band_idx", "band_val", "b0", "b1", "b2", "b3", "pb"
-        ).repartition(STORE_K, "pb").write.partitionBy("pb").mode(
-            "overwrite"
-        ).parquet(os.path.join(store, f"epoch={epoch_id}"))
+        out.append(epoch_id, verdicts)
+        store.append(epoch_id, bands.select(*prior.columns, "pb"))
         bands.unpersist()
 
-    q = (
+    drain(
         spark.readStream.schema("doc_id bigint, variant string, payload binary")
         .option("maxFilesPerTrigger", 1)
         .parquet(inbox)
-        .writeStream.foreachBatch(probe_and_index)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(probe_and_index),
+        os.path.join(base, "ckpt"), 300, "pHash dedup",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("pHash dedup drain did not finish in 300s")
-    return spark.read.parquet(out_dir).select(
+    return spark.read.parquet(out.root).select(
         "key", "doc_id", "variant", "n_dup_prior", "verdict"
     )
 
@@ -3394,30 +2847,21 @@ def _landmark_probe_contained(
         wav_energy_frames,
     )
 
-    STORE_K = store_k
-    base = _tmp_base("hive_spark_slmk_")
+    base = scratch_dir("slmk")
     inbox = os.path.join(base, "inbox")
-    store = os.path.join(base, "lmk_store")
-    counts = os.path.join(base, "counts")
-    out_dir = os.path.join(base, "verdicts")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(inbox, exist_ok=True)
-    LAST_LMK_STORE["store"] = store
-    LAST_LMK_STORE["store_k"] = STORE_K
+    store = EpochStore(os.path.join(base, "lmk_store"), "pb", store_k)
+    counts = EpochStore(os.path.join(base, "counts"))
+    out = EpochStore(os.path.join(base, "verdicts"))
+    LAST_LMK_STORE["store"] = store.root
+    LAST_LMK_STORE["store_k"] = store_k
 
     pay = spark.read.parquet(
         payloads_path or stage_audio_clip_payloads(spark, sf_dir)
     )
-    step = n_docs // n_batches + 1
-    for b in range(n_batches):
-        stage = os.path.join(base, f"stage_{b}")
-        pay.where(
-            (F.col("doc_id") >= b * step) & (F.col("doc_id") < (b + 1) * step)
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        dest = os.path.join(inbox, f"drop_{b}.parquet")
-        os.rename(os.path.join(stage, part), dest)
-        os.utime(dest, (1_600_000_000 + 60 * b, 1_600_000_000 + 60 * b))
+    stage_drops(
+        pay.withColumn("drop", range_drop("doc_id", n_docs, n_batches)),
+        n_batches, inbox,
+    )
 
     def energy_batches(batches):
         for pdf in batches:
@@ -3472,23 +2916,20 @@ def _landmark_probe_contained(
             )
             .withColumn(
                 "pb",
-                F.pmod(F.xxhash64(F.col("shingle")), F.lit(STORE_K)),
+                F.pmod(F.xxhash64(F.col("shingle")), F.lit(store_k)),
             )
             .persist()
         )
-        needed_pb = [r.pb for r in sh.select("pb").distinct().collect()]
-        if os.path.isdir(store) and needed_pb:
-            # partition-pruned probe: only the batch's own pb buckets.
-            # That the pruning actually holds at the FILE level is gated
-            # post-drain by the bytes-ratio test (assert_prune_ratio over
-            # the real store in tests/test_round15_ops.py) — an in-batch
-            # input_file_name check against pb dirs would be vacuous
-            # here, since the .where() already constrains surviving rows.
-            prior = sp.read.parquet(store).where(
-                F.col("pb").isin(needed_pb)
-            ).select("key", "t", "shingle")
-        else:
-            prior = sp.createDataFrame([], "key bigint, t int, shingle string")
+        # partition-pruned probe: only the batch's own pb buckets. That
+        # the pruning actually holds at the FILE level is gated post-drain
+        # by the bytes-ratio test (assert_prune_ratio over the real store
+        # in tests/test_round15_ops.py) — an in-batch input_file_name
+        # check against pb dirs would be vacuous here, since the .where()
+        # already constrains surviving rows.
+        prior = store.prior(
+            sp, epoch_id, "key bigint, t int, shingle string",
+            _distinct(sh, "pb") if store.exists() else [],
+        )
         # earlier = the store plus same-batch smaller keys: verdicts see
         # exactly the strictly-earlier key set, so arrival order is
         # invisible (the pHash-store device)
@@ -3554,14 +2995,9 @@ def _landmark_probe_contained(
             .groupBy("key")
             .agg(F.count(F.lit(1)).alias("n_sh"))
         )
-        if os.path.isdir(counts):
-            all_counts = (
-                sp.read.parquet(counts)
-                .select("key", "n_sh")
-                .unionByName(batch_counts)
-            )
-        else:
-            all_counts = batch_counts
+        all_counts = counts.prior(
+            sp, epoch_id, "key bigint, n_sh bigint"
+        ).unionByName(batch_counts)
         kept = (
             best.join(tot, ["ka", "kb"])
             .join(
@@ -3587,32 +3023,19 @@ def _landmark_probe_contained(
                 (F.col("n_match") == F.least("nsa", "nsb")).alias("full"),
             )
         )
-        kept.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
-        batch_counts.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(counts, f"epoch={epoch_id}")
-        )
-        sh.select("key", "t", "shingle", "pb").repartition(
-            STORE_K, "pb"
-        ).write.partitionBy("pb").mode("overwrite").parquet(
-            os.path.join(store, f"epoch={epoch_id}")
-        )
+        out.append(epoch_id, kept)
+        counts.append(epoch_id, batch_counts.coalesce(1))
+        store.append(epoch_id, sh.select("key", "t", "shingle", "pb"))
         sh.unpersist()
 
-    q = (
+    drain(
         spark.readStream.schema("doc_id bigint, variant string, payload binary")
         .option("maxFilesPerTrigger", 1)
         .parquet(inbox)
-        .writeStream.foreachBatch(probe_and_index)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(probe_and_index),
+        os.path.join(base, "ckpt"), 300, "landmark containment",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("landmark containment drain did not finish in 300s")
-    return spark.read.parquet(out_dir).select(
+    return spark.read.parquet(out.root).select(
         "ka", "kb", "best_off", "n_match", "relation", "full"
     )
 

@@ -514,11 +514,11 @@ def test_compact_partitioned_store_preserves_content_and_pruning(spark):
     import pyspark.sql.functions as F
 
     from apache_hive_1_2_2_src_spark.streaming.windows import (
-        _tmp_base,
         compact_partitioned_store,
     )
+    from apache_hive_1_2_2_src_spark.tmputil import scratch_dir
 
-    base = _tmp_base("hive_spark_compactst_")
+    base = scratch_dir("compactst")
     store = os.path.join(base, "store")
     # 6 "drops", each appending one file per touched partition dir
     for drop in range(6):

@@ -60,11 +60,11 @@ def test_availablenow_redrain_is_exactly_once(spark):
     from apache_hive_1_2_2_src_spark.streaming.windows import (
         _read_events_stream,
         _stage_events_inbox,
-        _tmp_base,
     )
+    from apache_hive_1_2_2_src_spark.tmputil import scratch_dir
     from tests.conftest import SF_DIR
 
-    base = _tmp_base("hive_spark_e1x_")
+    base = scratch_dir("e1x")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, SF_DIR)
 

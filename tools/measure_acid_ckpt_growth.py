@@ -34,6 +34,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F
 
 from apache_hive_1_2_2_src_spark.session import get_session
+from apache_hive_1_2_2_src_spark.streaming.epoch_store import drain, stage_drops
 
 
 def _dir_stats(d: str) -> tuple[int, int]:
@@ -55,20 +56,17 @@ def run(spark, epochs: int, retain: int | None, tag: str) -> dict:
     inbox = os.path.join(base, "inbox")
     table = os.path.join(base, "table")
     ckpt = os.path.join(base, "ckpt")
-    os.makedirs(inbox)
     os.makedirs(table)
 
-    # one tiny parquet drop per epoch, mtimes strictly increasing
-    for b in range(epochs):
-        stage = os.path.join(base, f"stage_{b}")
-        spark.range(b * 10, b * 10 + 10).select(
-            F.col("id").alias("k"), F.lit("U").alias("op")
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        dest = os.path.join(inbox, f"drop_{b:04d}.parquet")
-        os.rename(os.path.join(stage, part), dest)
-        os.utime(dest, (1_600_000_000 + 60 * b,) * 2)
-        shutil.rmtree(stage, ignore_errors=True)
+    # one tiny parquet drop per epoch (10 keys each), replayed in order
+    stage_drops(
+        spark.range(epochs * 10).select(
+            F.col("id").alias("k"),
+            F.lit("U").alias("op"),
+            F.expr("CAST(id DIV 10 AS INT)").alias("drop"),
+        ),
+        epochs, inbox,
+    )
 
     if retain is not None:
         spark.conf.set("spark.sql.streaming.minBatchesToRetain", str(retain))
@@ -83,18 +81,13 @@ def run(spark, epochs: int, retain: int | None, tag: str) -> dict:
         )
 
     t0 = time.time()
-    q = (
+    drain(
         spark.readStream.schema("k bigint, op string")
         .option("maxFilesPerTrigger", 1)
         .parquet(inbox)
-        .writeStream.foreachBatch(write_delta)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(write_delta),
+        ckpt, 420, "acid checkpoint audit",
     )
-    if not q.awaitTermination(420):
-        q.stop()
-        raise TimeoutError("drain did not finish")
     wall = time.time() - t0
 
     def count(d):

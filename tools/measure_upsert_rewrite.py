@@ -31,6 +31,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F
 
 from apache_hive_1_2_2_src_spark.session import get_session
+from apache_hive_1_2_2_src_spark.streaming.epoch_store import drain, stage_drops
 
 
 def main() -> None:
@@ -44,36 +45,29 @@ def main() -> None:
     base = "/tmp/upsert_rewrite_audit"
     shutil.rmtree(base, ignore_errors=True)
     inbox = os.path.join(base, "inbox")
-    os.makedirs(inbox)
-
-    def stage(drop: int, df) -> None:
-        staged = (
-            df.withColumn("ts_us", F.lit(1_600_000_000_000_000 + drop * 60))
-            .withColumn("props", F.lit(None).cast("string"))
-        )
-        stage_dir = os.path.join(base, "stage")
-        staged.coalesce(1).write.mode("overwrite").parquet(stage_dir)
-        part = next(
-            f for f in os.listdir(stage_dir) if f.endswith(".parquet")
-        )
-        dest = os.path.join(inbox, f"drop_{drop:04d}.parquet")
-        os.rename(os.path.join(stage_dir, part), dest)
-        os.utime(dest, (1_600_000_000 + 60 * drop,) * 2)
 
     # epoch 0 seeds every user; epochs 1..E update u users each
-    stage(0, spark.range(U).select(
+    feed = spark.range(U).select(
         F.col("id").alias("event_id"),
         F.col("id").alias("user_id"),
         F.lit("seed").alias("event_type"),
         F.col("id").cast("double").alias("value"),
-    ))
+        F.lit(0).alias("drop"),
+    )
     for e in range(1, E + 1):
-        stage(e, spark.range(u).select(
+        feed = feed.unionByName(spark.range(u).select(
             (F.lit(1_000_000 + e * 1000) + F.col("id")).alias("event_id"),
             (F.col("id") * 97 + F.lit(e)).alias("user_id"),
             F.lit("update").alias("event_type"),
             (F.col("id") + F.lit(e)).cast("double").alias("value"),
+            F.lit(e).alias("drop"),
         ))
+    stage_drops(
+        feed.withColumn(
+            "ts_us", F.lit(1_600_000_000_000_000) + F.col("drop") * 60
+        ).withColumn("props", F.lit(None).cast("string")),
+        E + 1, inbox,
+    )
 
     # ---- flat drain (the registered shape, inline, with a row counter)
     state_f = os.path.join(base, "state_flat")
@@ -103,14 +97,11 @@ def main() -> None:
         sw.commit_state_generation(sess, state_f, latest(cur), n_users)
 
     t0 = time.time()
-    q = (
+    drain(
         sw._read_events_stream(spark, inbox, max_files_per_trigger=1)
-        .writeStream.foreachBatch(merge_flat)
-        .option("checkpointLocation", os.path.join(base, "ckpt_flat"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(merge_flat),
+        os.path.join(base, "ckpt_flat"), 420, "flat upsert",
     )
-    assert q.awaitTermination(420)
     flat_wall = time.time() - t0
 
     # ---- bucketed drain
