@@ -6,14 +6,13 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from apache_hive_1_2_2_src_spark.registry import load_all
 from apache_hive_1_2_2_src_spark.session import get_session
-from apache_hive_1_2_2_src_spark.tables import TABLES
+from tools.check import oracle_connection
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -30,7 +29,4 @@ def registry():
 
 @pytest.fixture(scope="session")
 def oracle_con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
-    return con
+    return oracle_connection(SF_DIR)

@@ -23,6 +23,11 @@ sys.path.insert(0, ".")
 from apache_hive_1_2_2_src_spark.registry import load_all
 from apache_hive_1_2_2_src_spark.session import get_session
 from apache_hive_1_2_2_src_spark.tables import TABLES
+from apache_hive_1_2_2_src_spark.tmputil import scratch_dir
+
+# DuckDB's default limit is 80% of RAM; beside a Spark driver that is an
+# OOM kill, so the oracle spills past this bound into its own scratch dir.
+ORACLE_MEMORY_LIMIT = "2GiB"
 
 
 def norm_cell(v):
@@ -46,15 +51,23 @@ def norm_rows(cols, rows):
     return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """The DuckDB oracle: one view per table over ``sf_dir``'s parquet files,
+    memory bounded, spilling under this process's scratch dir (never into
+    ``.tmp/`` of the working directory)."""
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{ORACLE_MEMORY_LIMIT}'")
+    con.execute(f"SET temp_directory = '{scratch_dir('duckdb')}'")
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = sys.argv[2:]
     spark = get_session()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
 
     reg = load_all()
     names = [n for n in sorted(reg) if not name_filter or any(f in n for f in name_filter)]

@@ -24,14 +24,13 @@ import math
 import sys
 import time
 
-import duckdb
 import numpy as np
 import pandas as pd
 
 sys.path.insert(0, ".")
 
 from apache_hive_1_2_2_src_spark.registry import load_all
-from apache_hive_1_2_2_src_spark.tables import TABLES
+from tools.check import oracle_connection
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -129,9 +128,7 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = oracle_connection(sf_dir)
 
     reg = load_all()
     if name_filter is not None:

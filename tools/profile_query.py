@@ -4,9 +4,11 @@ gaps, and single-task / long stages.
 
 Usage: python tools/profile_query.py <query> [<query> ...]
 
-The session is created with spark.eventLog.enabled=true pointing at a
-fresh /tmp dir; logs are the zstd event-log dirs Spark 4 writes
-(eventlog_v2_*/events_*.zstd). Prints one summary block per query:
+The session is the engine's own ``get_session`` session, with
+spark.eventLog.enabled=true pointing at a fresh temp dir (passed to
+spark-submit through PYSPARK_SUBMIT_ARGS); logs are the zstd event-log
+dirs Spark 4 writes (eventlog_v2_*/events_*.zstd). Prints one summary
+block per query:
   jobs=N  wall=S  sum(job_dur)=S  sum(gaps)=S
   top jobs by duration, top gaps, stages with 1 task and >0.5s duration.
 """
@@ -106,26 +108,15 @@ def main() -> int:
     evt_dir = tempfile.mkdtemp(prefix="sparkevt_")
     os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-    from apache_hive_1_2_2_src_spark.session import default_parallelism
-    from pyspark.sql import SparkSession
+    from apache_hive_1_2_2_src_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.appName("profile")
-        .master(f"local[{default_parallelism()}]")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evt_dir)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(default_parallelism()))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    # The event-log confs go in through spark-submit, before the JVM starts,
+    # so the session itself carries exactly the engine's confs.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.eventLog.enabled=true --conf spark.eventLog.dir={evt_dir} "
+        + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
     )
+    spark = get_session("profile")
     reg = load_all()
     reg["q1_pricing_summary"].build(spark, sf_dir).count()  # warmup
     windows = []
