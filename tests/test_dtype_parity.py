@@ -7,9 +7,9 @@ while Spark returns int64 (``300``) — the external driver's canonicalizer
 distinguishes them, so such a query hash-fails at the driver even though every
 value is numerically identical (r03: ddl_lifecycle, text_token_stats).
 
-The audit is cheap by design: the DuckDB side is executed (fast), the Spark
-side uses only the analyzed schema — no Spark job runs except for the few
-queries whose build is eager (DDL/streaming), which are tiny at sf0.001.
+The Spark side is the schema of the query's one shared run (the
+``query_run`` fixture in conftest.py), so this audit adds only the DuckDB
+execution (fast) to the build and execution the smoke test needs anyway.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ import pytest
 from pyspark.sql import types as T
 
 from apache_hive_1_2_2_src_spark.registry import load_all
-from tests.conftest import SF_DIR
 
 _REG = load_all()
 ORACLED = [n for n, q in _REG.items() if q.oracle is not None]
@@ -68,9 +67,9 @@ def compatible(expected: str, series) -> bool:
 
 
 @pytest.mark.parametrize("name", ORACLED)
-def test_oracle_dtype_parity(spark, registry, oracle_con, name):
+def test_oracle_dtype_parity(registry, oracle_con, query_run, name):
     q = registry[name]
-    schema = q.build(spark, SF_DIR).schema
+    schema = query_run(name).schema
     odf = oracle_con.execute(q.oracle).fetchdf()
     expected = {f.name: spark_kind(f.dataType) for f in schema.fields}
     assert sorted(expected) == sorted(odf.columns), f"{name}: column-name mismatch"

@@ -1,60 +1,45 @@
 """Spark ↔ DuckDB oracle equivalence at sf0.001 for a representative sample
 of [Q] queries (the full sweep runs in tools/check.py at sf0.01; this keeps
-pytest fast while still exercising the comparison machinery end-to-end)."""
+pytest fast while still exercising the comparison machinery end-to-end).
+Rows are normalized with tools/check.py's ``norm_rows``, the sweep's own, and
+the Spark rows are the ones the query's shared run collected (``query_run``
+in conftest.py)."""
 
 from __future__ import annotations
 
-import math
+import os
 
 import pytest
 
-from tests.conftest import SF_DIR
-
-SAMPLE = [
-    "q1_pricing_summary",
-    "join_three_way",
-    "agg_grouping_sets",
-    "window_row_number_topk",
-    "explode_words",
-    "collection_array_suite",
-    "dedup_exact",
-    "similarity_cosine_topk",
-    "text_token_stats",
-    "window_tumbling_agg",
-    "csv_roundtrip_agg",
-    "multimodal_metadata",
-]
-
-
-def norm_cell(v):
-    if v is None:
-        return "\x00NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.9g}"
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(norm_cell(x) for x in v) + "]"
-    if isinstance(v, dict):
-        return "{" + ",".join(f"{k}:{norm_cell(x)}" for k, x in sorted(v.items())) + "}"
-    return str(v)
-
-
-def norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)
+from apache_hive_1_2_2_src_spark.tables import TABLES
+from tests.conftest import SAMPLE, SF_DIR
+from tools.check import ORACLE_MEMORY_LIMIT, norm_rows, oracle_connection
 
 
 @pytest.mark.parametrize("name", SAMPLE)
-def test_oracle_match(spark, registry, oracle_con, name):
+def test_oracle_match(registry, oracle_con, query_run, name):
     q = registry[name]
     assert q.oracle is not None, f"{name} has no oracle"
-    sdf = q.build(spark, SF_DIR)
-    srows = [tuple(r) for r in sdf.collect()]
+    run = query_run(name)
+    scols = run.schema.names
+    srows = run.rows
     ores = oracle_con.execute(q.oracle).fetchall()
     ocols = [d[0] for d in oracle_con.description]
-    assert sorted(sdf.columns) == sorted(ocols), f"{name}: column mismatch"
+    assert sorted(scols) == sorted(ocols), f"{name}: column mismatch"
     assert len(srows) == len(ores), f"{name}: rowcount {len(srows)} vs {len(ores)}"
-    assert norm_rows(sdf.columns, srows) == norm_rows(ocols, ores), f"{name}: values differ"
+    assert norm_rows(scols, srows) == norm_rows(ocols, ores), f"{name}: values differ"
+
+
+def test_oracle_connection_is_bounded():
+    con = oracle_connection(SF_DIR)
+    try:
+        bounded = con.execute("SELECT current_setting('memory_limit')").fetchone()[0]
+        con.execute(f"SET memory_limit = '{ORACLE_MEMORY_LIMIT}'")
+        assert bounded == con.execute("SELECT current_setting('memory_limit')").fetchone()[0]
+        temp_dir = con.execute("SELECT current_setting('temp_directory')").fetchone()[0]
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        assert os.path.isabs(temp_dir) and os.path.commonpath([repo, temp_dir]) != repo, temp_dir
+        views = {r[0] for r in con.execute("SELECT view_name FROM duckdb_views() WHERE NOT internal").fetchall()}
+        assert set(TABLES) <= views, f"missing views: {set(TABLES) - views}"
+    finally:
+        con.close()
