@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from apache_hive_1_2_2_src_spark.registry import register
 from apache_hive_1_2_2_src_spark.tables import load_table
@@ -40,7 +41,7 @@ def _dot(a: Column, b: Column) -> Column:
     # unrolled). The fold's real pathology was _cos sitting inside
     # window ORDER BY specs — the sort comparator re-evaluates order
     # expressions per comparison — fixed instead by projecting the
-    # cosine to a column before every window (see _nearest_cid).
+    # cosine to a column before every window (see _rank_cells).
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
@@ -79,6 +80,63 @@ def _sql_cos(a: str, b: str) -> str:
     return f"({dot} / (sqrt({na}) * sqrt({nb})))"
 
 
+def _rank_cells(
+    x: DataFrame,
+    cent: DataFrame,
+    by: str | list[str] = "vec_id",
+    vec: str = "embedding",
+    cid: str = "cid",
+    on: str | Column | None = None,
+    cos: str = "__acos",
+) -> DataFrame:
+    """Rank the broadcast centroids (``cid``, ``ce``) of ``cent`` for every
+    row of ``x`` by cosine to its ``vec`` column: adds the cosine as
+    column ``cos`` and ``rnk`` = row_number over ``by``, cosine
+    descending, ties to the lower ``cid``. rnk = 1 is a row's nearest
+    cell and rnk <= nprobe its probed cells. ``on`` pairs each row with
+    only the centroids it matches (per-cell sub-centroids); by default
+    every row meets every centroid. The one cell ranker of the IVF/PQ
+    family: assignment, probing, PQ encoding and training all use it.
+
+    r19: the cosine is projected to a column BEFORE the window. A raw
+    expression in a SortOrder is re-evaluated by the sort comparator per
+    comparison (O(n log n) 64-dim folds instead of O(n)), and Catalyst
+    does not merge common subexpressions across the Window boundary, so
+    a cosine spelled in both the orderBy and a later select is paid
+    twice. Ordering by the projected column is value-identical."""
+    w = Window.partitionBy(by).orderBy(F.col(cos).desc(), F.col(cid))
+    pairs = (
+        x.crossJoin(F.broadcast(cent))
+        if on is None
+        else x.join(F.broadcast(cent), on)
+    )
+    return pairs.withColumn(cos, _cos(F.col(vec), F.col("ce"))).withColumn(
+        "rnk", F.row_number().over(w)
+    )
+
+
+def _nearest_cid(e: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Assign each (vec_id, embedding) to its nearest centroid by cosine
+    (rnk = 1 of _rank_cells), keeping that cosine as ``cos``."""
+    return (
+        _rank_cells(e, centroids, cos="cos")
+        .filter(F.col("rnk") == 1)
+        .select("vec_id", "embedding", "cid", "cos")
+    )
+
+
+def _topk(scored: DataFrame, score: str, k: int, out: str) -> DataFrame:
+    """The top ``k`` (query_id, cand_id) rows per query_id by ``score``
+    descending, ties to the lower cand_id; the score is rounded to 6
+    places as ``out`` and the rank kept as ``rk``."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("cand_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "cand_id", F.round(score, 6).alias(out), "rk")
+    )
+
+
 @register(
     "similarity_cosine_topk",
     oracle=f"""
@@ -108,19 +166,12 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     c = e.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce"))
-    from pyspark.sql.window import Window
-
     scored = (
         F.broadcast(q)
         .join(c, F.col("query_id") != F.col("cand_id"))
         .select("query_id", "cand_id", _cos(F.col("qe"), F.col("ce")).alias("cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "cand_id", F.round("cos", 6).alias("cosine"), "rk")
-    )
+    return _topk(scored, "cos", 5, "cosine")
 
 
 @register(
@@ -280,114 +331,8 @@ def signbit_lsh_pairs(
     tags=("extension", "similarity", "ivf"),
 )
 def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     e = load_table(spark, sf_dir, "embeddings")
-    cent = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    # r19: project the cosine BEFORE the window — a raw expression in a
-    # SortOrder is re-evaluated by the sort comparator per comparison
-    # (O(n log n) 64-dim folds instead of O(n)); ordering by the
-    # projected column is value-identical.
-    assign_w = Window.partitionBy("vec_id").orderBy(
-        F.col("__acos").desc(), F.col("cid")
-    )
-    clustered = _spread(
-        e.crossJoin(F.broadcast(cent))
-        .withColumn("__acos", _cos(F.col("embedding"), F.col("ce")))
-        .withColumn("rnk", F.row_number().over(assign_w))
-        .filter(F.col("rnk") == 1)
-        .select("vec_id", "embedding", "cid")
-    )
-    q = clustered.filter(F.col("vec_id") >= 490).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("cid").alias("qcid"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(
-            clustered,
-            (F.col("cid") == F.col("qcid")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("cand_id"),
-            _cos(F.col("qe"), F.col("embedding")).alias("cos"),
-        )
-    )
-    rank_w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(rank_w))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "cand_id", F.round("cos", 6).alias("cosine"), "rk")
-    )
-
-
-def _nearest_cid(e: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Assign each (vec_id, embedding) to its nearest centroid by cosine.
-
-    r19: the cosine is projected ONCE and the window orders by the
-    projected column — the old form spelled the _cos expression in both
-    the orderBy and the final select, and Catalyst does not merge
-    common subexpressions across the Window boundary, so every row paid
-    the 64-dim cosine twice. Same value, same ordering, same output."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        e.crossJoin(F.broadcast(centroids))
-        .withColumn("cos", _cos(F.col("embedding"), F.col("ce")))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select("vec_id", "embedding", "cid", "cos")
-    )
-
-
-def kmeans_iterate(e: DataFrame, k: int = 8, iters: int = 3) -> DataFrame:
-    """Distributed Lloyd's k-means over an embedding column — the iterative-
-    algorithm pattern done Spark-first: the driver loops over LAZY plans; no
-    vector ever reaches the driver (centroids stay a broadcast DataFrame,
-    unlike collect-based implementations). Per iteration:
-
-      assign:   crossJoin(broadcast(centroids)) + per-vec argmax cosine
-                (|N|·k comparisons, embarrassingly parallel)
-      update:   posexplode to (cid, dim, value) → groupBy(cid, dim) avg →
-                re-assemble arrays via sorted collect_list
-                (one shuffle of |N|·d rows, then k·d)
-
-    At 100 TB you add .persist() on the assignment and raise k; the plan
-    shape is unchanged. Seeded with the first k vectors (deterministic).
-    Returns the final per-cluster summary (cid, n_members, avg_cos).
-    """
-    centroids = e.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    for _ in range(iters):
-        assigned = _nearest_cid(e, centroids)
-        dims = assigned.select(
-            "cid", F.posexplode("embedding").alias("pos", "val")
-        )
-        centroids = (
-            dims.groupBy("cid", "pos")
-            .agg(F.avg(F.col("val").cast("double")).alias("m"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-                ).alias("ce")
-            )
-        )
-    final = _nearest_cid(e, centroids)
-    return (
-        final.groupBy("cid")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.round(F.avg("cos"), 4).alias("avg_cos"),
-        )
-        .orderBy("cid")
-    )
+    return _ivf_probe2_report(e, kmeans_centroids_quantized(e, 8, 0), nprobe=1)
 
 
 @register(
@@ -406,38 +351,21 @@ def kmeans_iterate(e: DataFrame, k: int = 8, iters: int = 3) -> DataFrame:
     """,
     doc="K-means training loop (k=8, 3 Lloyd iterations) over embeddings — "
     "the iterative-algorithm pattern: driver-side loop over lazy DataFrame "
-    "plans, centroid update as posexplode + groupBy(cid,dim) avg, no "
-    "driver-side vectors. Produces the trained centroids the IVF index "
+    "plans, centroid update as posexplode + groupBy(cid,dim) floor-"
+    "quantized mean (kmeans_centroids_quantized, the one Lloyd trainer), "
+    "no driver-side vectors. Produces the trained centroids the IVF index "
     "(similarity_ann_ivf) would use in production. Driver row = invariant "
     "projection (round 4): assignment coverage, cluster population, and "
-    "first→final inertia descent; per-cluster detail via kmeans_iterate; "
-    "convergence asserted in tests/test_kmeans.py.",
+    "seed→final inertia descent; convergence asserted in "
+    "tests/test_kmeans.py.",
     tags=("extension", "similarity", "iterative"),
 )
 def similarity_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     k, iters = 8, 3
-    centroids0 = e.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    first = _nearest_cid(e, centroids0)
+    first = _nearest_cid(e, kmeans_centroids_quantized(e, k, 0))
+    final = _nearest_cid(e, kmeans_centroids_quantized(e, k, iters))
     inertia0 = first.agg(F.sum(1 - F.col("cos")).alias("i0"))
-
-    centroids = centroids0
-    for _ in range(iters):
-        assigned = _nearest_cid(e, centroids)
-        dims = assigned.select("cid", F.posexplode("embedding").alias("pos", "val"))
-        centroids = (
-            dims.groupBy("cid", "pos")
-            .agg(F.avg(F.col("val").cast("double")).alias("m"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-                ).alias("ce")
-            )
-        )
-    final = _nearest_cid(e, centroids)
     summary = final.agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.countDistinct("cid").cast("int").alias("n_clusters_populated"),
@@ -561,35 +489,23 @@ def embedding_quantize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_ann_ivf_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    cent = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    return _ivf_probe2_report(e, cent)
+    return _ivf_probe2_report(e, kmeans_centroids_quantized(e, 8, 0))
 
 
-def _ivf_probe2_report(e: DataFrame, cent: DataFrame) -> DataFrame:
-    """IVF nprobe=2 top-3 search for the query tail (vec_id >= 490) over
-    a given centroid set — shared by the fixed-seed and kmeans-trained
+def _ivf_probe2_report(e: DataFrame, cent: DataFrame, nprobe: int = 2) -> DataFrame:
+    """IVF top-3 search for the query tail (vec_id >= 490) over a given
+    centroid set, each query probing its ``nprobe`` nearest cells —
+    shared by the fixed-seed (nprobe 1 and 2) and kmeans-trained
     registered queries."""
-    from pyspark.sql.window import Window
-
-    # r19: cosine projected before the window (sort comparators
-    # re-evaluate raw order expressions per comparison).
-    assign_w = Window.partitionBy("vec_id").orderBy(
-        F.col("__acos").desc(), F.col("cid")
-    )
-    assign = (
-        e.crossJoin(F.broadcast(cent))
-        .withColumn("__acos", _cos(F.col("embedding"), F.col("ce")))
-        .withColumn("rnk", F.row_number().over(assign_w))
-        .select("vec_id", "embedding", "cid", "rnk")
-    )
+    assign = _rank_cells(e, cent).select("vec_id", "embedding", "cid", "rnk")
     # _spread: the scored join below fans out ~|cell| rows per probe and
     # pays one cosine per pair — keep it parallel (see _spread docstring).
     clustered = _spread(
         assign.filter(F.col("rnk") == 1).select("vec_id", "embedding", "cid")
     )
-    probes = assign.filter((F.col("vec_id") >= 490) & (F.col("rnk") <= 2)).select(
+    probes = assign.filter(
+        (F.col("vec_id") >= 490) & (F.col("rnk") <= nprobe)
+    ).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
         F.col("cid").alias("pcid"),
@@ -606,12 +522,7 @@ def _ivf_probe2_report(e: DataFrame, cent: DataFrame) -> DataFrame:
             _cos(F.col("qe"), F.col("embedding")).alias("cos"),
         )
     )
-    rank_w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(rank_w))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "cand_id", F.round("cos", 6).alias("cosine"), "rk")
-    )
+    return _topk(scored, "cos", 3, "cosine")
 
 
 @register(
@@ -668,8 +579,6 @@ def _ivf_probe2_report(e: DataFrame, cent: DataFrame) -> DataFrame:
     tags=("extension", "similarity"),
 )
 def similarity_knn_label_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") % 53 == 0).select(
         F.col("vec_id").alias("qid"),
@@ -864,10 +773,7 @@ def _pin_clustering(df: DataFrame) -> DataFrame:
 )
 def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    centroids = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    return _semdedup_report(e, centroids)
+    return _semdedup_report(e, kmeans_centroids_quantized(e, 8, 0))
 
 
 def _semdedup_report(e: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -875,8 +781,6 @@ def _semdedup_report(e: DataFrame, centroids: DataFrame) -> DataFrame:
     within-cluster near-dup pairs → remove the more-typical member →
     per-cluster integer-checksum report (shared by the fixed-seed and the
     k-means-trained registered queries)."""
-    from pyspark.sql.window import Window
-
     clustered = _nearest_cid(e, centroids).withColumnRenamed("cos", "ccos")
     capped = _pin_clustering(
         clustered.withColumn(
@@ -1003,9 +907,10 @@ def kmeans_centroids_quantized(
     pipeline oracle-able; quantization error < 1e-6 per coordinate, far
     below any clustering decision scale). Assignment is argmax cosine
     with ties to the lower cid — the same serial-fold cosine every
-    similarity oracle here shares. Same distributed shape as
-    kmeans_iterate: broadcast centroids, one |N|·d shuffle per update,
-    no vectors on the driver.
+    similarity oracle here shares. Distributed shape: broadcast
+    centroids, one |N|·d shuffle per update, no vectors on the driver.
+    This is the one Lloyd trainer; ``iters=0`` returns its seeds (the
+    first k vectors), the centroid set of the fixed-seed queries.
 
     ``checkpoint_every``: eager-localCheckpoint the k-row centroid frame
     every N iterations. The broadcast in each iteration's assignment
@@ -1159,8 +1064,8 @@ def _kmq_oracle() -> str:
     "makes an ITERATIVE TRAINED pipeline hash-certifiable: the oracle "
     "replays both Lloyd iterations in SQL and must land on bit-identical "
     "centroids, so a single flipped assignment in any iteration breaks "
-    "the final report. Scale: same plan as kmeans_iterate (broadcast "
-    "centroids, one |N|*d shuffle per iteration); the prune stays "
+    "the final report. Scale: the kmeans_centroids_quantized plan "
+    "(broadcast centroids, one |N|*d shuffle per iteration); the prune stays "
     "O(N*cell_cap) within cells.",
     tags=("extension", "dedup", "similarity", "semdedup", "iterative"),
 )
@@ -1228,6 +1133,63 @@ def similarity_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M, _PQ_SUB = 4, 16  # 64-dim embeddings -> 4 subspaces x 16 dims
 
 
+def _pq_ctes(
+    pref: str, src: str, frm: str, qfrm: str
+) -> tuple[list[str], list[str], str]:
+    """The PQ codec replayed in DuckDB — the one generator of every PQ
+    oracle's codec CTEs. Returns (chains, encs, luts):
+
+    - chains: one quantized-Lloyd training chain per subspace of the
+      ``src`` column of relation ``frm``, namespaced ``{pref}{m}_``;
+    - encs: ``enc{m}``, each vector's nearest code in subspace m
+      (cosine-assigned, ties to the lower code);
+    - luts: ``lut{m}``, each query's (vec_id >= 490 of ``qfrm``) raw
+      subvector dot product with every code of codebook m.
+
+    The caller places the three parts around its own CTEs."""
+    chains: list[str] = []
+    cents = []
+    for m in range(_PQ_M):
+        lo, hi = m * _PQ_SUB + 1, (m + 1) * _PQ_SUB
+        frags, cur = _kmq_train_ctes(
+            pref=f"{pref}{m}_", src=f"{src}[{lo}:{hi}]", frm=frm
+        )
+        chains += frags
+        cents.append(cur)
+    cos = _sql_cos("embedding", "ce")
+    encs = [
+        f"""enc{m} AS (
+      SELECT vec_id, cid AS code{m} FROM (
+        SELECT vec_id, cid,
+               ROW_NUMBER() OVER (PARTITION BY vec_id
+                                  ORDER BY {cos} DESC, cid) AS rnk
+        FROM {pref}{m}_e CROSS JOIN {cur})
+      WHERE rnk = 1
+    ),"""
+        for m, cur in enumerate(cents)
+    ]
+    dot = _SQL_DOT.format(a="q.qe", b="c.ce")
+    luts = ",".join(
+        f"""lut{m} AS (
+      SELECT q.query_id, c.cid AS code{m}, {dot} AS d{m}
+      FROM (SELECT vec_id AS query_id,
+                   embedding[{m * _PQ_SUB + 1}:{(m + 1) * _PQ_SUB}] AS qe
+            FROM {qfrm} WHERE vec_id >= 490) q
+      CROSS JOIN {cents[m]} c
+    )"""
+        for m in range(_PQ_M)
+    )
+    return chains, encs, luts
+
+
+# The ADC top-3 tail shared by the PQ oracles (over their ``scored`` CTE).
+_ADC_TOP3_SQL = """SELECT query_id, cand_id, ROUND(adc, 6) AS adc, rk FROM (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                   ORDER BY adc DESC, cand_id) AS rk
+      FROM scored)
+    WHERE rk <= 3"""
+
+
 def _pq_oracle(frm: str = "embeddings", head: str = "") -> str:
     """Replay of the full PQ pipeline: one quantized-Lloyd training chain
     PER SUBSPACE (namespaced CTEs), cosine-assigned codes, per-query ADC
@@ -1236,38 +1198,8 @@ def _pq_oracle(frm: str = "embeddings", head: str = "") -> str:
     expression and DuckDB's agree bit-for-bit). ``frm`` is the relation
     the pipeline reads (the OPQ query points it at a rotated CTE
     prepended via ``head``)."""
-    sql: list[str] = [head] if head else []
-    cents = []
-    for m in range(_PQ_M):
-        lo, hi = m * _PQ_SUB + 1, (m + 1) * _PQ_SUB
-        frags, cur = _kmq_train_ctes(
-            pref=f"m{m}_", src=f"embedding[{lo}:{hi}]", frm=frm
-        )
-        sql += frags
-        cents.append(cur)
-    cos = _sql_cos("embedding", "ce")
-    for m, cur in enumerate(cents):
-        sql.append(
-            f"""enc{m} AS (
-      SELECT vec_id, cid AS code{m} FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY {cos} DESC, cid) AS rnk
-        FROM m{m}_e CROSS JOIN {cur})
-      WHERE rnk = 1
-    ),"""
-        )
-    dot = _SQL_DOT.format(a="q.qe", b="c.ce")
-    luts = ",".join(
-        f"""lut{m} AS (
-      SELECT q.query_id, c.cid AS code{m}, {dot} AS d{m}
-      FROM (SELECT vec_id AS query_id,
-                   embedding[{m * _PQ_SUB + 1}:{(m + 1) * _PQ_SUB}] AS qe
-            FROM {frm} WHERE vec_id >= 490) q
-      CROSS JOIN {cents[m]} c
-    )"""
-        for m in range(_PQ_M)
-    )
+    chains, encs, luts = _pq_ctes("m", "embedding", frm, frm)
+    sql: list[str] = ([head] if head else []) + chains + encs
     sql.append(
         f"""codes AS (
       SELECT enc0.vec_id, code0, code1, code2, code3
@@ -1285,11 +1217,7 @@ def _pq_oracle(frm: str = "embeddings", head: str = "") -> str:
       JOIN lut2 ON lut2.query_id = q.vec_id AND lut2.code2 = c.code2
       JOIN lut3 ON lut3.query_id = q.vec_id AND lut3.code3 = c.code3
     )
-    SELECT query_id, cand_id, ROUND(adc, 6) AS adc, rk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY adc DESC, cand_id) AS rk
-      FROM scored)
-    WHERE rk <= 3"""
+    {_ADC_TOP3_SQL}"""
     )
     return "WITH " + "\n".join(sql)
 
@@ -1325,6 +1253,63 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_adc_report(e)
 
 
+def _sub(m: int, col: str = "embedding") -> Column:
+    """Subspace ``m`` of a vector column: its m-th run of _PQ_SUB dims."""
+    return F.slice(col, m * _PQ_SUB + 1, _PQ_SUB)
+
+
+def _pq_encode(
+    x: DataFrame, col: str, enc: DataFrame
+) -> tuple[list[DataFrame], DataFrame]:
+    """The PQ encoder: train one quantized-Lloyd codebook (_KMQ_K codes)
+    per subspace of x's ``col``, then join each vector's nearest code in
+    subspace m onto ``enc`` (keyed by vec_id) as ``code{m}``. Returns
+    (codebooks, enc). r19: the per-subspace chains are independent, so
+    they train concurrently (overlapping independent jobs) instead of
+    one blocking action each, and each codebook is materialized."""
+    subs = [x.select("vec_id", _sub(m, col).alias("embedding")) for m in range(_PQ_M)]
+    cbs = _materialize_all(
+        [kmeans_centroids_quantized(s, _KMQ_K, _KMQ_ITERS) for s in subs]
+    )
+    for m, (s, cb) in enumerate(zip(subs, cbs)):
+        enc = enc.join(
+            _nearest_cid(s, cb).select("vec_id", F.col("cid").alias(f"code{m}")),
+            "vec_id",
+        )
+    return cbs, enc
+
+
+def _pq_adc_topk(
+    pairs: DataFrame,
+    q: DataFrame,
+    cbs: list[DataFrame],
+    topk: int = 3,
+    cell_term: bool = False,
+) -> DataFrame:
+    """The PQ scorer (asymmetric distance): per query of ``q`` (query_id,
+    embedding), lookup table m holds the raw subvector's dot product with
+    every code of codebook m; the candidate ``pairs`` (query_id, cand_id,
+    code0..code3) join the 4 tables by broadcast, and the score is the
+    explicitly-parenthesized sum — float addition order fixed, so Spark
+    and the DuckDB replay agree bit-for-bit (a groupBy sum would be
+    order-nondeterministic). With ``cell_term`` the pairs carry the
+    residual encoding's per-(query, probed cell) dot ``dc``, added
+    first. Returns the top ``topk`` per query as (query_id, cand_id,
+    adc, rk)."""
+    for m, cb in enumerate(cbs):
+        lut = q.crossJoin(F.broadcast(cb)).select(
+            "query_id",
+            F.col("cid").alias(f"code{m}"),
+            _dot(_sub(m), F.col("ce")).alias(f"d{m}"),
+        )
+        pairs = pairs.join(F.broadcast(lut), ["query_id", f"code{m}"])
+    terms = (["dc"] if cell_term else []) + [f"d{m}" for m in range(_PQ_M)]
+    adc = F.col(terms[0])
+    for t in terms[1:]:
+        adc = adc + F.col(t)
+    return _topk(pairs.select("query_id", "cand_id", adc.alias("adc")), "adc", topk, "adc")
+
+
 def _pq_adc_report(e: DataFrame) -> DataFrame:
     """The PQ-ADC pipeline over any (vec_id, embedding) frame — shared by
     the plain-PQ query and the OPQ rotated form. The input and every
@@ -1341,56 +1326,18 @@ def _pq_adc_report(e: DataFrame) -> DataFrame:
     LOSS to spread: its 16-dim sub-slice folds are too cheap for the
     32-task scheduling a spread imposes on every stage that scans the
     cached input)."""
-    from pyspark.sql.window import Window
-
-    def sub(m: int, col="embedding"):
-        return F.slice(col, m * _PQ_SUB + 1, _PQ_SUB)
-
     e = _materialize_wide(e)
-    enc = e
-    luts = []
     q = e.filter(F.col("vec_id") >= 490).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # r19: the 4 per-subspace codebook chains are independent — train
-    # them concurrently (guide §2.6) instead of one blocking action each.
-    cbs = _materialize_all([
-        kmeans_centroids_quantized(
-            e.select("vec_id", sub(m).alias("embedding")), _KMQ_K, _KMQ_ITERS
-        )
-        for m in range(_PQ_M)
-    ])
-    for m in range(_PQ_M):
-        cb = cbs[m]
-        codes_m = _nearest_cid(
-            e.select("vec_id", sub(m).alias("embedding")), cb
-        ).select("vec_id", F.col("cid").alias(f"code{m}"))
-        enc = enc.join(codes_m, "vec_id")
-        lut_m = (
-            q.crossJoin(F.broadcast(cb))
-            .select(
-                "query_id",
-                F.col("cid").alias(f"code{m}"),
-                _dot(sub(m, "embedding"), F.col("ce")).alias(f"d{m}"),
-            )
-        )
-        luts.append(lut_m)
+    cbs, enc = _pq_encode(e, "embedding", e)
     pairs = (
         F.broadcast(q.select("query_id"))
         .crossJoin(_spread(enc.select(F.col("vec_id").alias("cand_id"),
                                       *[f"code{m}" for m in range(_PQ_M)])))
         .filter(F.col("cand_id") != F.col("query_id"))
     )
-    for m in range(_PQ_M):
-        pairs = pairs.join(F.broadcast(luts[m]), ["query_id", f"code{m}"])
-    adc = (((F.col("d0") + F.col("d1")) + F.col("d2")) + F.col("d3")).alias("adc")
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("cand_id"))
-    return (
-        pairs.select("query_id", "cand_id", adc)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "cand_id", F.round("adc", 6).alias("adc"), "rk")
-    )
+    return _pq_adc_topk(pairs, q, cbs)
 
 
 # ----------------------- OPQ-style rotation before PQ (r16) --------------
@@ -1887,12 +1834,8 @@ def _ivfpq_oracle() -> str:
     """Five training chains (one coarse, four PQ subspaces) + cell-
     restricted ADC search, all replayed in DuckDB."""
     sql, coarse = _kmq_train_ctes(pref="v_")
-    cents = []
-    for m in range(_PQ_M):
-        lo, hi = m * _PQ_SUB + 1, (m + 1) * _PQ_SUB
-        frags, cur = _kmq_train_ctes(pref=f"m{m}_", src=f"embedding[{lo}:{hi}]")
-        sql += frags
-        cents.append(cur)
+    chains, encs, luts = _pq_ctes("m", "embedding", "embeddings", "embeddings")
+    sql += chains
     cos = _sql_cos("embedding", "ce")
     sql.append(
         f"""vassign AS (
@@ -1907,28 +1850,7 @@ def _ivfpq_oracle() -> str:
       FROM vassign WHERE vec_id >= 490 AND rnk <= 2
     ),"""
     )
-    for m, cur in enumerate(cents):
-        sql.append(
-            f"""enc{m} AS (
-      SELECT vec_id, cid AS code{m} FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY {cos} DESC, cid) AS rnk
-        FROM m{m}_e CROSS JOIN {cur})
-      WHERE rnk = 1
-    ),"""
-        )
-    dot = _SQL_DOT.format(a="q.qe", b="c.ce")
-    luts = ",".join(
-        f"""lut{m} AS (
-      SELECT q.query_id, c.cid AS code{m}, {dot} AS d{m}
-      FROM (SELECT vec_id AS query_id,
-                   embedding[{m * _PQ_SUB + 1}:{(m + 1) * _PQ_SUB}] AS qe
-            FROM embeddings WHERE vec_id >= 490) q
-      CROSS JOIN {cents[m]} c
-    )"""
-        for m in range(_PQ_M)
-    )
+    sql += encs
     sql.append(
         f"""codes AS (
       SELECT enc0.vec_id, cells.cell, code0, code1, code2, code3
@@ -1946,11 +1868,7 @@ def _ivfpq_oracle() -> str:
       JOIN lut2 ON lut2.query_id = p.query_id AND lut2.code2 = c.code2
       JOIN lut3 ON lut3.query_id = p.query_id AND lut3.code3 = c.code3
     )
-    SELECT query_id, cand_id, ROUND(adc, 6) AS adc, rk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY adc DESC, cand_id) AS rk
-      FROM scored)
-    WHERE rk <= 3"""
+    {_ADC_TOP3_SQL}"""
     )
     return "WITH " + "\n".join(sql)
 
@@ -1982,75 +1900,7 @@ def ivfpq_raw_topk(
     """Non-residual IVF+PQ search over (vec_id, embedding) — extracted
     engine so the recall pytest can run it against ivfpq_residual_topk on
     arbitrary inputs. Returns (query_id, cand_id, adc, rk<=3)."""
-    from pyspark.sql.window import Window
-
-    def sub(m: int, col="embedding"):
-        return F.slice(col, m * _PQ_SUB + 1, _PQ_SUB)
-
-    # r19: same materialization discipline as ivfpq_residual_topk — the
-    # pre-r19 plan inlined the coarse chain + 4 codebook chains into
-    # every consumer (219 KB plan, 206 Exchanges, 82 embeddings scans).
-    e = _materialize_wide(e)
-    coarse = _materialize(kmeans_centroids_quantized(e, _KMQ_K, _KMQ_ITERS))
-    assign_w = Window.partitionBy("vec_id").orderBy(
-        F.col("__acos").desc(), F.col("cid")
-    )
-    vassign = _materialize_wide(
-        e.crossJoin(F.broadcast(coarse))
-        .withColumn("__acos", _cos(F.col("embedding"), F.col("ce")))
-        .withColumn("rnk", F.row_number().over(assign_w))
-        .select("vec_id", "cid", "rnk")
-    )
-    cells = vassign.filter(F.col("rnk") == 1).select(
-        "vec_id", F.col("cid").alias("cell")
-    )
-    probes = vassign.filter(
-        (F.col("vec_id") >= probe_min_vec) & (F.col("rnk") <= 2)
-    ).select(F.col("vec_id").alias("query_id"), F.col("cid").alias("pcell"))
-    q = e.filter(F.col("vec_id") >= probe_min_vec).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    enc = e.select("vec_id").join(cells, "vec_id")
-    luts = []
-    # r19: the 4 subspace chains are independent — train concurrently.
-    cbs = _materialize_all([
-        kmeans_centroids_quantized(
-            e.select("vec_id", sub(m).alias("embedding")), _KMQ_K, _KMQ_ITERS
-        )
-        for m in range(_PQ_M)
-    ])
-    for m in range(_PQ_M):
-        cb = cbs[m]
-        codes_m = _nearest_cid(
-            e.select("vec_id", sub(m).alias("embedding")), cb
-        ).select("vec_id", F.col("cid").alias(f"code{m}"))
-        enc = enc.join(codes_m, "vec_id")
-        luts.append(
-            q.crossJoin(F.broadcast(cb)).select(
-                "query_id",
-                F.col("cid").alias(f"code{m}"),
-                _dot(sub(m, "embedding"), F.col("ce")).alias(f"d{m}"),
-            )
-        )
-    pairs = (
-        F.broadcast(probes)
-        .join(
-            _spread(enc.select(F.col("vec_id").alias("cand_id"), F.col("cell"),
-                               *[f"code{m}" for m in range(_PQ_M)])),
-            (F.col("cell") == F.col("pcell"))
-            & (F.col("cand_id") != F.col("query_id")),
-        )
-    )
-    for m in range(_PQ_M):
-        pairs = pairs.join(F.broadcast(luts[m]), ["query_id", f"code{m}"])
-    adc = (((F.col("d0") + F.col("d1")) + F.col("d2")) + F.col("d3")).alias("adc")
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("cand_id"))
-    return (
-        pairs.select("query_id", "cand_id", adc)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "cand_id", F.round("adc", 6).alias("adc"), "rk")
-    )
+    return _ivfpq_topk(e, probe_min_vec, 3, residual=False)
 
 
 _PQ_DIM = _PQ_M * _PQ_SUB  # 64
@@ -2086,36 +1936,8 @@ def _ivfpq_residual_ctes() -> list[str]:
       FROM v_e v JOIN cells c USING (vec_id)
     ),"""
     )
-    cents = []
-    for m in range(_PQ_M):
-        lo, hi = m * _PQ_SUB + 1, (m + 1) * _PQ_SUB
-        frags, cur = _kmq_train_ctes(
-            pref=f"r{m}_", src=f"residual[{lo}:{hi}]", frm="resid"
-        )
-        sql += frags
-        cents.append(cur)
-    for m, cur in enumerate(cents):
-        sql.append(
-            f"""enc{m} AS (
-      SELECT vec_id, cid AS code{m} FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY {cos} DESC, cid) AS rnk
-        FROM r{m}_e CROSS JOIN {cur})
-      WHERE rnk = 1
-    ),"""
-        )
-    dot = _SQL_DOT.format(a="q.qe", b="c.ce")
-    luts = ",".join(
-        f"""lut{m} AS (
-      SELECT q.query_id, c.cid AS code{m}, {dot} AS d{m}
-      FROM (SELECT vec_id AS query_id,
-                   embedding[{m * _PQ_SUB + 1}:{(m + 1) * _PQ_SUB}] AS qe
-            FROM embeddings WHERE vec_id >= 490) q
-      CROSS JOIN {cents[m]} c
-    )"""
-        for m in range(_PQ_M)
-    )
+    chains, encs, luts = _pq_ctes("r", "residual", "resid", "embeddings")
+    sql += chains + encs
     cdot = _SQL_DOT.format(a="q.embedding", b="c.ce")
     sql.append(
         f"""codes AS (
@@ -2146,13 +1968,7 @@ def _ivfpq_residual_ctes() -> list[str]:
 
 def _ivfpq_residual_oracle() -> str:
     sql = _ivfpq_residual_ctes()
-    sql.append(
-        """SELECT query_id, cand_id, ROUND(adc, 6) AS adc, rk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY adc DESC, cand_id) AS rk
-      FROM scored)
-    WHERE rk <= 3"""
-    )
+    sql.append(_ADC_TOP3_SQL)
     return "WITH " + "\n".join(sql)
 
 
@@ -2198,108 +2014,77 @@ def ivfpq_residual_topk(
     two-stage rerank (which takes the ADC top-``topk`` as its
     shortlist), and the recall pytest. Returns
     (query_id, cand_id, adc, rk<=topk)."""
-    from pyspark.sql.window import Window
+    return _ivfpq_topk(e, probe_min_vec, topk, residual=True)
 
-    def sub(m: int, col="embedding"):
-        return F.slice(col, m * _PQ_SUB + 1, _PQ_SUB)
 
-    # r19: materialize every multiply-consumed stage (coarse centroids,
-    # the coarse assignment, the residual table, each residual codebook)
-    # — the pre-r19 plan inlined the coarse chain into all ~30 consumers
-    # (973 KB plan, 802 Exchanges, 314 embeddings scans; see
-    # plans/r19/similarity_ivfpq_residual_search_before.txt).
-    # r20 note: _spread(e) before this checkpoint was A/B-tested and
-    # REVERTED (4 reps: [14.8, 10.0, 9.7, 8.5] spread vs
-    # [14.7, 8.4, 8.1, 7.4] unspread): the 0.5-0.7 s single-task fold
-    # stages ARE real, but parallelizing them costs 32-task scheduling
-    # on every one of the ~30 stages that scan the cached input — a
-    # net loss at this corpus size. At real file counts the scan is
-    # multi-partition and the question disappears.
+def _ivfpq_topk(
+    e: DataFrame, probe_min_vec: int, topk: int, residual: bool
+) -> DataFrame:
+    """IVF+PQ search: a trained coarse quantizer assigns every vector one
+    cell and each query (vec_id >= ``probe_min_vec``) its 2 nearest;
+    the PQ codec encodes either the raw vectors or, with ``residual``,
+    x − cell centroid, whose ADC score then starts from the per-(query,
+    probed cell) term dot(q, c_cell).
+
+    r19: materialize every multiply-consumed stage (the input, the
+    coarse centroids, the coarse assignment, the residual table, each
+    codebook) — the pre-r19 plans inlined the coarse chain into every
+    consumer: the residual search carried a 973 KB plan, 802 Exchanges
+    and 314 embeddings scans (plans/r19/
+    similarity_ivfpq_residual_search_before.txt), the raw one 219 KB,
+    206 Exchanges and 82 scans.
+    r20 note: _spread(e) before this checkpoint was A/B-tested and
+    REVERTED (4 reps: [14.8, 10.0, 9.7, 8.5] spread vs
+    [14.7, 8.4, 8.1, 7.4] unspread): the 0.5-0.7 s single-task fold
+    stages ARE real, but parallelizing them costs 32-task scheduling
+    on every one of the ~30 stages that scan the cached input — a
+    net loss at this corpus size. At real file counts the scan is
+    multi-partition and the question disappears."""
     e = _materialize_wide(e)
     coarse = _materialize(kmeans_centroids_quantized(e, _KMQ_K, _KMQ_ITERS))
-    assign_w = Window.partitionBy("vec_id").orderBy(
-        F.col("__acos").desc(), F.col("cid")
-    )
     vassign = _materialize_wide(
-        e.crossJoin(F.broadcast(coarse))
-        .withColumn("__acos", _cos(F.col("embedding"), F.col("ce")))
-        .withColumn("rnk", F.row_number().over(assign_w))
-        .select("vec_id", "cid", "ce", "rnk")
+        _rank_cells(e, coarse).select(
+            "vec_id", "cid", *(["ce"] if residual else []), "rnk"
+        )
     )
     cells = vassign.filter(F.col("rnk") == 1).select(
-        "vec_id", F.col("cid").alias("cell"), F.col("ce").alias("cell_ce")
+        "vec_id",
+        F.col("cid").alias("cell"),
+        *([F.col("ce").alias("cell_ce")] if residual else []),
     )
     probes = vassign.filter(
         (F.col("vec_id") >= probe_min_vec) & (F.col("rnk") <= 2)
     ).select(F.col("vec_id").alias("query_id"), F.col("cid").alias("pcell"))
-    resid = _materialize_wide(
-        e.join(cells, "vec_id").select(
-            "vec_id",
-            "cell",
-            F.zip_with(
-                "embedding", "cell_ce", lambda x, c: x.cast("double") - c
-            ).alias("residual"),
-        )
-    )
     q = e.filter(F.col("vec_id") >= probe_min_vec).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cterm = q.crossJoin(F.broadcast(coarse)).select(
-        "query_id",
-        F.col("cid").alias("pcell"),
-        _dot(F.col("embedding"), F.col("ce")).alias("dc"),
-    )
-    enc = resid.select("vec_id", "cell")
-    luts = []
-    # r19: the 4 residual-subspace chains are independent — train
-    # concurrently (the coarse chain above is their shared, already
-    # materialized input).
-    cbs = _materialize_all([
-        kmeans_centroids_quantized(
-            resid.select("vec_id", sub(m, "residual").alias("embedding")),
-            _KMQ_K,
-            _KMQ_ITERS,
-        )
-        for m in range(_PQ_M)
-    ])
-    for m in range(_PQ_M):
-        cb = cbs[m]
-        codes_m = _nearest_cid(
-            resid.select("vec_id", sub(m, "residual").alias("embedding")), cb
-        ).select("vec_id", F.col("cid").alias(f"code{m}"))
-        enc = enc.join(codes_m, "vec_id")
-        luts.append(
-            q.crossJoin(F.broadcast(cb)).select(
-                "query_id",
-                F.col("cid").alias(f"code{m}"),
-                _dot(sub(m, "embedding"), F.col("ce")).alias(f"d{m}"),
+    if residual:
+        resid = _materialize_wide(
+            e.join(cells, "vec_id").select(
+                "vec_id",
+                "cell",
+                F.zip_with(
+                    "embedding", "cell_ce", lambda x, c: x.cast("double") - c
+                ).alias("residual"),
             )
         )
-    pairs = (
-        F.broadcast(probes)
-        .join(
-            _spread(enc.select(F.col("vec_id").alias("cand_id"), F.col("cell"),
-                               *[f"code{m}" for m in range(_PQ_M)])),
-            (F.col("cell") == F.col("pcell"))
-            & (F.col("cand_id") != F.col("query_id")),
+        cbs, enc = _pq_encode(resid, "residual", resid.select("vec_id", "cell"))
+    else:
+        cbs, enc = _pq_encode(e, "embedding", e.select("vec_id").join(cells, "vec_id"))
+    pairs = F.broadcast(probes).join(
+        _spread(enc.select(F.col("vec_id").alias("cand_id"), F.col("cell"),
+                           *[f"code{m}" for m in range(_PQ_M)])),
+        (F.col("cell") == F.col("pcell"))
+        & (F.col("cand_id") != F.col("query_id")),
+    )
+    if residual:
+        cterm = q.crossJoin(F.broadcast(coarse)).select(
+            "query_id",
+            F.col("cid").alias("pcell"),
+            _dot(F.col("embedding"), F.col("ce")).alias("dc"),
         )
-        .join(F.broadcast(cterm), ["query_id", "pcell"])
-    )
-    for m in range(_PQ_M):
-        pairs = pairs.join(F.broadcast(luts[m]), ["query_id", f"code{m}"])
-    adc = (
-        (((F.col("dc") + F.col("d0")) + F.col("d1")) + F.col("d2"))
-        + F.col("d3")
-    ).alias("adc")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("cand_id")
-    )
-    return (
-        pairs.select("query_id", "cand_id", adc)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= topk)
-        .select("query_id", "cand_id", F.round("adc", 6).alias("adc"), "rk")
-    )
+        pairs = pairs.join(F.broadcast(cterm), ["query_id", "pcell"])
+    return _pq_adc_topk(pairs, q, cbs, topk, cell_term=residual)
 
 
 @register(
@@ -2368,8 +2153,6 @@ def ivfpq_rerank_topk(
     """Two-stage search engine: ADC shortlist (ivfpq_residual_topk,
     top-``shortlist_k``) → exact-dot rerank of only those ids → top-3.
     Returns (query_id, cand_id, exact_dot, rk)."""
-    from pyspark.sql.window import Window
-
     short = ivfpq_residual_topk(
         spark, e, probe_min_vec=probe_min_vec, topk=shortlist_k
     ).select("query_id", "cand_id")
@@ -2388,17 +2171,7 @@ def ivfpq_rerank_topk(
             _dot(F.col("qe"), F.col("cde")).alias("xdot"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("xdot").desc(), F.col("cand_id")
-    )
-    return (
-        rer.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            "query_id", "cand_id",
-            F.round("xdot", 6).alias("exact_dot"), "rk",
-        )
-    )
+    return _topk(rer, "xdot", 3, "exact_dot")
 
 
 # ----------------------- two-level IVF (coarse -> per-cell sub-quantizer)
@@ -2504,19 +2277,9 @@ def ivf_two_level_topk(
     the in-chain checkpoint bounds each chain's own O(iters^2) rebuild —
     verified composed in tests/test_round15_ops.py (SCALE.md r15
     deepening audit)."""
-    from pyspark.sql.window import Window
-
     coarse = kmeans_centroids_quantized(e, _TL_K1, iters, checkpoint_every)
-    # r19: cosines projected before every window in this function (sort
-    # comparators re-evaluate raw order expressions per comparison).
-    wv = Window.partitionBy("vec_id").orderBy(
-        F.col("__acos").desc(), F.col("cid")
-    )
     tlassign = _materialize_wide(
-        e.crossJoin(F.broadcast(coarse))
-        .withColumn("__acos", _cos(F.col("embedding"), F.col("ce")))
-        .withColumn("rnk", F.row_number().over(wv))
-        .select("vec_id", "embedding", "cid", "rnk")
+        _rank_cells(e, coarse).select("vec_id", "embedding", "cid", "rnk")
     )
     # r19: materialize the member table too — each of the k1 sub-chains
     # (and the leaf assignment) would otherwise re-run mem's window over
@@ -2556,9 +2319,6 @@ def ivf_two_level_topk(
     subcent = subs[0]
     for s in subs[1:]:
         subcent = subcent.unionByName(s)
-    wl = Window.partitionBy("orig_id").orderBy(
-        F.col("__lcos").desc(), F.col("scid")
-    )
     # _spread: the leaf assignment pays k2 cosines per member and the
     # cand join below fans out a leaf list per probe pair — keep both
     # parallel instead of inheriting mem's AQE-coalesced partitioning.
@@ -2566,9 +2326,7 @@ def ivf_two_level_topk(
     # to one partition, and the cand join below fans the probe pairs out
     # against corpus-sized leaf lists (measured 765k pairs at sf0.1).
     leaves = _spread(
-        _spread(mem).join(F.broadcast(subcent), "ccid")
-        .withColumn("__lcos", _cos(F.col("embedding"), F.col("ce")))
-        .withColumn("rnk", F.row_number().over(wl))
+        _rank_cells(_spread(mem), subcent, by="orig_id", cid="scid", on="ccid")
         .where(F.col("rnk") == 1)
         .select("orig_id", "embedding", "ccid", "scid")
     )
@@ -2579,14 +2337,12 @@ def ivf_two_level_topk(
         F.col("embedding").alias("qe"),
         F.col("cid").alias("pccid"),
     )
-    ws = Window.partitionBy("query_id", "pccid").orderBy(
-        F.col("__pcos").desc(), F.col("scid")
-    )
     probes = (
-        qprobes.join(F.broadcast(subcent), F.col("pccid") == F.col("ccid"))
-        .withColumn("__pcos", _cos(F.col("qe"), F.col("ce")))
-        .withColumn("srnk", F.row_number().over(ws))
-        .where(F.col("srnk") <= _TL_PROBE2)
+        _rank_cells(
+            qprobes, subcent, by=["query_id", "pccid"], vec="qe", cid="scid",
+            on=F.col("pccid") == F.col("ccid"),
+        )
+        .where(F.col("rnk") <= _TL_PROBE2)
         .select("query_id", "qe", "pccid", F.col("scid").alias("pscid"))
     )
     cand = F.broadcast(probes).join(
@@ -2595,20 +2351,12 @@ def ivf_two_level_topk(
         & (F.col("scid") == F.col("pscid"))
         & (F.col("orig_id") != F.col("query_id")),
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__qcos").desc(), F.col("orig_id")
+    scored = cand.select(
+        "query_id",
+        F.col("orig_id").alias("cand_id"),
+        _cos(F.col("qe"), F.col("embedding")).alias("cos"),
     )
-    return (
-        cand.withColumn("__qcos", _cos(F.col("qe"), F.col("embedding")))
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= 3)
-        .select(
-            "query_id",
-            F.col("orig_id").alias("cand_id"),
-            F.round(F.col("__qcos"), 6).alias("cosine"),
-            "rk",
-        )
-    )
+    return _topk(scored, "cos", 3, "cosine")
 
 
 @register(

@@ -1597,8 +1597,9 @@ _BPE_BASE_SPARK = """
     "Scale: state is (word, pos, symbol) rows of the DISTINCT vocab — "
     "pair counting and merging shuffle O(|vocab|*avg_len) per step "
     "regardless of corpus size; the corpus is touched once for the "
-    "frequency table. The iterative-driver-loop pattern of "
-    "kmeans_iterate, on SQL text instead of DataFrame ops.",
+    "frequency table. The iterative-driver-loop pattern of the k-means "
+    "trainer (kmeans_centroids_quantized), on SQL text instead of "
+    "DataFrame ops.",
     tags=("extension", "text", "tokenizer", "iterative"),
 )
 def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2476,12 +2476,12 @@ def _sivf_oracle() -> str:
     ),
 )
 def streaming_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     from apache_hive_1_2_2_src_spark.extensions.similarity import (
         _KMQ_ITERS,
         _KMQ_K,
         _cos,
+        _rank_cells,
+        _topk,
         kmeans_centroids_quantized,
     )
 
@@ -2502,19 +2502,11 @@ def streaming_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     hi = e.agg(F.max("vec_id")).first()[0]
     stage_drops(e.withColumn("drop", range_drop("vec_id", hi, 3)), 3, inbox)
 
-    # r19: cosine projected before the window (sort comparators
-    # re-evaluate raw order expressions per comparison).
-    assign_w = Window.partitionBy("vec_id").orderBy(
-        F.col("__acos").desc(), F.col("cid")
-    )
-
     def assign_and_append(batch: DataFrame, epoch_id: int) -> None:
         # one file per cell dir per epoch, epoch-keyed overwrite
         store.append(
             epoch_id,
-            batch.crossJoin(F.broadcast(cent))
-            .withColumn("__acos", _cos(F.col("embedding"), F.col("ce")))
-            .withColumn("rnk", F.row_number().over(assign_w))
+            _rank_cells(batch, cent)
             .where(F.col("rnk") == 1)
             .select("vec_id", "embedding", F.col("cid").alias("cell")),
         )
@@ -2529,10 +2521,7 @@ def streaming_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
 
     # ---- post-drain probe: top-2 cells per query, partition-pruned read
     probes = (
-        e.where(F.col("vec_id") >= 490)
-        .crossJoin(F.broadcast(cent))
-        .withColumn("__acos", _cos(F.col("embedding"), F.col("ce")))
-        .withColumn("rnk", F.row_number().over(assign_w))
+        _rank_cells(e.where(F.col("vec_id") >= 490), cent)
         .where(F.col("rnk") <= 2)
         .select(
             F.col("vec_id").alias("query_id"),
@@ -2566,14 +2555,7 @@ def streaming_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
             _cos(F.col("qe"), F.col("embedding")).alias("cos"),
         )
     )
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("cand_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(rank_w))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "cand_id", F.round("cos", 6).alias("cosine"), "rk")
-    )
+    return _topk(scored, "cos", 3, "cosine")
 
 
 # ------------- Streaming incremental pHash image dedup (r15) -------------

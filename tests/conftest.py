@@ -34,6 +34,7 @@ SAMPLE = [
     "window_tumbling_agg",
     "csv_roundtrip_agg",
     "multimodal_metadata",
+    "similarity_kmeans_train",
 ]
 
 

@@ -4,20 +4,37 @@ membership counts always sum to the corpus size."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
-from apache_hive_1_2_2_src_spark.extensions.similarity import kmeans_iterate
+from apache_hive_1_2_2_src_spark.extensions.similarity import (
+    _nearest_cid,
+    kmeans_centroids_quantized,
+)
 from apache_hive_1_2_2_src_spark.tables import load_table
 from tests.conftest import SF_DIR
 
 
 def _mean_cos(spark, iters):
+    """Train k=4 centroids for ``iters`` Lloyd iterations and assign every
+    vector to its nearest one: per-cluster (cid, n_members, avg_cos)."""
     e = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    out = kmeans_iterate(e, k=4, iters=iters)
+    out = (
+        _nearest_cid(e, kmeans_centroids_quantized(e, 4, iters))
+        .groupBy("cid")
+        .agg(
+            F.count(F.lit(1)).alias("n_members"),
+            F.round(F.avg("cos"), 4).alias("avg_cos"),
+        )
+        .orderBy("cid")
+    )
     rows = out.collect()
     n = sum(r.n_members for r in rows)
     mean = sum(r.avg_cos * r.n_members for r in rows) / n
     return rows, n, mean
+
 
 def test_kmeans_improves_over_seed(spark):
     total = load_table(spark, SF_DIR, "embeddings").count()
@@ -82,3 +99,15 @@ def test_quantized_centroids_checkpoint_invariant(spark):
         for r in kmeans_centroids_quantized(e, 8, 5, checkpoint_every=2).collect()
     )
     assert plain == ckpt
+
+
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_kmeans_train_invariants_across_sfs(spark, registry, sf):
+    """similarity_kmeans_train's oracle checks invariants, not values:
+    every vector assigned once, all 8 clusters populated, and the
+    objective no worse after training than at the seeds. They must hold
+    beyond sf0.001 (which the shared oracle-sample run checks)."""
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), sf)
+    n = load_table(spark, sf_dir, "embeddings").count()
+    got = registry["similarity_kmeans_train"].build(spark, sf_dir).collect()
+    assert [tuple(r) for r in got] == [(n, 8, True)]
