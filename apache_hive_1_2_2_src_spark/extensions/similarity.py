@@ -1279,11 +1279,10 @@ def _pq_encode(
     return cbs, enc
 
 
-def _pq_adc_topk(
+def _pq_adc(
     pairs: DataFrame,
     q: DataFrame,
     cbs: list[DataFrame],
-    topk: int = 3,
     cell_term: bool = False,
 ) -> DataFrame:
     """The PQ scorer (asymmetric distance): per query of ``q`` (query_id,
@@ -1294,8 +1293,7 @@ def _pq_adc_topk(
     and the DuckDB replay agree bit-for-bit (a groupBy sum would be
     order-nondeterministic). With ``cell_term`` the pairs carry the
     residual encoding's per-(query, probed cell) dot ``dc``, added
-    first. Returns the top ``topk`` per query as (query_id, cand_id,
-    adc, rk)."""
+    first. Returns (query_id, cand_id, adc), adc unrounded."""
     for m, cb in enumerate(cbs):
         lut = q.crossJoin(F.broadcast(cb)).select(
             "query_id",
@@ -1307,7 +1305,19 @@ def _pq_adc_topk(
     adc = F.col(terms[0])
     for t in terms[1:]:
         adc = adc + F.col(t)
-    return _topk(pairs.select("query_id", "cand_id", adc.alias("adc")), "adc", topk, "adc")
+    return pairs.select("query_id", "cand_id", adc.alias("adc"))
+
+
+def _pq_adc_topk(
+    pairs: DataFrame,
+    q: DataFrame,
+    cbs: list[DataFrame],
+    topk: int = 3,
+    cell_term: bool = False,
+) -> DataFrame:
+    """The top ``topk`` per query of ``_pq_adc`` as (query_id, cand_id,
+    adc, rk), adc rounded to 6 places."""
+    return _topk(_pq_adc(pairs, q, cbs, cell_term), "adc", topk, "adc")
 
 
 def _pq_adc_report(e: DataFrame) -> DataFrame:

@@ -15,6 +15,25 @@ Scale notes (100 TB / 1000-executor design intent):
   on a real cluster you would size it ~2-3× total cores and let AQE trim.
 - Arrow enabled so any pandas-UDF extension operator pays batch (not row)
   Python transfer cost.
+
+DataFrame debugging is off (``spark.python.sql.dataFrameDebugging.enabled``
+= false). When it is on, PySpark wraps every ``functions.*`` call and every
+``Column`` operator so that it records the Python call site in the JVM:
+a ``getActiveSession`` lookup, a conf read and a ``PySparkCurrentOrigin``
+set and clear, several py4j round trips per call. At small scale a
+query's build is bound by those round trips: they were more than half of
+the 2,490 that the five tpch builds made per pass. The cost of turning it
+off: an analysis error (an unresolved column, a type mismatch) still
+raises the same ``AnalysisException`` with the same error condition and
+message, but the call site in its DataFrame query context is a JVM frame
+instead of the Python file and line of the call that built the failing
+expression. The Python traceback of the failing call remains.
+
+PySpark reads this flag once per process, from the session that is active
+when the first wrapped call runs, and keeps it. A caller that brings its
+own session (the external correctness driver, a notebook) keeps PySpark's
+default, debugging on, unless ``get_session`` built the first session of
+that process.
 """
 
 from __future__ import annotations
@@ -44,6 +63,8 @@ def get_session(
       oracle interpret parquet INT96/INT64 timestamps identically.
     - ANSI off (Hive 1.2 returns NULL on bad casts / division by zero —
       ``LazyPrimitive.parse`` NULL-on-mismatch semantics).
+
+    DataFrame debugging is off; the module docstring gives the trade-off.
 
     ``hive=True`` builds with ``enableHiveSupport()`` (Spark ships the Hive
     2.3 client jars): CREATE TEMPORARY FUNCTION then loads REAL Hive
@@ -84,6 +105,8 @@ def get_session(
         # nanos long and convert in tables.load_table (truncate ns -> us,
         # matching DuckDB's TIMESTAMP_NS -> TIMESTAMP read conversion).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # A static conf: no per-call Python call-site capture (module doc).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if hive:
         builder = builder.enableHiveSupport()

@@ -22,6 +22,19 @@ Spark job; a miss costs the listing plus the inference job. If the listing
 fails (e.g. a missing path) the read falls through to plain
 ``spark.read.parquet``, so the caller sees Spark's own error.
 
+The layer also keeps the JVM handles it needs, since at small scale a
+load's py4j round trips cost more than its listing. ``hadoop_fs`` keeps
+one (FileSystem, Path class) per (SparkContext, scheme://authority) for
+every caller (acid, catalog, hive_bucketing, the streaming drains, this
+module). The key is the SparkContext object, so a session built after
+``spark.stop()`` never gets a stopped context's handle, and the scheme and
+authority as Hadoop's ``Path`` parses them, lowercased as Hadoop's own
+FileSystem cache keys them; a path without a scheme shares the entry of
+the default file system, so ``fs.defaultFS`` must not change on a live
+context. A load reads the session's confs once (``_session_confs``, three
+JVM calls) for both the pinned semantic confs and the stamp, and a hit
+reads with the stored JVM schema instead of re-parsing its JSON.
+
 Scale note: each table is a directory-backed parquet source, so Catalyst
 gets partition discovery, predicate pushdown, and column pruning for free;
 at 100 TB the only change is the path (s3://...) and `partitionBy` layout.
@@ -29,12 +42,14 @@ at 100 TB the only change is the path (s3://...) and `partitionBy` layout.
 
 from __future__ import annotations
 
+import json
 import os
+import threading
+import weakref
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -66,28 +81,75 @@ _RUNTIME_CONFS = {
     "spark.sql.legacy.timeParserPolicy": "CORRECTED",
 }
 
+# JVM handles kept per SparkContext, so a stopped context's handles are never
+# handed to its successor and go away with it: SparkContext -> {key: handle}.
+_HANDLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_HANDLES_LOCK = threading.Lock()
 
-def ensure_confs(spark: SparkSession) -> SparkSession:
-    """Idempotently pin semantic confs on any SparkSession (driver-safe)."""
+
+def _handle(spark: SparkSession, key: tuple, make):
+    """The handle stored under ``key`` for ``spark``'s SparkContext; ``make()``
+    creates it on the first call."""
+    with _HANDLES_LOCK:
+        handles = _HANDLES.setdefault(spark.sparkContext, {})
+        if key not in handles:
+            handles[key] = make()
+        return handles[key]
+
+
+def _session_confs(spark: SparkSession) -> dict[str, str]:
+    """Every conf set on the session (what ``spark.conf.get(key, None)`` reads
+    for each key; an unset key is absent), in three JVM calls."""
+    jvm = spark._jvm
+    mapper = _handle(spark, ("json",), lambda: jvm.com.fasterxml.jackson.databind.ObjectMapper())
+    return json.loads(mapper.writeValueAsString(spark._jsparkSession.conf().getAllAsJava()))
+
+
+def ensure_confs(spark: SparkSession) -> dict[str, str]:
+    """Idempotently pin semantic confs on any SparkSession (driver-safe);
+    return the session's confs (``_session_confs``) as they are after
+    pinning."""
+    confs = _session_confs(spark)
     for key, want in _RUNTIME_CONFS.items():
-        try:
-            if spark.conf.get(key, None) != want:
+        if confs.get(key) != want:
+            try:
                 spark.conf.set(key, want)
-        except Exception:
-            # Non-runtime-settable on some builds → best effort; the session
-            # factory (session.py) still sets it at build time.
-            pass
-    return spark
+                confs[key] = want
+            except Exception:
+                # Non-runtime-settable on some builds → best effort; the session
+                # factory (session.py) still sets it at build time.
+                pass
+    return confs
+
+
+def _fs_key(path: str) -> tuple[str, str]:
+    """(scheme, authority) of ``path``, split as Hadoop's ``Path`` splits them
+    and lowercased as Hadoop's FileSystem cache keys them; a path without a
+    scheme keys as ("", ""), the default file system."""
+    colon, slash = path.find(":"), path.find("/")
+    scheme = ""
+    if colon != -1 and (slash == -1 or colon < slash):
+        scheme, path = path[:colon], path[colon + 1:]
+    authority = ""
+    if path.startswith("//"):
+        end = path.find("/", 2)
+        authority = path[2:] if end == -1 else path[2:end]
+    return scheme.lower(), authority.lower()
 
 
 def hadoop_fs(spark: SparkSession, path: str):
     """(jvm, FileSystem, Path-class) for ``path`` — works for file://,
     hdfs://, s3a://… anywhere a Hadoop FS implementation is on the
-    classpath, unlike local glob/shutil."""
+    classpath, unlike local glob/shutil. The FileSystem and the Path class
+    are looked up once per (SparkContext, scheme://authority)."""
     jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, fs, jvm.org.apache.hadoop.fs.Path
+
+    def make():
+        P = jvm.org.apache.hadoop.fs.Path
+        return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
+
+    fs, P = _handle(spark, ("fs", *_fs_key(path)), make)
+    return jvm, fs, P
 
 
 # Session confs whose values change what parquet schema inference returns.
@@ -99,13 +161,13 @@ _SCHEMA_CONFS = (
     "spark.sql.parquet.mergeSchema",
 )
 
-# Inferred table schemas: path -> (stamp, schema), where stamp is the
+# Inferred table schemas: path -> (stamp, JVM StructType), where stamp is the
 # listing fingerprint plus the _SCHEMA_CONFS values at inference time. One
 # entry per path: a changed stamp replaces the entry, so rewrites of a
 # table do not accumulate stale schemas. No lock: the stamp is read before
 # the inference, so a racing writer can only store a stamp older than its
 # schema, which the next call sees as a miss.
-_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+_SCHEMAS: dict[str, tuple[tuple, object]] = {}
 
 
 def _listing(spark: SparkSession, path: str) -> tuple:
@@ -123,25 +185,36 @@ def _listing(spark: SparkSession, path: str) -> tuple:
     return tuple(sorted(out))
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def _parquet(spark: SparkSession, path: str, jschema=None) -> DataFrame:
+    """``spark.read.parquet(path)``, or ``spark.read.schema(s).parquet(path)``
+    with ``jschema`` the JVM StructType of ``s``, made with JVM calls alone
+    (PySpark's reader re-parses a schema's JSON and builds a Java list for
+    the path on every call)."""
+    reader = spark._jsparkSession.read()
+    if jschema is not None:
+        reader = reader.schema(jschema)
+    return DataFrame(reader.format("parquet").load(path), spark)
+
+
+def _read_parquet(spark: SparkSession, path: str, confs: dict[str, str]) -> DataFrame:
     """``spark.read.parquet(path)``, with the schema taken from ``_SCHEMAS``
-    while the table's files and the schema confs are unchanged."""
+    while the table's files and the schema confs (read from ``confs``, the
+    session's confs) are unchanged."""
     try:
         listing = _listing(spark, path)
     except Py4JJavaError:
-        return spark.read.parquet(path)
-    stamp = (listing, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+        return _parquet(spark, path)
+    stamp = (listing, tuple(confs.get(k) for k in _SCHEMA_CONFS))
     hit = _SCHEMAS.get(path)
     if hit is not None and hit[0] == stamp:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[path] = (stamp, df.schema)
+        return _parquet(spark, path, hit[1])
+    df = _parquet(spark, path)
+    _SCHEMAS[path] = (stamp, df._jdf.schema())
     return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_confs(spark)
-    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet", ensure_confs(spark))
     if name == "events":
         # Normalize ts to TimestampType regardless of the physical parquet
         # type — the testdata generator has shipped both INT64 TIMESTAMP(NANOS)

@@ -37,6 +37,15 @@ SAMPLE = [
     "similarity_kmeans_train",
 ]
 
+# TPC-H Q1, Q4, Q5, Q6 and Q18 as registered: the perfbench ``tpch`` workload.
+TPCH = (
+    "q1_pricing_summary",
+    "workload_order_priority_check",
+    "workload_local_supplier_volume",
+    "workload_revenue_forecast",
+    "workload_large_volume_customer",
+)
+
 
 @dataclass(frozen=True)
 class QueryRun:

@@ -16,16 +16,8 @@ from pyspark.errors import AnalysisException
 from apache_hive_1_2_2_src_spark import tables
 from apache_hive_1_2_2_src_spark.plans import plan_text
 from apache_hive_1_2_2_src_spark.tables import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, TPCH
 
-# TPC-H Q1, Q4, Q5, Q6 and Q18 as registered.
-TPCH = (
-    "q1_pricing_summary",
-    "workload_order_priority_check",
-    "workload_local_supplier_volume",
-    "workload_revenue_forecast",
-    "workload_large_volume_customer",
-)
 _GROUPS = itertools.count()
 
 

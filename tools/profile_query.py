@@ -7,8 +7,10 @@ Usage: python tools/profile_query.py <query> [<query> ...]
 The session is the engine's own ``get_session`` session, with
 spark.eventLog.enabled=true pointing at a fresh temp dir (passed to
 spark-submit through PYSPARK_SUBMIT_ARGS); logs are the zstd event-log
-dirs Spark 4 writes (eventlog_v2_*/events_*.zstd). Prints one summary
-block per query:
+dirs Spark 4 writes (eventlog_v2_*/events_*.zstd). Prints each query's wall
+time and the py4j round trips of its ``build`` (counted by
+``plans.roundtrips``, the counter tests/test_build_round_trips.py pins),
+then one summary block per query:
   jobs=N  wall=S  sum(job_dur)=S  sum(gaps)=S
   top jobs by duration, top gaps, stages with 1 task and >0.5s duration.
 """
@@ -25,6 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from apache_hive_1_2_2_src_spark.plans.roundtrips import count_round_trips  # noqa: E402
 from apache_hive_1_2_2_src_spark.registry import load_all  # noqa: E402
 
 
@@ -123,10 +126,12 @@ def main() -> int:
     for name in sys.argv[1:]:
         spark.sparkContext.setJobDescription(f"profile:{name}")
         t0 = time.time() * 1000
-        reg[name].build(spark, sf_dir).count()
+        with count_round_trips(spark) as counted:
+            df = reg[name].build(spark, sf_dir)
+        df.count()
         t1 = time.time() * 1000
         windows.append((name, t0, t1))
-        print(f"{name}: {(t1 - t0) / 1000.0:.2f}s", flush=True)
+        print(f"{name}: {(t1 - t0) / 1000.0:.2f}s build_round_trips={counted.n}", flush=True)
     spark.stop()
     time.sleep(2)
     events = read_events(evt_dir)
