@@ -20,11 +20,14 @@ BASELINE.json mandate; no reference analogue).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from apache_hive_1_2_2_src_spark.registry import register
+from apache_hive_1_2_2_src_spark.streaming.epoch_store import concurrently
 from apache_hive_1_2_2_src_spark.tables import load_table
 
 # Double-precision cosine between two array<float> cols, fully JVM-side.
@@ -879,23 +882,6 @@ def _materialize_wide(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def _materialize_all(dfs: list) -> list:
-    """Materialize INDEPENDENT frames concurrently (r19; guide §2.6 —
-    overlap independent jobs). Each eager localCheckpoint is a blocking
-    driver action, and the PQ family trains 4 independent per-subspace
-    codebook chains whose bench-scale cost is almost entirely fixed
-    per-job scheduling latency; submitting them from a small thread
-    pool lets one chain's jobs back-fill cores the others leave idle.
-    Values are unaffected — the chains share no state and each is
-    individually deterministic."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(dfs) == 1:
-        return [_materialize(dfs[0])]
-    with ThreadPoolExecutor(max_workers=min(4, len(dfs))) as pool:
-        return list(pool.map(_materialize, dfs))
-
-
 def kmeans_centroids_quantized(
     e: DataFrame, k: int, iters: int, checkpoint_every: int = 0
 ) -> DataFrame:
@@ -1268,9 +1254,15 @@ def _pq_encode(
     they train concurrently (overlapping independent jobs) instead of
     one blocking action each, and each codebook is materialized."""
     subs = [x.select("vec_id", _sub(m, col).alias("embedding")) for m in range(_PQ_M)]
-    cbs = _materialize_all(
-        [kmeans_centroids_quantized(s, _KMQ_K, _KMQ_ITERS) for s in subs]
-    )
+    # r19 (guide §2.6 — overlap independent jobs): each eager
+    # localCheckpoint is a blocking driver action whose bench-scale cost
+    # is almost entirely fixed per-job scheduling latency, so one chain's
+    # jobs back-fill cores the others leave idle. Values are unaffected —
+    # the chains share no state and each is individually deterministic.
+    cbs = concurrently(*(
+        partial(_materialize, kmeans_centroids_quantized(s, _KMQ_K, _KMQ_ITERS))
+        for s in subs
+    ))
     for m, (s, cb) in enumerate(zip(subs, cbs)):
         enc = enc.join(
             _nearest_cid(s, cb).select("vec_id", F.col("cid").alias(f"code{m}")),
@@ -2308,20 +2300,20 @@ def ivf_two_level_topk(
         )
     )
     # r19: the k1 per-cell sub-chains are independent — train them
-    # concurrently (guide §2.6); each is materialized individually, so
-    # the union below is a tiny plan over LogicalRDDs and the old union
-    # checkpoint became redundant.
-    subs = _materialize_all([
-        kmeans_centroids_quantized(
+    # concurrently (guide §2.6, as in _pq_encode); each is materialized
+    # individually, so the union below is a tiny plan over LogicalRDDs
+    # and the old union checkpoint became redundant.
+    subs = concurrently(*(
+        partial(_materialize, kmeans_centroids_quantized(
             mem.where(F.col("ccid") == j).select(
                 F.col("rid").alias("vec_id"), "embedding"
             ),
             _TL_K2,
             iters,
             checkpoint_every,
-        )
+        ))
         for j in range(_TL_K1)
-    ])
+    ))
     subs = [
         cj.select(F.lit(j).alias("ccid"), F.col("cid").alias("scid"), "ce")
         for j, cj in enumerate(subs)

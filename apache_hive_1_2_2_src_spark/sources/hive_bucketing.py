@@ -59,10 +59,14 @@ tradeoff Hive itself has.
 
 from __future__ import annotations
 
+from functools import partial
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apache_hive_1_2_2_src_spark.registry import register
+from apache_hive_1_2_2_src_spark.streaming.epoch_store import concurrently
 from apache_hive_1_2_2_src_spark.tables import hadoop_fs, load_table
 
 _2_32 = 4_294_967_296
@@ -168,6 +172,86 @@ def _parquet_files(fs, path_cls, d: str) -> list[str]:
     )
 
 
+def _flatten_positional(
+    spark: SparkSession,
+    path: str,
+    staging: str,
+    parse: Callable[[list[str]], dict],
+    template: DataFrame,
+) -> None:
+    """The one positional-file flatten of the bucketed writers.
+    ``staging`` holds a ``partitionBy(..., "__hb")`` write; ``parse`` maps
+    its leaf files (decoded paths) to {(subdir, bucket) -> files}, with an
+    entry for every positional file the layout needs (subdir ``""`` is the
+    flat layout). Each file is renamed to ``path/<subdir>/<bucket>_0`` and
+    an empty pair gets a 0-row copy of ``template`` (Hive's reader
+    requires all n present). A pair split across files is refused BEFORE
+    any rename, a failed placement removes the output dir, and the
+    staging dir is removed in every case, so a reader can never mistake a
+    half-built directory for a complete bucketed table."""
+    from concurrent.futures import ThreadPoolExecutor
+    from urllib.parse import unquote, urlparse
+
+    jvm, fs, P = hadoop_fs(spark, path)
+    try:
+        # ONE inputFiles() round trip enumerates all staged leaf files
+        # (the JVM lists in parallel) — beats BOTH prior forms measured
+        # at n=1024: per-dir pooled listStatus 1.0 s (n py4j calls) and
+        # recursive listFiles 9.8 s (~3 gateway round-trips per file);
+        # at 100x128 the per-leaf listing was ~8.3 s of a 48.6 s nested
+        # write. Paths come back URI-encoded; one unquote recovers the
+        # on-disk names the renames need ('+' is untouched by unquote).
+        files = parse([
+            unquote(urlparse(f).path)
+            for f in spark.read.parquet(staging).inputFiles()
+        ])
+        split = {pb: fls for pb, fls in files.items() if len(fls) > 1}
+        if split:
+            # repartition + partitionBy puts each (subdir, bucket) in one
+            # task's output; >1 file means that invariant broke — refuse
+            # BEFORE any rename so no partial layout ever exists.
+            raise RuntimeError(f"buckets split across multiple files: {split}")
+        if any(not fls for fls in files.values()):
+            template.write.mode("overwrite").parquet(f"{staging}/__empty")
+            empty = P(_parquet_files(fs, P, f"{staging}/__empty")[0])
+        out = P(path)
+        if fs.exists(out):
+            fs.delete(out, True)
+
+        def _dir(subdir: str) -> str:
+            return f"{path}/{subdir}" if subdir else path
+
+        for subdir in dict.fromkeys(sd for sd, _ in files):
+            fs.mkdirs(P(_dir(subdir)))
+
+        def _place(pb: tuple[str, int]) -> None:
+            dest = P(f"{_dir(pb[0])}/{pb[1]:06d}_0")
+            if files[pb]:
+                if not fs.rename(P(files[pb][0]), dest):
+                    raise RuntimeError(f"rename failed for {pb}")
+            else:
+                jvm.org.apache.hadoop.fs.FileUtil.copy(
+                    fs, empty, fs, dest, False,
+                    spark._jsc.hadoopConfiguration(),
+                )
+
+        # Parallel placement: renames are driver-side FS metadata calls
+        # (py4j is thread-safe; HDFS/s3a clients too). Measured 0.8 s vs
+        # ~3 s sequential at n=1024 locally; on an object store at
+        # ~50 ms/rename the 16-way pool is the difference between minutes
+        # and seconds. All futures are AWAITED before any cleanup so a
+        # failure still tears down a quiescent out dir — no rename races
+        # the delete.
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            errs = [f.exception() for f in [pool.submit(_place, pb) for pb in files]]
+        first = next((e for e in errs if e is not None), None)
+        if first is not None:
+            fs.delete(out, True)  # never leave a partial layout
+            raise first
+    finally:
+        fs.delete(P(staging), True)
+
+
 def write_hive_bucketed(
     df: DataFrame,
     key: str,
@@ -190,16 +274,13 @@ def write_hive_bucketed(
 
     partitionBy gives exact bucket→directory routing (a plain
     ``repartition(n, col)`` re-hashes the bucket id with Spark's hash, so
-    file order would NOT be bucket order); the flatten pass then renames
-    directories into Hive's positional file naming via the Hadoop
-    FileSystem API. NULL keys route to bucket 0 (Hive's rule) — they never
-    reach partitionBy's __HIVE_DEFAULT_PARTITION__ path, which the round-8
-    version silently dropped. Empty buckets still get a schema-bearing
-    file (Hive's reader requires all n present). Every bucket is validated
-    single-file BEFORE the first rename, and any failure removes the
-    partial output and the staging dir (try/finally), so a concurrent
-    reader can never mistake a half-flattened directory for a complete
-    bucketed table."""
+    file order would NOT be bucket order); ``_flatten_positional`` then
+    renames the files into Hive's positional naming via the Hadoop
+    FileSystem API (single-file check before any rename, schema-bearing
+    files for empty buckets, no partial output on failure). NULL keys
+    route to bucket 0 (Hive's rule) — they never reach partitionBy's
+    __HIVE_DEFAULT_PARTITION__ path, which the round-8 version silently
+    dropped."""
     spark = df.sparkSession
     staging = path + ".__staging"
     staged = df.withColumn("__hb", hive_bucket_id(key, n_buckets, kind)).repartition(
@@ -208,67 +289,16 @@ def write_hive_bucketed(
     if sorted_by is not None:
         staged = staged.sortWithinPartitions("__hb", sorted_by)
     staged.write.mode("overwrite").partitionBy("__hb").parquet(staging)
-    jvm, fs, P = hadoop_fs(spark, path)
-    try:
-        # ONE inputFiles() round trip enumerates all staged leaf files
-        # (the JVM lists in parallel) — beats BOTH prior forms measured
-        # at n=1024: per-dir pooled listStatus 1.0 s (n py4j calls) and
-        # recursive listFiles 9.8 s (~3 gateway round-trips per file);
-        # on object stores this removes n × ~50 ms of listing entirely.
-        # Same pattern as write_hive_partitioned_bucketed (r12 audit).
-        from concurrent.futures import ThreadPoolExecutor
-        from urllib.parse import unquote, urlparse
 
-        bucket_files: dict[int, list[str]] = {b: [] for b in range(n_buckets)}
-        for f in spark.read.parquet(staging).inputFiles():
-            segs = urlparse(f).path.split("/")
-            b = int(unquote(segs[-2]).split("=", 1)[1])
-            bucket_files[b].append(unquote(urlparse(f).path))
-        split = {b: fls for b, fls in bucket_files.items() if len(fls) > 1}
-        if split:
-            # repartition(n, __hb) + partitionBy puts each bucket in one
-            # task's output; >1 file means that invariant broke — refuse
-            # BEFORE any rename so no partial flat layout ever exists.
-            raise RuntimeError(f"buckets split across multiple files: {split}")
-        template = None
-        if any(not fls for fls in bucket_files.values()):
-            # partitionBy strips only __hb, so bucket files carry the full
-            # row schema; empty buckets get a 0-row copy of that schema.
-            df.limit(0).write.mode("overwrite").parquet(f"{staging}/__empty")
-            template = _parquet_files(fs, P, f"{staging}/__empty")[0]
-        out = P(path)
-        if fs.exists(out):
-            fs.delete(out, True)
-        fs.mkdirs(out)
-        def _place(b: int) -> None:
-            dest = P(f"{path}/{b:06d}_0")
-            if bucket_files[b]:
-                if not fs.rename(P(bucket_files[b][0]), dest):
-                    raise RuntimeError(f"rename failed for bucket {b}")
-            else:
-                jvm.org.apache.hadoop.fs.FileUtil.copy(
-                    fs, P(template), fs, dest, False,
-                    spark._jsc.hadoopConfiguration(),
-                )
+    def parse(leaves: list[str]) -> dict:
+        files: dict = {("", b): [] for b in range(n_buckets)}
+        for f in leaves:
+            files["", int(f.split("/")[-2].split("=", 1)[1])].append(f)
+        return files
 
-        # Parallel placement: renames are driver-side FS metadata calls
-        # (py4j is thread-safe; HDFS/s3a clients too). Measured 0.8 s vs
-        # ~3 s sequential at n=1024 locally; on an object store at
-        # ~50 ms/rename the 16-way pool is the difference between minutes
-        # and seconds. All futures are AWAITED before any cleanup so a
-        # failure still tears down a quiescent out dir — no rename races
-        # the delete.
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            errs = [
-                f.exception()
-                for f in [pool.submit(_place, b) for b in range(n_buckets)]
-            ]
-        first = next((e for e in errs if e is not None), None)
-        if first is not None:
-            fs.delete(out, True)  # never leave a partial flat layout
-            raise first
-    finally:
-        fs.delete(P(staging), True)
+    # partitionBy strips only __hb, so bucket files carry the full row
+    # schema; empty buckets get a 0-row copy of that schema.
+    _flatten_positional(spark, path, staging, parse, df.limit(0))
 
 
 def read_hive_bucketed(
@@ -1034,19 +1064,12 @@ def hive_smb_merge_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders write leaves idle. Each write is internally atomic
     # (staging + validate-before-rename), so concurrency cannot produce
     # a partial layout.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fo = pool.submit(
-            write_hive_bucketed, o, "o_custkey", n, op,
-            kind="long", sorted_by="o_custkey",
-        )
-        fc = pool.submit(
-            write_hive_bucketed, c, "c_custkey", n, cp,
-            kind="long", sorted_by="c_custkey",
-        )
-        fo.result()
-        fc.result()
+    concurrently(
+        partial(write_hive_bucketed, o, "o_custkey", n, op,
+                kind="long", sorted_by="o_custkey"),
+        partial(write_hive_bucketed, c, "c_custkey", n, cp,
+                kind="long", sorted_by="c_custkey"),
+    )
     joined = hive_smb_merge_join(
         spark, op, cp, n, "o_custkey", "c_custkey", kind="long", sub_split=2
     )
@@ -1096,7 +1119,8 @@ def write_hive_partitioned_bucketed(
 
     One shuffle total: ``repartition(part_col, __hb)`` co-locates each
     (partition, bucket) pair in a single task, so partitionBy emits ONE
-    file per leaf dir (validated before any rename, like the flat writer).
+    file per leaf dir (validated before any rename by the writers' one
+    ``_flatten_positional``).
     NULL partition values route to Hive's ``__HIVE_DEFAULT_PARTITION__``
     directory (Spark writes the identical name). NULL KEYS route to bucket
     0 within their partition. Buckets empty WITHIN a partition still get a
@@ -1118,78 +1142,24 @@ def write_hive_partitioned_bucketed(
     if sorted_by is not None:
         staged = staged.sortWithinPartitions(part_col, "__hb", sorted_by)
     staged.write.mode("overwrite").partitionBy(part_col, "__hb").parquet(staging)
-    jvm, fs, P = hadoop_fs(spark, path)
-    from concurrent.futures import ThreadPoolExecutor
 
-    try:
-        # ONE driver call enumerates every staged leaf file: inputFiles()
-        # returns the whole listing in a single py4j round trip (the JVM
-        # lists in parallel), vs p·n per-leaf-dir listStatus calls —
-        # measured at 100×128: the pooled-listing phase was ~8.3 s of a
-        # 48.6 s write locally (0.65 ms/call; ~50 ms/call on object
-        # stores would make it minutes). Paths come back URI-encoded;
-        # unquote once per segment to recover the on-disk names the
-        # renames need (single-level decode — the URI layer only; '+' is
-        # untouched by unquote).
-        from urllib.parse import unquote, urlparse
-
-        leaf = spark.read.parquet(staging).inputFiles()
-        files: dict[tuple[str, int], list[str]] = {}
-        part_set: set[str] = set()
-        for f in leaf:
-            segs = urlparse(f).path.split("/")
-            part_dir = unquote(segs[-3])
+    def parse(leaves: list[str]) -> dict:
+        files: dict = {}
+        for f in leaves:
+            part_dir, hb = f.split("/")[-3:-1]
             if not part_dir.startswith(f"{part_col}="):
                 raise RuntimeError(f"unexpected staged path layout: {f}")
-            b = int(unquote(segs[-2]).split("=", 1)[1])
-            part_set.add(part_dir)
-            files.setdefault((part_dir, b), []).append(
-                unquote(urlparse(f).path)
-            )
-        part_dirs = sorted(part_set)
+            files.setdefault((part_dir, int(hb.split("=", 1)[1])), []).append(f)
+        part_dirs = sorted({pd_ for pd_, _ in files})
         if not part_dirs:
             raise ValueError(f"no {part_col}= partitions produced at {staging}")
-        pairs = [(pd_, b) for pd_ in part_dirs for b in range(n_buckets)]
-        for pb in pairs:
-            files.setdefault(pb, [])
-        split = {pb: fls for pb, fls in files.items() if len(fls) > 1}
-        if split:
-            raise RuntimeError(
-                f"(partition, bucket) pairs split across files: {split}"
-            )
-        template = None
-        if any(not fls for fls in files.values()):
-            # data files carry the row schema MINUS part_col and __hb
-            df.limit(0).drop(part_col).write.mode("overwrite").parquet(
-                f"{staging}/__empty"
-            )
-            template = _parquet_files(fs, P, f"{staging}/__empty")[0]
-        out = P(path)
-        if fs.exists(out):
-            fs.delete(out, True)
-        for pd_ in part_dirs:
-            fs.mkdirs(P(f"{path}/{pd_}"))
+        return {
+            (pd_, b): files.get((pd_, b), [])
+            for pd_ in part_dirs for b in range(n_buckets)
+        }
 
-        def _place(pb) -> None:
-            pd_, b = pb
-            dest = P(f"{path}/{pd_}/{b:06d}_0")
-            if files[pb]:
-                if not fs.rename(P(files[pb][0]), dest):
-                    raise RuntimeError(f"rename failed for {pb}")
-            else:
-                jvm.org.apache.hadoop.fs.FileUtil.copy(
-                    fs, P(template), fs, dest, False,
-                    spark._jsc.hadoopConfiguration(),
-                )
-
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            errs = [f.exception() for f in [pool.submit(_place, pb) for pb in pairs]]
-        first = next((e for e in errs if e is not None), None)
-        if first is not None:
-            fs.delete(out, True)  # never leave a partial nested layout
-            raise first
-    finally:
-        fs.delete(P(staging), True)
+    # data files carry the row schema MINUS part_col and __hb
+    _flatten_positional(spark, path, staging, parse, df.limit(0).drop(part_col))
 
 
 # read_hive_partitioned_bucketed completeness-check cache:

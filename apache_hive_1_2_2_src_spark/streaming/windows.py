@@ -25,6 +25,7 @@ store of the foreachBatch probes (its docstring states the store contract).
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -444,31 +445,69 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _latest(df: DataFrame) -> DataFrame:
+    """Per-user latest row, argmax by (ts, event_id): the merge of both
+    upsert drains."""
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    return (
+        df.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select("user_id", "ts", "event_id", "value")
+    )
+
+
+def _reclaim_generation(fs, P, path: str, side: str) -> bool:
+    """Entry-time crash reclamation for the ``path`` / ``path__old`` /
+    ``path<side>`` generation-swap layout that ``_swap_generation``
+    leaves, on the Hadoop FS API (file://, hdfs://, s3a://):
+
+    - ``path`` present: any ``__old``/``<side>`` sidecars are stale
+      leftovers of an interrupted prior swap — deleted.
+    - ``path`` absent + ``__old`` present: crashed inside the two-rename
+      window. ``<side>`` (validated before the window opened) is renamed
+      into place if present, else ``__old`` is restored; a complete
+      generation reappears either way, never a mix.
+    - neither present: nothing to reclaim.
+
+    Returns whether ``path`` exists afterwards."""
+    tgt, old, nxt = P(path), P(path + "__old"), P(path + side)
+    if fs.exists(tgt):
+        fs.delete(old, True)
+        fs.delete(nxt, True)
+        return True
+    if not fs.exists(old):
+        return False
+    done = fs.exists(nxt) and fs.rename(nxt, tgt)
+    if not done and not fs.rename(old, tgt):
+        raise RuntimeError(f"could not restore {path} from __old")
+    fs.delete(old, True)
+    fs.delete(nxt, True)
+    return True
+
+
+def _swap_generation(fs, P, path: str, side: str) -> None:
+    """Swap the written and validated side dir ``path<side>`` into place:
+    rename(path -> __old), rename(side -> path), delete __old. A failed
+    second rename puts the original back before raising. The caller
+    validates the side dir BEFORE calling, which is what makes
+    ``_reclaim_generation``'s promote-the-side-dir rule safe."""
+    tgt, old, nxt = P(path), P(path + "__old"), P(path + side)
+    if fs.exists(tgt) and not fs.rename(tgt, old):
+        raise RuntimeError(f"rename {path} -> __old failed; {path} untouched")
+    if not fs.rename(nxt, tgt):
+        fs.rename(old, tgt)  # put the original back before failing
+        raise RuntimeError(f"rename {side} -> {path} failed; restored")
+    fs.delete(old, True)
+
+
 def reclaim_state_generation(sess: SparkSession, state: str) -> None:
     """Entry-time crash reclamation for the ``state`` / ``state__old`` /
-    ``state__next`` generation-swap layout (the compact_partitioned_store
-    discipline, on the Hadoop FS API — file://, hdfs://, s3a://):
-
-    - ``state`` present: any ``__old``/``__next`` sidecars are stale
-      leftovers of an interrupted prior swap — deleted.
-    - ``state`` absent + ``__old`` present: crashed inside the two-rename
-      window. ``__next`` (validated before the window opened — see
-      commit_state_generation) is renamed into place if present, else
-      ``__old`` is restored; a complete state table reappears either way,
-      never a mix.
-    - neither present: first generation, nothing to reclaim.
-    """
+    ``state__next`` layout of commit_state_generation
+    (``_reclaim_generation``)."""
     _, fs, P = hadoop_fs(sess, state)
-    tgt, told, tgen = P(state), P(state + "__old"), P(state + "__next")
-    if fs.exists(tgt):
-        fs.delete(told, True)
-        fs.delete(tgen, True)
-    elif fs.exists(told):
-        done = fs.exists(tgen) and fs.rename(tgen, tgt)
-        if not done and not fs.rename(told, tgt):
-            raise RuntimeError(f"could not restore {state} from __old")
-        fs.delete(told, True)
-        fs.delete(tgen, True)
+    _reclaim_generation(fs, P, state, "__next")
 
 
 def commit_state_generation(
@@ -484,21 +523,15 @@ def commit_state_generation(
     reading races file deletion, and a crash mid-overwrite would lose
     state merged by checkpoint-committed earlier batches."""
     _, fs, P = hadoop_fs(sess, state)
-    tgt, told, tgen = P(state), P(state + "__old"), P(state + "__next")
     gen.write.mode("overwrite").parquet(state + "__next")
     n_gen = sess.read.parquet(state + "__next").count()
     if n_gen != expected_rows:
-        fs.delete(tgen, True)
+        fs.delete(P(state + "__next"), True)
         raise RuntimeError(
             f"state generation row count {n_gen} != expected "
             f"{expected_rows}; {state} untouched"
         )
-    if fs.exists(tgt) and not fs.rename(tgt, told):
-        raise RuntimeError(f"rename {state} -> __old failed; state untouched")
-    if not fs.rename(tgen, tgt):
-        fs.rename(told, tgt)  # put the original back before failing
-        raise RuntimeError(f"rename __next -> {state} failed; restored")
-    fs.delete(told, True)
+    _swap_generation(fs, P, state, "__next")
 
 
 @register(
@@ -528,7 +561,7 @@ def commit_state_generation(
     "cluster the overwrite becomes MERGE INTO on a transactional table "
     "with the identical foreachBatch body. The state-generation swap "
     "runs on the Hadoop FS API with validate-before-rename + entry-time "
-    "crash reclamation (r19 — the compact_partitioned_store discipline; "
+    "crash reclamation (r19 — the one generation swap, _swap_generation; "
     "crash states pinned in tests/test_round19_ops.py), so the same "
     "body also runs against hdfs:// and s3a:// state locations. The "
     "full-state rewrite per batch is this form's write-amplification "
@@ -540,26 +573,14 @@ def commit_state_generation(
 def streaming_foreachbatch_upsert(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    from pyspark.sql.window import Window
-
     base = scratch_dir("upsert")
     state, ckpt = os.path.join(base, "state"), os.path.join(base, "ckpt")
     inbox = _stage_events_inbox(spark, sf_dir)
 
-    def latest(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        return (
-            df.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("user_id", "ts", "event_id", "value")
-        )
-
     def merge(batch: DataFrame, _epoch: int) -> None:
         # State-generation swap on the Hadoop FS API (r19 — VERDICT r18
-        # item 2, the compact_partitioned_store discipline): runs unchanged
-        # against file://, hdfs://, s3a:// state locations — this was the
+        # item 2, through _reclaim_generation and _swap_generation): runs
+        # unchanged against file://, hdfs://, s3a:// state locations — this was the
         # last os.rename state mutation in a registered query. Crash
         # states are reclaimed at entry and the new generation is
         # validated before the first rename (helpers below; pinned in
@@ -576,7 +597,7 @@ def streaming_foreachbatch_upsert(
         # row count must equal the input's distinct-user count — the
         # validation commit_state_generation checks before renaming.
         n_users = cur.select("user_id").distinct().count()
-        commit_state_generation(sess, state, latest(cur), n_users)
+        commit_state_generation(sess, state, _latest(cur), n_users)
 
     # A multi-batch drain rewrites the full state table per batch — slower
     # than the single-batch queries' 120 s budget.
@@ -607,8 +628,9 @@ def _bucketed_upsert_drain(
 ) -> None:
     """Drain ``inbox`` into a BUCKETED latest-state store: per-user argmax
     state hash-partitioned into ``n_buckets`` independent generation-swap
-    dirs (``state/b00000`` ...), each governed by the
-    reclaim/commit_state_generation crash discipline. Each micro-batch
+    dirs (``state/b00000`` ...), each reclaimed and swapped by the one
+    generation swap (``_reclaim_generation``/``_swap_generation``, side
+    dir ``__next``). Each micro-batch
     rewrites ONLY the buckets its users hash into — the flat upsert's
     full-state rewrite (O(epochs x |users|) write amplification,
     SCALE.md r19) becomes O(epochs x |touched buckets| x |bucket|), the
@@ -623,23 +645,12 @@ def _bucketed_upsert_drain(
     so re-merging converges both generations to the same fixpoint (the
     same argument as the flat form's re-delivery, pinned in
     tests/test_round19_ops.py)."""
-    from pyspark.sql.window import Window
 
     def ub_of(c: str):
         return F.pmod(F.xxhash64(F.col(c)), F.lit(n_buckets)).cast("int")
 
     def bdir(j: int) -> str:
         return f"{state}/b{j:05d}"
-
-    def latest(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        return (
-            df.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("user_id", "ts", "event_id", "value")
-        )
 
     LAST_BUCKETED_UPSERT.clear()
     LAST_BUCKETED_UPSERT.update(
@@ -653,10 +664,10 @@ def _bucketed_upsert_drain(
         side = state + "__next_root"
         # entry-time reclaim: a stale side root is a pre-swap crash (state
         # intact — delete it); each bucket dir reclaims its own crash
-        # states through the shared helper.
+        # states through the one generation reclaim.
         fs.delete(P(side), True)
         for j in range(n_buckets):
-            reclaim_state_generation(sess, bdir(j))
+            _reclaim_generation(fs, P, bdir(j), "__next")
         cur = batch.select("user_id", "ts", "event_id", "value").withColumn(
             "ub", ub_of("user_id")
         )
@@ -672,7 +683,7 @@ def _bucketed_upsert_drain(
                     "ub", ub_of("user_id")
                 )
             )
-        merged = latest(cur).withColumn("ub", ub_of("user_id"))
+        merged = _latest(cur).withColumn("ub", ub_of("user_id"))
         merged.repartition(len(touched), "ub").write.partitionBy(
             "ub"
         ).parquet(side)
@@ -701,12 +712,7 @@ def _bucketed_upsert_drain(
             b = bdir(j)
             if not fs.rename(P(f"{side}/ub={j}"), P(b + "__next")):
                 raise RuntimeError(f"rename side -> {b}__next failed")
-            if fs.exists(P(b)) and not fs.rename(P(b), P(b + "__old")):
-                raise RuntimeError(f"rename {b} -> __old failed")
-            if not fs.rename(P(b + "__next"), P(b)):
-                fs.rename(P(b + "__old"), P(b))
-                raise RuntimeError(f"rename __next -> {b} failed; restored")
-            fs.delete(P(b + "__old"), True)
+            _swap_generation(fs, P, b, "__next")
         fs.delete(P(side), True)
         LAST_BUCKETED_UPSERT["touched"].append(touched)
         # rows rewritten this epoch == the validated per-bucket sums
@@ -1173,18 +1179,12 @@ def compact_partitioned_store(
     ``inputFiles()`` round trip (the r12-measured fast listing, see
     write_hive_bucketed) rather than per-file gateway calls.
 
-    Crash contract (validate-before-rename, hive_bucketing discipline):
-    the side store is fully written AND row-count-validated before the
-    first rename, so every reachable crash state is recoverable and THIS
-    function reclaims it at entry:
-    - ``path`` present: any ``__old``/``__compact`` sidecars are stale
-      leftovers of an interrupted prior run — deleted, then compaction
-      proceeds normally.
-    - ``path`` absent + ``__old`` present: crashed inside the two-rename
-      window. ``__compact`` (validated before the window opened) is
-      renamed into place if present, else ``__old`` is restored — the
-      store reappears either way, never a mix.
-    A reader CAN observe a missing ``path`` inside the two-rename window
+    Crash contract: the side store ``__compact`` is fully written AND
+    row-count-validated before ``_swap_generation`` renames it into
+    place, and ``_reclaim_generation`` reclaims every crash state at
+    entry (stale sidecars deleted; an interrupted swap finished or rolled
+    back); with neither ``path`` nor ``__old`` it raises
+    FileNotFoundError. A reader CAN observe a missing ``path`` inside the two-rename window
     itself (rename(path, old) committed, rename(side, path) not yet) —
     run the compactor between drops with probes quiesced, exactly like
     the ACID Cleaner runs between transactions. On HDFS each rename is
@@ -1192,18 +1192,7 @@ def compact_partitioned_store(
     copy+delete, so the quiesce window is longer but the entry-time
     reclaim still restores any interruption."""
     _, fs, P = hadoop_fs(spark, path)
-    tgt, old, side = P(path), P(path + "__old"), P(path + "__compact")
-
-    if fs.exists(tgt):
-        fs.delete(old, True)
-        fs.delete(side, True)
-    elif fs.exists(old):
-        done = fs.exists(side) and fs.rename(side, tgt)
-        if not done and not fs.rename(old, tgt):
-            raise RuntimeError(f"could not restore {path} from __old")
-        fs.delete(old, True)
-        fs.delete(side, True)
-    else:
+    if not _reclaim_generation(fs, P, path, "__compact"):
         raise FileNotFoundError(f"no store at {path} (and no __old to reclaim)")
 
     def _nfiles() -> int:
@@ -1240,7 +1229,7 @@ def compact_partitioned_store(
         .collect()
     }
     if src_counts != side_counts:
-        fs.delete(side, True)
+        fs.delete(P(path + "__compact"), True)
         bad = sorted(
             str(v)
             for v in set(src_counts) | set(side_counts)
@@ -1250,12 +1239,7 @@ def compact_partitioned_store(
             f"compacted store per-partition counts diverge at "
             f"{part_col}={bad[:5]}; store untouched"
         )
-    if not fs.rename(tgt, old):
-        raise RuntimeError(f"rename {path} -> __old failed; store untouched")
-    if not fs.rename(side, tgt):
-        fs.rename(old, tgt)  # put the original back before failing
-        raise RuntimeError(f"rename __compact -> {path} failed; restored")
-    fs.delete(old, True)
+    _swap_generation(fs, P, path, "__compact")
     return before, _nfiles()
 
 
@@ -1746,33 +1730,50 @@ def streaming_dedup_collapse_incremental(
     return _collapsed_probe_dedup(spark, sf_dir, n_batches=3)
 
 
+def _publish_partition_deltas(
+    sp: SparkSession,
+    table: str,
+    part_col: str,
+    batch_id: int,
+    write_stage: Callable[[str], None],
+) -> None:
+    """The one partition-delta publish: ``write_stage`` writes micro-batch
+    ``batch_id`` as a ``<part_col>=<v>`` tree into the dot-prefixed
+    ``table/.stage_{batch_id+1}`` (invisible to partition discovery and
+    the acid resolver while half-written), then each staged ``pt=v`` dir
+    is renamed to ``table/pt=v/delta_{batch_id+1}_{batch_id+1}`` and the
+    stage is removed. A replayed batch_id deletes ITS OWN delta dirs
+    before renaming, so the replay replaces rather than double-appends."""
+    delta = f"delta_{batch_id + 1}_{batch_id + 1}"
+    stage = f"{table}/.stage_{batch_id + 1}"
+    write_stage(stage)
+    _, fs, P = hadoop_fs(sp, table)
+    for st in fs.listStatus(P(stage)):
+        name = st.getPath().getName()
+        if not name.startswith(f"{part_col}="):
+            continue
+        dest = P(f"{table}/{name}/{delta}")
+        # retry semantics: clobber THIS batch's own delta dir only
+        if fs.exists(dest):
+            fs.delete(dest, True)
+        fs.mkdirs(P(f"{table}/{name}"))
+        if not fs.rename(st.getPath(), dest):
+            raise RuntimeError(f"rename failed: {name}/{delta}")
+    fs.delete(P(stage), True)
+
+
 def write_partitioned_delta(
     rows: DataFrame, table: str, part_col: str, batch_id: int
 ) -> None:
     """Write one micro-batch as per-partition delta dirs —
-    ``table/<part_col>=<v>/delta_{batch_id+1}_{batch_id+1}`` — via a
-    dot-prefixed staging dir (invisible to partition discovery AND to the
-    acid resolver while half-written) followed by per-partition renames.
-    Retry-idempotent: a replayed batch_id deletes ITS OWN delta dirs
-    before renaming, so the replay replaces rather than double-appends
-    (pinned by the redrain test in tests/test_acid_dirs.py)."""
-    delta = f"delta_{batch_id + 1}_{batch_id + 1}"
-    stage = f"{table}/.stage_{batch_id + 1}"
-    rows.write.mode("overwrite").partitionBy(part_col).parquet(stage)
-    sp = rows.sparkSession
-    _, fs_, P_ = hadoop_fs(sp, table)
-    for st_ in fs_.listStatus(P_(stage)):
-        name = st_.getPath().getName()
-        if not name.startswith(f"{part_col}="):
-            continue
-        dest = P_(f"{table}/{name}/{delta}")
-        # retry semantics: clobber THIS batch's own delta dir only
-        if fs_.exists(dest):
-            fs_.delete(dest, True)
-        fs_.mkdirs(P_(f"{table}/{name}"))
-        if not fs_.rename(st_.getPath(), dest):
-            raise RuntimeError(f"rename failed: {name}/{delta}")
-    fs_.delete(P_(stage), True)
+    ``table/<part_col>=<v>/delta_{batch_id+1}_{batch_id+1}`` — through
+    ``_publish_partition_deltas`` (retry-idempotent; pinned by the
+    redrain test in tests/test_acid_dirs.py)."""
+    _publish_partition_deltas(
+        rows.sparkSession, table, part_col, batch_id,
+        lambda stage: rows.write.mode("overwrite")
+        .partitionBy(part_col).parquet(stage),
+    )
 
 
 @register(
@@ -1977,25 +1978,12 @@ def write_partitioned_bucketed_delta(
     it via a final symlink/manifest swap."""
     from apache_hive_1_2_2_src_spark.sources.hive_bucketing import write_hive_partitioned_bucketed
 
-    delta = f"delta_{batch_id + 1}_{batch_id + 1}"
-    stage = f"{table}/.stage_{batch_id + 1}"
-    write_hive_partitioned_bucketed(
-        rows, part_col, key, n_buckets, stage, kind=kind
+    _publish_partition_deltas(
+        rows.sparkSession, table, part_col, batch_id,
+        lambda stage: write_hive_partitioned_bucketed(
+            rows, part_col, key, n_buckets, stage, kind=kind
+        ),
     )
-    sp = rows.sparkSession
-    _, fs_, P_ = hadoop_fs(sp, table)
-    for st_ in fs_.listStatus(P_(stage)):
-        name = st_.getPath().getName()
-        if not name.startswith(f"{part_col}="):
-            continue
-        dest = P_(f"{table}/{name}/{delta}")
-        # retry semantics: clobber THIS batch's own delta dir only
-        if fs_.exists(dest):
-            fs_.delete(dest, True)
-        fs_.mkdirs(P_(f"{table}/{name}"))
-        if not fs_.rename(st_.getPath(), dest):
-            raise RuntimeError(f"rename failed: {name}/{delta}")
-    fs_.delete(P_(stage), True)
 
 
 @register(

@@ -111,3 +111,27 @@ def test_kmeans_train_invariants_across_sfs(spark, registry, sf):
     n = load_table(spark, sf_dir, "embeddings").count()
     got = registry["similarity_kmeans_train"].build(spark, sf_dir).collect()
     assert [tuple(r) for r in got] == [(n, 8, True)]
+
+
+def test_quantized_centroids_match_the_oracle_replay_unrounded(spark, oracle_con):
+    """The trained centroids themselves, unrounded, against the DuckDB
+    replay every trained-clustering oracle shares (``_kmq_train_ctes``).
+    The registered queries only see the centroids through rounded scores
+    and cell assignments, which a changed quantum on one side can leave
+    unmoved; each coordinate here must agree to 1e-9."""
+    from apache_hive_1_2_2_src_spark.extensions.similarity import (
+        _KMQ_ITERS,
+        _KMQ_K,
+        _kmq_train_ctes,
+    )
+
+    e = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    got = {r.cid: r.ce for r in kmeans_centroids_quantized(e, _KMQ_K, _KMQ_ITERS).collect()}
+    ctes, cur = _kmq_train_ctes()
+    sql = "WITH " + "\n".join(ctes).rstrip().rstrip(",") + f"\nSELECT cid, ce FROM {cur}"
+    want = {cid: ce for cid, ce in oracle_con.execute(sql).fetchall()}
+    assert set(got) == set(want)
+    for cid, ce in want.items():
+        assert len(got[cid]) == len(ce), cid
+        worst = max(abs(a - b) for a, b in zip(got[cid], ce))
+        assert worst <= 1e-9, (cid, worst)

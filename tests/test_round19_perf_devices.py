@@ -1,7 +1,8 @@
 """r19 optimization-device pins: the performance devices introduced in
 the first optimization round must be result-invariant.
 
-- _materialize_all (concurrent independent chain training) must produce
+- concurrently(_materialize, ...) (concurrent independent chain
+  training, as in similarity._pq_encode) must produce
   bit-identical codebooks to sequential training: the chains share no
   state, and the quantized trainer is partitioning/lineage-invariant
   (tests/test_kmeans.py), so any divergence here would mean the thread
@@ -14,16 +15,18 @@ the first optimization round must be result-invariant.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
 from apache_hive_1_2_2_src_spark.extensions.similarity import (
     _ivf_probe2_report,
     _materialize,
-    _materialize_all,
     _spread,
     kmeans_centroids_quantized,
 )
+from apache_hive_1_2_2_src_spark.streaming.epoch_store import concurrently
 from apache_hive_1_2_2_src_spark.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -48,7 +51,7 @@ def test_concurrent_chain_training_matches_sequential(spark, emb):
         )
         for m in range(4)
     ]
-    concurrent = _materialize_all(chains)
+    concurrent = concurrently(*(partial(_materialize, c) for c in chains))
     sequential = [
         _materialize(
             kmeans_centroids_quantized(

@@ -38,8 +38,6 @@ def main() -> None:
     args = [int(a) for a in sys.argv[1:]]
     U, E, u, k = (args + [50_000, 12, 8, 64][len(args):])[:4]
     spark = get_session("upsert-rewrite-audit")
-    from pyspark.sql.window import Window
-
     from apache_hive_1_2_2_src_spark.streaming import windows as sw
 
     base = "/tmp/upsert_rewrite_audit"
@@ -73,16 +71,6 @@ def main() -> None:
     state_f = os.path.join(base, "state_flat")
     flat_rows: list[int] = []
 
-    def latest(df):
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        return (
-            df.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("user_id", "ts", "event_id", "value")
-        )
-
     def merge_flat(batch, _epoch):
         sess = batch.sparkSession
         sw.reclaim_state_generation(sess, state_f)
@@ -94,7 +82,7 @@ def main() -> None:
             cur = cur.unionByName(sess.read.parquet(state_f))
         n_users = cur.select("user_id").distinct().count()
         flat_rows.append(n_users)
-        sw.commit_state_generation(sess, state_f, latest(cur), n_users)
+        sw.commit_state_generation(sess, state_f, sw._latest(cur), n_users)
 
     t0 = time.time()
     drain(
