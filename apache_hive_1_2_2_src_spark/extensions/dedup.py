@@ -1608,10 +1608,10 @@ _PHASH_BUCKET_CAP = 16
 _PHASH_HAMMING_MAX = 10
 
 
-# Shared CTE chain (no WITH prefix): fixture formulas -> integer DCT
-# pHash -> interleaved bands -> capped pigeonhole candidate join ->
-# Hamming filter. dedup_image_phash aggregates `kept` by pair kind; the
-# clusters query closes it transitively with a recursive CTE.
+# pHash CTE chain (no WITH prefix): fixture formulas -> integer DCT
+# pHash -> interleaved bands; _banded_sql continues it to the `kept`
+# pairs. dedup_image_phash aggregates `kept` by pair kind; the clusters
+# query closes it transitively with a recursive CTE.
 _PHASH_CTES_TEMPLATE = """cos_t AS (__PHASH_COS_SQL__),
     docs AS (
       SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h
@@ -1676,8 +1676,16 @@ _PHASH_CTES_TEMPLATE = """cos_t AS (__PHASH_COS_SQL__),
       SELECT doc_id, variant, vcode, p % 4 AS band_idx,
              CAST(SUM(bit * (1 << (p // 4))) AS INTEGER) AS band_val
       FROM bits GROUP BY doc_id, variant, vcode, p % 4
-    ),
-    fp AS (
+    ),"""
+
+
+def _banded_sql(cap: int, hmax: int) -> str:
+    """The oracles' banded-Hamming tail (no WITH prefix): from
+    ``bands(doc_id, variant, vcode, band_idx, band_val)`` through the
+    four-band fingerprint, the hot-bucket cap, the pigeonhole candidate
+    join and the Hamming filter to ``kept(ka, kb, da, db, va, vb,
+    hamming)``."""
+    return f"""fp AS (
       SELECT doc_id, variant, vcode, doc_id * 10 + vcode AS key,
              MAX(CASE WHEN band_idx = 0 THEN band_val END) AS b0,
              MAX(CASE WHEN band_idx = 1 THEN band_val END) AS b1,
@@ -1693,7 +1701,7 @@ _PHASH_CTES_TEMPLATE = """cos_t AS (__PHASH_COS_SQL__),
       FROM fp f
       JOIN bands b ON b.doc_id = f.doc_id AND b.vcode = f.vcode
     ),
-    cool AS (SELECT * FROM buck WHERE bucket_n <= __CAP__),
+    cool AS (SELECT * FROM buck WHERE bucket_n <= {cap}),
     cand AS (
       SELECT DISTINCT
              a.key AS ka, b.key AS kb, a.doc_id AS da, b.doc_id AS db,
@@ -1711,26 +1719,13 @@ _PHASH_CTES_TEMPLATE = """cos_t AS (__PHASH_COS_SQL__),
     ),
     kept AS (
       SELECT ka, kb, da, db, va, vb, hamming
-      FROM pairs WHERE hamming <= __HMAX__
+      FROM pairs WHERE hamming <= {hmax}
     )"""
 
 
-def _phash_ctes(cap: int = _PHASH_BUCKET_CAP) -> str:
-    from apache_hive_1_2_2_src_spark.extensions.multimodal import (
-        _PHASH_COS_SQL,
-    )
-
-    return (
-        _PHASH_CTES_TEMPLATE
-        .replace("__PHASH_COS_SQL__", _PHASH_COS_SQL)
-        .replace("__CAP__", str(cap))
-        .replace("__HMAX__", str(_PHASH_HAMMING_MAX))
-    )
-
-
-def _phash_oracle() -> str:
-    return (
-        "WITH " + _phash_ctes() + """
+# the pair-kind summary of a banded `kept` pair set (image pHash, audio
+# fingerprint)
+_BANDED_SUMMARY_SQL = """
     SELECT CASE WHEN da = db THEN va || '-' || vb
                 ELSE 'cross' END AS pair_kind,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
@@ -1741,54 +1736,84 @@ def _phash_oracle() -> str:
     FROM kept
     GROUP BY CASE WHEN da = db THEN va || '-' || vb ELSE 'cross' END
     """
+
+
+def _phash_ctes(cap: int = _PHASH_BUCKET_CAP) -> str:
+    from apache_hive_1_2_2_src_spark.extensions.multimodal import (
+        _PHASH_COS_SQL,
+    )
+
+    return (
+        _PHASH_CTES_TEMPLATE.replace("__PHASH_COS_SQL__", _PHASH_COS_SQL)
+        + "\n    "
+        + _banded_sql(cap, _PHASH_HAMMING_MAX)
     )
 
 
-def _phash_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared pHash near-dup pair pipeline (decode -> hash -> bands
-    -> capped bucket join -> Hamming filter): one row per surviving pair
-    (ka, kb, da, db, va, vb, hamming) — dedup_image_phash aggregates it
-    by pair kind, dedup_image_phash_clusters closes it transitively."""
+def _phash_oracle() -> str:
+    return "WITH " + _phash_ctes() + _BANDED_SUMMARY_SQL
+
+
+def _decode_payloads(
+    pay: DataFrame, corpus: str, kernel, cols: tuple[str, ...]
+) -> DataFrame:
+    """The one decode runner of the media dedup family: one Arrow pass
+    of ``kernel(payload bytes) -> iterable of row tuples`` over a staged
+    ``(doc_id, variant, payload)`` frame. ``cols`` are the kernel's
+    output columns ("name type"). Returns (key, doc_id, variant,
+    *cols), key = doc_id*10 + vcode, vcode = the variant's position in
+    multimodal.fixture_variants(corpus)."""
     import pandas as pd
 
     from apache_hive_1_2_2_src_spark.extensions.multimodal import (
-        phash64_bands,
-        stage_phash_payloads,
+        fixture_variants,
     )
 
-    pay = spark.read.parquet(stage_phash_payloads(spark, sf_dir))
+    names = [c.split()[0] for c in cols]
 
-    def hash_batches(batches):
+    def fp_batches(batches):
         for pdf in batches:
-            out = {"doc_id": [], "variant": [], "b0": [], "b1": [],
-                   "b2": [], "b3": []}
+            out = {n: [] for n in ("doc_id", "variant", *names)}
             for doc_id, variant, payload in zip(
                 pdf["doc_id"], pdf["variant"], pdf["payload"]
             ):
-                h = phash64_bands(bytes(payload))
-                out["doc_id"].append(int(doc_id))
-                out["variant"].append(str(variant))
-                for i in range(4):
-                    out[f"b{i}"].append(h[i])
+                for row in kernel(bytes(payload)):
+                    out["doc_id"].append(int(doc_id))
+                    out["variant"].append(str(variant))
+                    for n, v in zip(names, row):
+                        out[n].append(v)
             yield pd.DataFrame(out)
 
-    fp = (
+    variants = fixture_variants(corpus)
+    vcode = F.when(F.col("variant") == variants[0], 0)
+    for code, v in enumerate(variants[1:-1], 1):
+        vcode = vcode.when(F.col("variant") == v, code)
+    return (
         pay.mapInPandas(
-            hash_batches,
-            "doc_id bigint, variant string, b0 int, b1 int, b2 int, b3 int",
+            fp_batches, "doc_id bigint, variant string, " + ", ".join(cols)
         )
-        .withColumn(
-            "vcode",
-            F.when(F.col("variant") == "orig", 0)
-            .when(F.col("variant") == "reenc", 1)
-            .otherwise(2),
+        .withColumn("vcode", vcode.otherwise(len(variants) - 1))
+        .select(
+            (F.col("doc_id") * 10 + F.col("vcode")).alias("key"),
+            "doc_id", "variant", *names,
         )
-        .withColumn("key", F.col("doc_id") * 10 + F.col("vcode"))
-        # metadata-sized (|docs|+duplicates rows); checkpoint so the
-        # banded self-join doesn't run the decode kernel twice
-        .localCheckpoint()
     )
-    buck = fp.select(
+
+
+# the four interleaved bands of a single-hash kernel (phash64_bands,
+# wav_fingerprint_bands), and the Hamming distance between an a-side
+# (a0..a3) and a c-side (c0..c3) band quadruple
+_BANDS = ("b0 int", "b1 int", "b2 int", "b3 int")
+_HAMMING = (
+    "bit_count(a0 ^ c0) + bit_count(a1 ^ c1) "
+    "+ bit_count(a2 ^ c2) + bit_count(a3 ^ c3)"
+)
+
+
+def _band_rows(fp: DataFrame) -> DataFrame:
+    """One row per (fingerprint, band): (key, doc_id, variant, b0..b3,
+    band_idx, band_val) — the pigeonhole index rows."""
+    return fp.select(
         "key", "doc_id", "variant", "b0", "b1", "b2", "b3",
         F.explode(
             F.array(*[
@@ -1804,13 +1829,21 @@ def _phash_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bb.band_idx").alias("band_idx"),
         F.col("bb.band_val").alias("band_val"),
     )
-    sized = buck.withColumn(
+
+
+def _banded_hamming_pairs(fp: DataFrame, cap: int, hmax: int) -> DataFrame:
+    """The banded-Hamming pair join over four-band fingerprints
+    ``fp(key, doc_id, variant, b0..b3)``: band explode, drop buckets
+    holding more than ``cap`` rows, self-join within (band_idx,
+    band_val) on a.key < b.key (never all-pairs; any pair within
+    Hamming 3 shares a band by pigeonhole), distinct, keep Hamming <=
+    ``hmax``. Returns (ka, kb, da, db, va, vb, hamming)."""
+    cool = _band_rows(fp).withColumn(
         "bucket_n",
         F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_val")),
-    )
-    cool = sized.filter(F.col("bucket_n") <= _PHASH_BUCKET_CAP)
+    ).filter(F.col("bucket_n") <= cap)
     a, b = cool.alias("a"), cool.alias("b")
-    cand = (
+    return (
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -1827,18 +1860,53 @@ def _phash_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.b2").alias("c2"), F.col("b.b3").alias("c3"),
         )
         .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming",
-            F.expr(
-                "bit_count(a0 ^ c0) + bit_count(a1 ^ c1) "
-                "+ bit_count(a2 ^ c2) + bit_count(a3 ^ c3)"
-            ),
-        )
-        .filter(F.col("hamming") <= _PHASH_HAMMING_MAX)
+        .withColumn("hamming", F.expr(_HAMMING))
+        .filter(F.col("hamming") <= hmax)
         .select("ka", "kb", "da", "db", "va", "vb", "hamming")
     )
+
+
+def _pair_kind(cross: Column) -> Column:
+    """'<va>-<vb>' for two variants of one doc, else ``cross``."""
+    return F.when(
+        F.col("da") == F.col("db"),
+        F.concat(F.col("va"), F.lit("-"), F.col("vb")),
+    ).otherwise(cross)
+
+
+def _banded_summary(kept: DataFrame) -> DataFrame:
+    """Per pair kind: pairs, exact (Hamming 0) pairs, Hamming sum and
+    doc range — the Spark side of _BANDED_SUMMARY_SQL."""
+    return kept.withColumn("pair_kind", _pair_kind(F.lit("cross"))).groupBy(
+        "pair_kind"
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        F.sum(F.when(F.col("hamming") == 0, 1).otherwise(0))
+        .cast("long")
+        .alias("n_exact"),
+        F.sum("hamming").cast("long").alias("sum_hamming"),
+        F.min("da").alias("min_doc"),
+        F.max("db").alias("max_doc"),
+    )
+
+
+def _phash_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The shared pHash near-dup pair pipeline (decode -> hash -> bands
+    -> capped bucket join -> Hamming filter): one row per surviving pair
+    (ka, kb, da, db, va, vb, hamming) — dedup_image_phash aggregates it
+    by pair kind, dedup_image_phash_clusters closes it transitively."""
+    from apache_hive_1_2_2_src_spark.extensions.multimodal import (
+        phash64_bands,
+        stage_phash_payloads,
+    )
+
+    pay = spark.read.parquet(stage_phash_payloads(spark, sf_dir))
+    # metadata-sized (|docs|+duplicates rows); checkpoint so the banded
+    # self-join doesn't run the decode kernel twice
+    fp = _decode_payloads(
+        pay, "phash", lambda buf: (phash64_bands(buf),), _BANDS
+    ).localCheckpoint()
+    return _banded_hamming_pairs(fp, _PHASH_BUCKET_CAP, _PHASH_HAMMING_MAX)
 
 
 @register(
@@ -1868,22 +1936,7 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         fixture_variant_count,
     )
 
-    kept = _phash_pair_frame(spark, sf_dir).withColumn(
-        "pair_kind",
-        F.when(
-            F.col("da") == F.col("db"),
-            F.concat(F.col("va"), F.lit("-"), F.col("vb")),
-        ).otherwise(F.lit("cross")),
-    )
-    out = kept.groupBy("pair_kind").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum(F.when(F.col("hamming") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_exact"),
-        F.sum("hamming").cast("long").alias("sum_hamming"),
-        F.min("da").alias("min_doc"),
-        F.max("db").alias("max_doc"),
-    )
+    out = _banded_summary(_phash_pair_frame(spark, sf_dir))
     # Recall pins (metadata-sized collect): every re-encode and every
     # unsampled-edit duplicate must surface at Hamming 0 — a stride,
     # row-direction, threshold, or banding bug breaks these before it
@@ -2009,50 +2062,9 @@ _AFP_HAMMING_MAX = 4
              CAST(SUM(bit * (1 << (p // 4))) AS INTEGER) AS band_val
       FROM bits GROUP BY doc_id, variant, vcode, p % 4
     ),
-    fp AS (
-      SELECT doc_id, variant, vcode, doc_id * 10 + vcode AS key,
-             MAX(CASE WHEN band_idx = 0 THEN band_val END) AS b0,
-             MAX(CASE WHEN band_idx = 1 THEN band_val END) AS b1,
-             MAX(CASE WHEN band_idx = 2 THEN band_val END) AS b2,
-             MAX(CASE WHEN band_idx = 3 THEN band_val END) AS b3
-      FROM bands GROUP BY doc_id, variant, vcode
-    ),
-    buck AS (
-      SELECT f.key, f.doc_id, f.variant, f.b0, f.b1, f.b2, f.b3,
-             b.band_idx, b.band_val,
-             COUNT(*) OVER (PARTITION BY b.band_idx, b.band_val) AS bucket_n
-      FROM fp f
-      JOIN bands b ON b.doc_id = f.doc_id AND b.vcode = f.vcode
-    ),
-    cool AS (SELECT * FROM buck WHERE bucket_n <= {_AFP_BUCKET_CAP}),
-    cand AS (
-      SELECT DISTINCT
-             a.key AS ka, b.key AS kb, a.doc_id AS da, b.doc_id AS db,
-             a.variant AS va, b.variant AS vb,
-             a.b0 AS a0, a.b1 AS a1, a.b2 AS a2, a.b3 AS a3,
-             b.b0 AS c0, b.b1 AS c1, b.b2 AS c2, b.b3 AS c3
-      FROM cool a
-      JOIN cool b ON a.band_idx = b.band_idx
-                 AND a.band_val = b.band_val AND a.key < b.key
-    ),
-    pairs AS (
-      SELECT *, bit_count(xor(a0, c0)) + bit_count(xor(a1, c1))
-              + bit_count(xor(a2, c2)) + bit_count(xor(a3, c3)) AS hamming
-      FROM cand
-    ),
-    kept AS (
-      SELECT CASE WHEN da = db THEN va || '-' || vb
-                  ELSE 'cross' END AS pair_kind, hamming, da, db
-      FROM pairs WHERE hamming <= {_AFP_HAMMING_MAX}
-    )
-    SELECT pair_kind,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(CASE WHEN hamming = 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_exact,
-           CAST(SUM(hamming) AS BIGINT) AS sum_hamming,
-           MIN(da) AS min_doc, MAX(db) AS max_doc
-    FROM kept GROUP BY pair_kind
-    """,
+    """
+    + _banded_sql(_AFP_BUCKET_CAP, _AFP_HAMMING_MAX)
+    + _BANDED_SUMMARY_SQL,
     doc="AUDIO near-dup dedup via an energy-delta-sign fingerprint — the "
     "audio twin of dedup_image_phash (Haitsma & Kalker 2002 reduced to "
     "its energy axis): every variant's REAL RIFF/WAVE bytes decode "
@@ -2070,8 +2082,6 @@ _AFP_HAMMING_MAX = 4
     tags=("extension", "dedup", "multimodal", "audio", "pandas_udf"),
 )
 def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from apache_hive_1_2_2_src_spark.extensions.multimodal import (
         fixture_variant_count,
         stage_audiofp_payloads,
@@ -2079,98 +2089,11 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pay = spark.read.parquet(stage_audiofp_payloads(spark, sf_dir))
-
-    def fp_batches(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "variant": [], "b0": [], "b1": [],
-                   "b2": [], "b3": []}
-            for doc_id, variant, payload in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                h = wav_fingerprint_bands(bytes(payload))
-                out["doc_id"].append(int(doc_id))
-                out["variant"].append(str(variant))
-                for i in range(4):
-                    out[f"b{i}"].append(h[i])
-            yield pd.DataFrame(out)
-
-    fp = (
-        pay.mapInPandas(
-            fp_batches,
-            "doc_id bigint, variant string, b0 int, b1 int, b2 int, b3 int",
-        )
-        .withColumn(
-            "vcode",
-            F.when(F.col("variant") == "orig", 0)
-            .when(F.col("variant") == "amp", 1)
-            .when(F.col("variant") == "junk", 2)
-            .otherwise(3),
-        )
-        .withColumn("key", F.col("doc_id") * 10 + F.col("vcode"))
-        .localCheckpoint()
-    )
-    buck = fp.select(
-        "key", "doc_id", "variant", "b0", "b1", "b2", "b3",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band_idx"),
-                    F.col(f"b{i}").alias("band_val"),
-                )
-                for i in range(4)
-            ])
-        ).alias("bb"),
-    ).select(
-        "key", "doc_id", "variant", "b0", "b1", "b2", "b3",
-        F.col("bb.band_idx").alias("band_idx"),
-        F.col("bb.band_val").alias("band_val"),
-    )
-    cool = buck.withColumn(
-        "bucket_n",
-        F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_val")),
-    ).filter(F.col("bucket_n") <= _AFP_BUCKET_CAP)
-    a, b = cool.alias("a"), cool.alias("b")
-    kept = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.key") < F.col("b.key")),
-        )
-        .select(
-            F.col("a.key").alias("ka"), F.col("b.key").alias("kb"),
-            F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"),
-            F.col("a.variant").alias("va"), F.col("b.variant").alias("vb"),
-            F.col("a.b0").alias("a0"), F.col("a.b1").alias("a1"),
-            F.col("a.b2").alias("a2"), F.col("a.b3").alias("a3"),
-            F.col("b.b0").alias("c0"), F.col("b.b1").alias("c1"),
-            F.col("b.b2").alias("c2"), F.col("b.b3").alias("c3"),
-        )
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.expr(
-                "bit_count(a0 ^ c0) + bit_count(a1 ^ c1) "
-                "+ bit_count(a2 ^ c2) + bit_count(a3 ^ c3)"
-            ),
-        )
-        .filter(F.col("hamming") <= _AFP_HAMMING_MAX)
-        .withColumn(
-            "pair_kind",
-            F.when(
-                F.col("da") == F.col("db"),
-                F.concat(F.col("va"), F.lit("-"), F.col("vb")),
-            ).otherwise(F.lit("cross")),
-        )
-    )
-    out = kept.groupBy("pair_kind").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum(F.when(F.col("hamming") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_exact"),
-        F.sum("hamming").cast("long").alias("sum_hamming"),
-        F.min("da").alias("min_doc"),
-        F.max("db").alias("max_doc"),
+    fp = _decode_payloads(
+        pay, "audiofp", lambda buf: (wav_fingerprint_bands(buf),), _BANDS
+    ).localCheckpoint()
+    out = _banded_summary(
+        _banded_hamming_pairs(fp, _AFP_BUCKET_CAP, _AFP_HAMMING_MAX)
     )
     got = {r["pair_kind"]: r for r in out.collect()}
     if got.get("orig-amp", {"n_exact": 0})["n_exact"] != fixture_variant_count("audiofp", "amp"):
@@ -2198,8 +2121,12 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same device as the text shingle caps (ngram_jaccard, df<=64 since r4)
 # and the pHash band cap (_PHASH_BUCKET_CAP). One window count over the
 # index, shuffle-keyed by the landmark exactly like the join that
-# follows; every DuckDB oracle mirrors it with a QUALIFY COUNT(*) OVER
-# (PARTITION BY landmark) <= cap stanza.
+# follows. The Spark definition is _cap_hot_landmarks: _containment_pairs
+# and dedup_video_phash call it, and the streaming landmark drain applies
+# it to the prefix df (the store plus the batch). The SQL definition is
+# the QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= cap stanza that
+# _containment_sql generates for every positional oracle (the video pHash
+# oracle's ksigc applies the same QUALIFY to its frame-signature set).
 
 _LANDMARK_DF_CAP = 64
 
@@ -2218,555 +2145,69 @@ def _cap_hot_landmarks(
     )
 
 
-def _video_phash_oracle() -> str:
-    from apache_hive_1_2_2_src_spark.extensions.multimodal import (
-        _PHASH_COS_SQL,
+# The positional landmark verdict, one definition per engine. Spark:
+# _containment_pairs over N offset dimensions (the df<=_LANDMARK_DF_CAP
+# hot-landmark cap, inverted-index votes, the modal offset with ties
+# toward the smallest total |offset|, totals, and the keep rule 2*n_match
+# >= least(nsa, nsb)); dedup_video_temporal, the video/audio containment
+# queries and dedup_image_cropped all call it. SQL: _containment_sql
+# generates the same stanza over the same offset dimensions for every
+# oracle (temporal, video, audio, image crop and the streaming replay).
+# Changing the cap, the keep threshold or the tie-break means changing
+# exactly these two definitions. The streaming landmark drain applies the
+# same cap through _cap_hot_landmarks to the prefix df (the store plus
+# the batch) and keeps its own new-versus-earlier vote.
+
+
+def _shingle_sql(n: int, sep: str) -> str:
+    """The oracles' consecutive-frame shingle CTE: ``sh(key, doc_id,
+    variant, t, shingle)`` = the sigs of fsig frames t..t+n-1 joined by
+    ``sep`` (the SQL side of _frame_shingles)."""
+    sig = f" || '{sep}' || ".join(f"f{i}.sig" for i in range(1, n + 1))
+    joins = "".join(
+        f"\n      JOIN fsig f{i} ON f{i}.key = f1.key AND f{i}.t = f1.t + {i - 1}"
+        for i in range(2, n + 1)
     )
-
-    return """
-    WITH cos_t AS (__COS__),
-    docs AS (
-      SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h,
-             4 + doc_id % 5 AS nf
-      FROM documents WHERE doc_id < 200
-    ),
-    variants AS (
-      SELECT doc_id, w, h, nf, 'orig' AS variant, 0 AS vcode FROM docs
-      UNION ALL
-      SELECT doc_id, w, h, nf, 'reenc', 1 FROM docs WHERE doc_id % 3 = 0
-      UNION ALL
-      SELECT doc_id, w, h, nf - 1, 'trim', 2 FROM docs WHERE doc_id % 4 = 0
-    ),
-    vf AS (
-      SELECT v.doc_id, v.variant, v.vcode, v.w, v.h, tt.t
-      FROM variants v, UNNEST(range(0, v.nf)) AS tt(t)
-    ),
-    grid AS (
-      SELECT vf.doc_id, vf.variant, vf.vcode, vf.t,
-             xx.tx AS tx, yy.ty AS ty,
-             (CAST(xx.tx AS BIGINT) * vf.w) // 8 AS x,
-             (CAST(yy.ty AS BIGINT) * vf.h) // 8 AS y
-      FROM vf, UNNEST(range(0, 8)) AS xx(tx), UNNEST(range(0, 8)) AS yy(ty)
-    ),
-    idxs AS (
-      SELECT doc_id, variant, vcode, t, tx, ty,
-             (doc_id*3 + x*(1 + doc_id%5) + y*(2 + doc_id%3) + t*29) % 256
-               AS i
-      FROM grid
-    ),
-    gray AS (
-      -- palette-mapped gray: the GIF global-color-table formula
-      SELECT doc_id, variant, vcode, t, tx, ty,
-             ((i*7 + 1) % 256 + (i*11 + 3) % 256 + (i*13 + 5) % 256) // 3
-               AS g
-      FROM idxs
-    ),
-    coef AS (
-      SELECT doc_id, variant, vcode, t, cu.k AS u, cv.k AS v,
-             SUM(CAST(g AS BIGINT) * cu.c * cv.c) AS f
-      FROM gray
-      JOIN cos_t cu ON cu.n = tx
-      JOIN cos_t cv ON cv.n = ty
-      GROUP BY doc_id, variant, vcode, t, cu.k, cv.k
-    ),
-    thr AS (
-      SELECT doc_id, variant, t, f AS thv
-      FROM (SELECT doc_id, variant, t, f,
-                   ROW_NUMBER() OVER (PARTITION BY doc_id, variant, t
-                                      ORDER BY f) AS rn
-            FROM coef WHERE NOT (u = 0 AND v = 0))
-      WHERE rn = 32
-    ),
-    bits AS (
-      SELECT c.doc_id, c.variant, c.vcode, c.t, c.u * 8 + c.v AS p,
-             CASE WHEN c.f > th.thv THEN 1 ELSE 0 END AS bit
-      FROM coef c
-      JOIN thr th ON th.doc_id = c.doc_id AND th.variant = c.variant
-                 AND th.t = c.t
-    ),
-    bands AS (
-      SELECT doc_id, variant, vcode, t, p % 4 AS band_idx,
-             CAST(SUM(bit * (1 << (p // 4))) AS INTEGER) AS band_val
-      FROM bits GROUP BY doc_id, variant, vcode, t, p % 4
-    ),
-    fsig AS (
-      SELECT doc_id, variant, vcode, doc_id * 10 + vcode AS key, t,
-             string_agg(CAST(band_val AS VARCHAR), ':'
-                        ORDER BY band_idx) AS sig
-      FROM bands GROUP BY doc_id, variant, vcode, t
-    ),
-    ksig AS (SELECT DISTINCT key, doc_id, variant, sig FROM fsig),
-    ksigc AS (SELECT * FROM ksig
-              QUALIFY COUNT(*) OVER (PARTITION BY sig) <= __CAP__),
-    ncnt AS (SELECT key, COUNT(*) AS n_sigs FROM ksigc GROUP BY key),
-    shared AS (
-      SELECT a.key AS ka, b.key AS kb, a.doc_id AS da, b.doc_id AS db,
-             a.variant AS va, b.variant AS vb,
-             COUNT(*) AS n_common
-      FROM ksigc a
-      JOIN ksigc b ON a.sig = b.sig AND a.key < b.key
-      GROUP BY a.key, b.key, a.doc_id, b.doc_id, a.variant, b.variant
-    ),
-    kept AS (
-      SELECT s.*, na.n_sigs AS nsa, nb.n_sigs AS nsb
-      FROM shared s
-      JOIN ncnt na ON na.key = s.ka
-      JOIN ncnt nb ON nb.key = s.kb
-      WHERE 2 * s.n_common >= LEAST(na.n_sigs, nb.n_sigs)
-    )
-    SELECT CASE WHEN da = db THEN va || '-' || vb
-                ELSE 'cross' END AS pair_kind,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(CASE WHEN n_common = GREATEST(nsa, nsb)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_identical,
-           CAST(SUM(n_common) AS BIGINT) AS sum_common,
-           MIN(da) AS min_doc, MAX(db) AS max_doc
-    FROM kept
-    GROUP BY CASE WHEN da = db THEN va || '-' || vb ELSE 'cross' END
-    """.replace("__COS__", _PHASH_COS_SQL).replace(
-        "__CAP__", str(_LANDMARK_DF_CAP)
-    )
-
-
-@register(
-    "dedup_video_phash",
-    oracle=_video_phash_oracle(),
-    doc="VIDEO near-dup dedup via per-frame perceptual hashing — the "
-    "third dedup modality (text, image, audio, now video): every "
-    "variant is a REAL animated GIF89a (multi-frame LZW streams, "
-    "graphic-control + looping extensions — real inter-frame container "
-    "structure), decoded frame by frame through decode_gif_frames; "
-    "each frame pHashes through the shared integer-DCT core, a video's "
-    "fingerprint is its frame-hash SET, and candidates come from an "
-    "inverted index on frame hash (videos sharing >= half the smaller "
-    "set's hashes pair up) — the standard frame-fingerprint video-dedup "
-    "shape, never all-pairs. Certified end to end by the SQL replay "
-    "(frames -> DCT -> threshold -> per-frame sig -> overlap verdict); "
-    "runtime pins: every comment-extension re-encode (67) is "
-    "IDENTICAL-set, every last-frame trim (50) still pairs with its "
-    "original (shared-prefix class). Scale: |videos|*frames index rows, "
-    "one shuffle on frame hash; hot frame-hashes (corpus-wide static "
-    "intro/black frames — SCALE.md's measured 953x overlay) are capped "
-    "IN PLAN at df <= 64 (_cap_hot_landmarks, mirrored in the oracle's "
-    "ksigc QUALIFY stanza) before the counts and the self-join.",
-    tags=("extension", "dedup", "multimodal", "video", "pandas_udf"),
-)
-def dedup_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from apache_hive_1_2_2_src_spark.extensions.multimodal import (
-        fixture_variant_count,
-        stage_video_payloads,
-        video_frame_phashes,
-    )
-
-    pay = spark.read.parquet(stage_video_payloads(spark, sf_dir))
-
-    def fp_batches(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "variant": [], "t": [], "b0": [],
-                   "b1": [], "b2": [], "b3": []}
-            for doc_id, variant, payload in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                for t, h in enumerate(video_frame_phashes(bytes(payload))):
-                    out["doc_id"].append(int(doc_id))
-                    out["variant"].append(str(variant))
-                    out["t"].append(t)
-                    for i in range(4):
-                        out[f"b{i}"].append(h[i])
-            yield pd.DataFrame(out)
-
-    ksig = (
-        pay.mapInPandas(
-            fp_batches,
-            "doc_id bigint, variant string, t int, "
-            "b0 int, b1 int, b2 int, b3 int",
-        )
-        .withColumn(
-            "vcode",
-            F.when(F.col("variant") == "orig", 0)
-            .when(F.col("variant") == "reenc", 1)
-            .otherwise(2),
-        )
-        .select(
-            (F.col("doc_id") * 10 + F.col("vcode")).alias("key"),
-            "doc_id", "variant",
-            F.concat_ws(":", "b0", "b1", "b2", "b3").alias("sig"),
-        )
-        .distinct()
-    )
-    # frame-index-sized (|videos| x <=8 rows); cap BEFORE the checkpoint
-    # so the df window is materialized once — not recomputed by ncnt plus
-    # both self-join branches — and the self-join never decodes twice
-    ksig = _cap_hot_landmarks(ksig, "sig").localCheckpoint()
-    ncnt = ksig.groupBy("key").agg(F.count(F.lit(1)).alias("n_sigs"))
-    a, b = ksig.alias("a"), ksig.alias("b")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.key") < F.col("b.key")),
-        )
-        .groupBy(
-            F.col("a.key").alias("ka"), F.col("b.key").alias("kb"),
-            F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"),
-            F.col("a.variant").alias("va"), F.col("b.variant").alias("vb"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    kept = (
-        shared.join(
-            ncnt.select(F.col("key").alias("ka"), F.col("n_sigs").alias("nsa")),
-            "ka",
-        )
-        .join(
-            ncnt.select(F.col("key").alias("kb"), F.col("n_sigs").alias("nsb")),
-            "kb",
-        )
-        .filter(2 * F.col("n_common") >= F.least("nsa", "nsb"))
-        .withColumn(
-            "pair_kind",
-            F.when(
-                F.col("da") == F.col("db"),
-                F.concat(F.col("va"), F.lit("-"), F.col("vb")),
-            ).otherwise(F.lit("cross")),
-        )
-    )
-    out = kept.groupBy("pair_kind").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum(
-            F.when(F.col("n_common") == F.greatest("nsa", "nsb"), 1).otherwise(0)
-        ).cast("long").alias("n_identical"),
-        F.sum("n_common").cast("long").alias("sum_common"),
-        F.min("da").alias("min_doc"),
-        F.max("db").alias("max_doc"),
-    )
-    got = {r["pair_kind"]: r for r in out.collect()}
-    if got.get("orig-reenc", {"n_identical": 0})["n_identical"] != fixture_variant_count("video", "reenc"):
-        raise AssertionError(f"reenc recall broken: {got.get('orig-reenc')}")
-    if got.get("orig-trim", {"n_pairs": 0})["n_pairs"] != fixture_variant_count("video", "trim"):
-        raise AssertionError(f"trim recall broken: {got.get('orig-trim')}")
-    return out
-
-
-# ------------------ Video TEMPORAL near-dup / alignment (r15) ------------
-
-
-def _video_temporal_oracle() -> str:
-    from apache_hive_1_2_2_src_spark.extensions.multimodal import (
-        _PHASH_COS_SQL,
-    )
-
-    return """
-    WITH cos_t AS (__COS__),
-    docs AS (
-      SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h,
-             4 + doc_id % 5 AS nf
-      FROM documents WHERE doc_id < 200
-    ),
-    variants AS (
-      SELECT doc_id, w, h, nf, 'orig' AS variant, 0 AS vcode FROM docs
-      UNION ALL
-      SELECT doc_id, w, h, nf, 'shift', 1 FROM docs WHERE doc_id % 4 = 0
-      UNION ALL
-      SELECT doc_id, w, h, nf, 'loop', 2 FROM docs WHERE doc_id % 6 = 0
-    ),
-    vf AS (
-      SELECT v.doc_id, v.variant, v.vcode, v.w, v.h, tt.t,
-             CASE v.variant
-               WHEN 'shift' THEN (tt.t + 2) % v.nf
-               WHEN 'loop' THEN tt.t % v.nf
-               ELSE tt.t
-             END AS torig
-      FROM variants v,
-           UNNEST(range(0, CASE WHEN v.variant = 'loop'
-                                THEN 2 * v.nf ELSE v.nf END)) AS tt(t)
-    ),
-    grid AS (
-      SELECT vf.doc_id, vf.variant, vf.vcode, vf.t, vf.torig,
-             xx.tx AS tx, yy.ty AS ty,
-             (CAST(xx.tx AS BIGINT) * vf.w) // 8 AS x,
-             (CAST(yy.ty AS BIGINT) * vf.h) // 8 AS y
-      FROM vf, UNNEST(range(0, 8)) AS xx(tx), UNNEST(range(0, 8)) AS yy(ty)
-    ),
-    idxs AS (
-      SELECT doc_id, variant, vcode, t, tx, ty,
-             (doc_id*3 + x*(1 + doc_id%5) + y*(2 + doc_id%3) + torig*29)
-               % 256 AS i
-      FROM grid
-    ),
-    gray AS (
-      SELECT doc_id, variant, vcode, t, tx, ty,
-             ((i*7 + 1) % 256 + (i*11 + 3) % 256 + (i*13 + 5) % 256) // 3
-               AS g
-      FROM idxs
-    ),
-    coef AS (
-      SELECT doc_id, variant, vcode, t, cu.k AS u, cv.k AS v,
-             SUM(CAST(g AS BIGINT) * cu.c * cv.c) AS f
-      FROM gray
-      JOIN cos_t cu ON cu.n = tx
-      JOIN cos_t cv ON cv.n = ty
-      GROUP BY doc_id, variant, vcode, t, cu.k, cv.k
-    ),
-    thr AS (
-      SELECT doc_id, variant, t, f AS thv
-      FROM (SELECT doc_id, variant, t, f,
-                   ROW_NUMBER() OVER (PARTITION BY doc_id, variant, t
-                                      ORDER BY f) AS rn
-            FROM coef WHERE NOT (u = 0 AND v = 0))
-      WHERE rn = 32
-    ),
-    bits AS (
-      SELECT c.doc_id, c.variant, c.vcode, c.t, c.u * 8 + c.v AS p,
-             CASE WHEN c.f > th.thv THEN 1 ELSE 0 END AS bit
-      FROM coef c
-      JOIN thr th ON th.doc_id = c.doc_id AND th.variant = c.variant
-                 AND th.t = c.t
-    ),
-    bands AS (
-      SELECT doc_id, variant, vcode, t, p % 4 AS band_idx,
-             CAST(SUM(bit * (1 << (p // 4))) AS INTEGER) AS band_val
-      FROM bits GROUP BY doc_id, variant, vcode, t, p % 4
-    ),
-    fsig AS (
-      SELECT doc_id, variant, vcode, doc_id * 10 + vcode AS key, t,
-             string_agg(CAST(band_val AS VARCHAR), ':'
-                        ORDER BY band_idx) AS sig
-      FROM bands GROUP BY doc_id, variant, vcode, t
-    ),
+    return f"""
     sh AS (
       SELECT f1.key, f1.doc_id, f1.variant, f1.t,
-             f1.sig || '>' || f2.sig AS shingle
-      FROM fsig f1
-      JOIN fsig f2 ON f2.key = f1.key AND f2.t = f1.t + 1
+             {sig} AS shingle
+      FROM fsig f1{joins}
     ),
-    shc AS (SELECT * FROM sh
-            QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= __CAP__),
+"""
+
+
+def _containment_sql(
+    pos_cols: tuple[str, ...] = ("t",), off_names: tuple[str, ...] = ("off",)
+) -> str:
+    """The oracles' positional verdict stanza over a landmark stream
+    ``sh(key, doc_id, variant, *pos_cols, shingle)``: the hot-landmark
+    cap (shc), per-key landmark counts, votes per offset, the modal
+    offset, totals and the one-sided keep rule, ending in ``kept(ka, kb,
+    da, db, va, vb, best_<off>..., n_match, nsa, nsb)``."""
+    offs = ", ".join(f"a.{p} - b.{p} AS {n}" for p, n in zip(pos_cols, off_names))
+    return f"""    shc AS (SELECT * FROM sh
+            QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= {_LANDMARK_DF_CAP}),
     nsh AS (SELECT key, COUNT(*) AS n_sh FROM shc GROUP BY key),
     votes AS (
       SELECT a.key AS ka, b.key AS kb, a.doc_id AS da, b.doc_id AS db,
              a.variant AS va, b.variant AS vb,
-             a.t - b.t AS off, COUNT(*) AS cnt
+             {offs}, COUNT(*) AS cnt
       FROM shc a
       JOIN shc b ON a.shingle = b.shingle AND a.key < b.key
       GROUP BY a.key, b.key, a.doc_id, b.doc_id, a.variant, b.variant,
-               a.t - b.t
+               {", ".join(f"a.{p} - b.{p}" for p in pos_cols)}
     ),
     ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY ka, kb
-                                   ORDER BY cnt DESC, ABS(off), off) AS rn
+      SELECT *, ROW_NUMBER() OVER (
+               PARTITION BY ka, kb
+               ORDER BY cnt DESC, {" + ".join(f"ABS({n})" for n in off_names)},
+                        {", ".join(off_names)}) AS rn
       FROM votes
     ),
     best AS (
-      SELECT ka, kb, da, db, va, vb, off AS best_off
-      FROM ranked WHERE rn = 1
-    ),
-    tot AS (SELECT ka, kb, SUM(cnt) AS n_match FROM votes GROUP BY ka, kb),
-    kept AS (
-      SELECT b.*, t.n_match
-      FROM best b
-      JOIN tot t ON t.ka = b.ka AND t.kb = b.kb
-      JOIN nsh na ON na.key = b.ka
-      JOIN nsh nb ON nb.key = b.kb
-      WHERE 2 * t.n_match >= LEAST(na.n_sh, nb.n_sh)
-    )
-    SELECT CASE WHEN da = db THEN va || '-' || vb
-                ELSE 'cross' END AS pair_kind,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(CASE WHEN best_off = 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_off_zero,
-           CAST(SUM(CASE WHEN ABS(best_off) = 2 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_abs_off_two,
-           CAST(SUM(n_match) AS BIGINT) AS sum_match,
-           MIN(da) AS min_doc, MAX(db) AS max_doc
-    FROM kept
-    GROUP BY CASE WHEN da = db THEN va || '-' || vb ELSE 'cross' END
-    """.replace("__COS__", _PHASH_COS_SQL).replace(
-        "__CAP__", str(_LANDMARK_DF_CAP)
-    )
-
-
-@register(
-    "dedup_video_temporal",
-    oracle=_video_temporal_oracle(),
-    doc="Video TEMPORAL near-dup with ALIGNMENT recovery — the "
-    "sequence-aware step beyond dedup_video_phash's set overlap (a "
-    "looped stream captured at a different start has the SAME frame "
-    "set; only ordering tells you it is the same broadcast): frame "
-    "hashes shingle into consecutive 2-grams (one equi-self-join on "
-    "frame position, no per-key window), an inverted index on shingle "
-    "yields matched position pairs, each match votes its offset "
-    "(ta - tb), and the modal offset (ties broken smallest-|off|) IS "
-    "the recovered alignment. Certified end to end by the SQL replay; "
-    "runtime pins: all 50 shifted clips pair with their originals at "
-    "|offset| = 2 (the staged entry-point shift), all 34 doubled "
-    "clips at offset 0, zero spurious cross pairs under the "
-    "half-overlap rule. Scale: |videos| x frames shingle rows, one "
-    "shuffle on shingle; offset voting groups by (pair, offset) — "
-    "bounded by clip length, not corpus; hot shingles (static "
-    "intro/outro SEQUENCES make corpus-wide 2-grams — SCALE.md r15) "
-    "are capped IN PLAN at df <= 64 (_cap_hot_landmarks, mirrored in "
-    "the oracle's shc QUALIFY stanza).",
-    tags=("extension", "dedup", "multimodal", "video", "temporal"),
-)
-def dedup_video_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from apache_hive_1_2_2_src_spark.extensions.multimodal import (
-        fixture_variant_count,
-        stage_video_temporal_payloads,
-        video_frame_phashes,
-    )
-
-    pay = spark.read.parquet(stage_video_temporal_payloads(spark, sf_dir))
-
-    def fp_batches(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "variant": [], "t": [], "sig": []}
-            for doc_id, variant, payload in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                for t, h in enumerate(video_frame_phashes(bytes(payload))):
-                    out["doc_id"].append(int(doc_id))
-                    out["variant"].append(str(variant))
-                    out["t"].append(t)
-                    out["sig"].append(":".join(str(x) for x in h))
-            yield pd.DataFrame(out)
-
-    fsig = (
-        pay.mapInPandas(
-            fp_batches, "doc_id bigint, variant string, t int, sig string"
-        )
-        .withColumn(
-            "vcode",
-            F.when(F.col("variant") == "orig", 0)
-            .when(F.col("variant") == "shift", 1)
-            .otherwise(2),
-        )
-        .select(
-            (F.col("doc_id") * 10 + F.col("vcode")).alias("key"),
-            "doc_id", "variant", "t", "sig",
-        )
-        .localCheckpoint()
-    )
-    f1, f2 = fsig.alias("f1"), fsig.alias("f2")
-    sh = f1.join(
-        f2,
-        (F.col("f2.key") == F.col("f1.key"))
-        & (F.col("f2.t") == F.col("f1.t") + 1),
-    ).select(
-        F.col("f1.key").alias("key"),
-        F.col("f1.doc_id").alias("doc_id"),
-        F.col("f1.variant").alias("variant"),
-        F.col("f1.t").alias("t"),
-        F.concat(F.col("f1.sig"), F.lit(">"), F.col("f2.sig")).alias(
-            "shingle"
-        ),
-    )
-    # checkpoint the CAPPED shingle frame: the t/t+1 join + df window run
-    # once, not recomputed by nsh plus both self-join branches
-    sh = _cap_hot_landmarks(sh).localCheckpoint()
-    nsh = sh.groupBy("key").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    votes = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.key") < F.col("b.key")),
-        )
-        .groupBy(
-            F.col("a.key").alias("ka"), F.col("b.key").alias("kb"),
-            F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"),
-            F.col("a.variant").alias("va"), F.col("b.variant").alias("vb"),
-            (F.col("a.t") - F.col("b.t")).alias("off"),
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    best = (
-        votes.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("ka", "kb").orderBy(
-                    F.col("cnt").desc(), F.abs("off"), F.col("off")
-                )
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("ka", "kb", "da", "db", "va", "vb",
-                F.col("off").alias("best_off"))
-    )
-    tot = votes.groupBy("ka", "kb").agg(F.sum("cnt").alias("n_match"))
-    kept = (
-        best.join(tot, ["ka", "kb"])
-        .join(nsh.select(F.col("key").alias("ka"),
-                         F.col("n_sh").alias("nsa")), "ka")
-        .join(nsh.select(F.col("key").alias("kb"),
-                         F.col("n_sh").alias("nsb")), "kb")
-        .filter(2 * F.col("n_match") >= F.least("nsa", "nsb"))
-        .withColumn(
-            "pair_kind",
-            F.when(
-                F.col("da") == F.col("db"),
-                F.concat(F.col("va"), F.lit("-"), F.col("vb")),
-            ).otherwise(F.lit("cross")),
-        )
-    )
-    out = kept.groupBy("pair_kind").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum(F.when(F.col("best_off") == 0, 1).otherwise(0))
-        .cast("long").alias("n_off_zero"),
-        F.sum(F.when(F.abs("best_off") == 2, 1).otherwise(0))
-        .cast("long").alias("n_abs_off_two"),
-        F.sum("n_match").cast("long").alias("sum_match"),
-        F.min("da").alias("min_doc"),
-        F.max("db").alias("max_doc"),
-    )
-    got = {r["pair_kind"]: r for r in out.collect()}
-    s = got.get("orig-shift", {"n_pairs": 0, "n_abs_off_two": 0})
-    n_shift = fixture_variant_count("vtemporal", "shift")
-    if (s["n_pairs"], s["n_abs_off_two"]) != (n_shift, n_shift):
-        raise AssertionError(f"shift alignment broken: {s}")
-    lo = got.get("orig-loop", {"n_pairs": 0, "n_off_zero": 0})
-    n_loop = fixture_variant_count("vtemporal", "loop")
-    if (lo["n_pairs"], lo["n_off_zero"]) != (n_loop, n_loop):
-        raise AssertionError(f"loop alignment broken: {lo}")
-    return out
-
-
-# ------------------ Video clip CONTAINMENT (r15, round-16 plan item) ------
-
-
-# The one-sided containment verdict, shared by the video/audio/image
-# containment queries. SQL half: everything downstream of the per-variant
-# landmark stream `sh(key, doc_id, variant, t, shingle)` — the df<=64
-# hot-landmark cap (shc), inverted-index votes, modal offset, totals, the
-# one-sided keep rule, and the pair_kind/relation classification (the
-# image oracle keeps its own 2-D copy of this stanza with (dx, dy)
-# offsets). Spark half: _containment_pairs below generalizes the same
-# algebra over N offset dimensions. Changing the cap, the keep threshold,
-# or the tie-break means changing exactly these two definitions plus the
-# image oracle's 2-D stanza.
-_CONTAIN_KEPT_1D = """    shc AS (SELECT * FROM sh
-            QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= __CAP__),
-    nsh AS (SELECT key, COUNT(*) AS n_sh FROM shc GROUP BY key),
-    votes AS (
-      SELECT a.key AS ka, b.key AS kb, a.doc_id AS da, b.doc_id AS db,
-             a.variant AS va, b.variant AS vb,
-             a.t - b.t AS off, COUNT(*) AS cnt
-      FROM shc a
-      JOIN shc b ON a.shingle = b.shingle AND a.key < b.key
-      GROUP BY a.key, b.key, a.doc_id, b.doc_id, a.variant, b.variant,
-               a.t - b.t
-    ),
-    ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY ka, kb
-                                   ORDER BY cnt DESC, ABS(off), off) AS rn
-      FROM votes
-    ),
-    best AS (
-      SELECT ka, kb, da, db, va, vb, off AS best_off
+      SELECT ka, kb, da, db, va, vb,
+             {", ".join(f"{n} AS best_{n}" for n in off_names)}
       FROM ranked WHERE rn = 1
     ),
     tot AS (SELECT ka, kb, SUM(cnt) AS n_match FROM votes GROUP BY ka, kb),
@@ -2780,26 +2221,58 @@ _CONTAIN_KEPT_1D = """    shc AS (SELECT * FROM sh
     )
 """
 
-_CONTAIN_AGG_SQL = """    SELECT CASE WHEN da = db THEN va || '-' || vb
-                ELSE 'x:' || va || '-' || vb END AS pair_kind,
-           CASE WHEN 2 * n_match >= GREATEST(nsa, nsb) THEN 'neardup'
-                ELSE 'contained' END AS relation,
+
+def _containment_summary_sql(off_names: tuple[str, ...] = ("off",)) -> str:
+    """The containment queries' summary of ``kept``: per (pair_kind,
+    relation), pair and full-match counts, the match sum, the range of
+    each best offset and the doc range."""
+    kind = (
+        "CASE WHEN da = db THEN va || '-' || vb\n"
+        "                  ELSE 'x:' || va || '-' || vb END"
+    )
+    rel = (
+        "CASE WHEN 2 * n_match >= GREATEST(nsa, nsb) THEN 'neardup'\n"
+        "                  ELSE 'contained' END"
+    )
+    ranges = "".join(
+        f"           CAST(MIN(best_{n}) AS INTEGER) AS min_{n},\n"
+        f"           CAST(MAX(best_{n}) AS INTEGER) AS max_{n},\n"
+        for n in off_names
+    )
+    return f"""    SELECT {kind} AS pair_kind,
+           {rel} AS relation,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
            CAST(SUM(CASE WHEN n_match = LEAST(nsa, nsb)
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_full,
            CAST(SUM(n_match) AS BIGINT) AS sum_match,
-           CAST(MIN(best_off) AS INTEGER) AS min_off,
-           CAST(MAX(best_off) AS INTEGER) AS max_off,
-           MIN(da) AS min_doc, MAX(db) AS max_doc
+{ranges}           MIN(da) AS min_doc, MAX(db) AS max_doc
     FROM kept
-    GROUP BY CASE WHEN da = db THEN va || '-' || vb
-                  ELSE 'x:' || va || '-' || vb END,
-             CASE WHEN 2 * n_match >= GREATEST(nsa, nsb) THEN 'neardup'
-                  ELSE 'contained' END
+    GROUP BY {kind},
+             {rel}
     """
 
-_CONTAIN_KEPT_1D = _CONTAIN_KEPT_1D.replace("__CAP__", str(_LANDMARK_DF_CAP))
-_CONTAIN_TAIL_1D = _CONTAIN_KEPT_1D + _CONTAIN_AGG_SQL
+
+def _frame_shingles(fsig: DataFrame, n: int, sep: str) -> DataFrame:
+    """Consecutive-frame n-gram shingles of a positional signature frame
+    ``fsig(key, doc_id, variant, t, sig)``: one equi-self-join on (key,
+    t + i) per further frame, never a per-key window. Returns (key,
+    doc_id, variant, t, shingle) with the n sigs joined by ``sep``."""
+    sh = fsig.alias("f1")
+    for i in range(2, n + 1):
+        sh = sh.join(
+            fsig.alias(f"f{i}"),
+            (F.col(f"f{i}.key") == F.col("f1.key"))
+            & (F.col(f"f{i}.t") == F.col("f1.t") + (i - 1)),
+        )
+    return sh.select(
+        F.col("f1.key").alias("key"),
+        F.col("f1.doc_id").alias("doc_id"),
+        F.col("f1.variant").alias("variant"),
+        F.col("f1.t").alias("t"),
+        F.concat_ws(sep, *[F.col(f"f{i}.sig") for i in range(1, n + 1)]).alias(
+            "shingle"
+        ),
+    )
 
 
 def _containment_pairs(
@@ -2871,10 +2344,7 @@ def _containment_pairs(
         .filter(2 * F.col("n_match") >= F.least("nsa", "nsb"))
         .withColumn(
             "pair_kind",
-            F.when(
-                F.col("da") == F.col("db"),
-                F.concat(F.col("va"), F.lit("-"), F.col("vb")),
-            ).otherwise(
+            _pair_kind(
                 F.concat(F.lit("x:"), F.col("va"), F.lit("-"), F.col("vb"))
             ),
         )
@@ -2888,39 +2358,42 @@ def _containment_pairs(
     )
 
 
-def _video_contained_oracle() -> str:
+def _containment_summary(
+    kept: DataFrame, off_names: tuple[str, ...] = ("off",)
+) -> DataFrame:
+    """Per (pair_kind, relation) of _containment_pairs' verdicts: pair
+    and full-match counts, the match sum, the range of each best offset
+    and the doc range — the Spark side of _containment_summary_sql."""
+    ranges = []
+    for n in off_names:
+        ranges += [F.min(f"best_{n}").alias(f"min_{n}"),
+                   F.max(f"best_{n}").alias(f"max_{n}")]
+    return kept.groupBy("pair_kind", "relation").agg(
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        F.sum(
+            F.when(F.col("n_match") == F.least("nsa", "nsb"), 1).otherwise(0)
+        ).cast("long").alias("n_full"),
+        F.sum("n_match").cast("long").alias("sum_match"),
+        *ranges,
+        F.min("da").alias("min_doc"),
+        F.max("db").alias("max_doc"),
+    )
+
+
+def _gif_fsig_sql() -> str:
+    """The video oracles' GIF frame-signature chain (no WITH prefix,
+    trailing comma): from ``vf(doc_id, variant, vcode, src, w, h, t,
+    torig)`` — output frame t of a variant shows frame torig of doc
+    src's fixture stream — through the 8x8 sampling grid, the palette
+    index formula, palette-mapped gray, the integer DCT, the rank-32
+    threshold and the interleaved bands to ``fsig(doc_id, variant,
+    vcode, key, t, sig)``."""
     from apache_hive_1_2_2_src_spark.extensions.multimodal import (
         _PHASH_COS_SQL,
     )
 
-    return ("""
-    WITH cos_t AS (__COS__),
-    docs AS (
-      SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h,
-             8 + doc_id % 5 AS nf
-      FROM documents WHERE doc_id < 200
-    ),
-    variants AS (
-      SELECT doc_id, doc_id AS src, w, h, nf AS len,
-             'orig' AS variant, 0 AS vcode, 0 AS strt
-      FROM docs
-      UNION ALL
-      SELECT doc_id, doc_id, w, h, 4, 'clip', 1, 3
-      FROM docs WHERE doc_id % 3 = 0
-      UNION ALL
-      SELECT doc_id, doc_id, w, h, 5, 'mut', 2, 1
-      FROM docs WHERE doc_id % 5 = 0
-      UNION ALL
-      SELECT d.doc_id, s.doc_id, s.w, s.h, 4, 'steal', 3, 2
-      FROM docs d JOIN docs s ON s.doc_id = d.doc_id + 1
-      WHERE d.doc_id % 7 = 0
-    ),
-    vf AS (
-      SELECT v.doc_id, v.variant, v.vcode, v.src, v.w, v.h, tt.t,
-             CASE WHEN v.variant = 'mut' AND tt.t = 2 THEN 53
-                  ELSE tt.t + v.strt END AS torig
-      FROM variants v, UNNEST(range(0, v.len)) AS tt(t)
-    ),
+    return f"""
+    cos_t AS ({_PHASH_COS_SQL}),
     grid AS (
       SELECT vf.doc_id, vf.variant, vf.vcode, vf.src, vf.t, vf.torig,
              xx.tx AS tx, yy.ty AS ty,
@@ -2934,6 +2407,7 @@ def _video_contained_oracle() -> str:
       FROM grid
     ),
     gray AS (
+      -- palette-mapped gray: the GIF global-color-table formula
       SELECT doc_id, variant, vcode, t, tx, ty,
              ((i*7 + 1) % 256 + (i*11 + 3) % 256 + (i*13 + 5) % 256) // 3
                AS g
@@ -2972,14 +2446,289 @@ def _video_contained_oracle() -> str:
              string_agg(CAST(band_val AS VARCHAR), ':'
                         ORDER BY band_idx) AS sig
       FROM bands GROUP BY doc_id, variant, vcode, t
+    ),"""
+
+
+def _video_phash_oracle() -> str:
+    return """
+    WITH docs AS (
+      SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h,
+             4 + doc_id % 5 AS nf
+      FROM documents WHERE doc_id < 200
     ),
-    sh AS (
-      SELECT f1.key, f1.doc_id, f1.variant, f1.t,
-             f1.sig || '>' || f2.sig AS shingle
-      FROM fsig f1
-      JOIN fsig f2 ON f2.key = f1.key AND f2.t = f1.t + 1
+    variants AS (
+      SELECT doc_id, w, h, nf, 'orig' AS variant, 0 AS vcode FROM docs
+      UNION ALL
+      SELECT doc_id, w, h, nf, 'reenc', 1 FROM docs WHERE doc_id % 3 = 0
+      UNION ALL
+      SELECT doc_id, w, h, nf - 1, 'trim', 2 FROM docs WHERE doc_id % 4 = 0
     ),
-""" + _CONTAIN_TAIL_1D).replace("__COS__", _PHASH_COS_SQL)
+    vf AS (
+      SELECT v.doc_id, v.variant, v.vcode, v.doc_id AS src, v.w, v.h,
+             tt.t, tt.t AS torig
+      FROM variants v, UNNEST(range(0, v.nf)) AS tt(t)
+    ),""" + _gif_fsig_sql() + f"""
+    ksig AS (SELECT DISTINCT key, doc_id, variant, sig FROM fsig),
+    ksigc AS (SELECT * FROM ksig
+              QUALIFY COUNT(*) OVER (PARTITION BY sig) <= {_LANDMARK_DF_CAP}),
+    ncnt AS (SELECT key, COUNT(*) AS n_sigs FROM ksigc GROUP BY key),
+    shared AS (
+      SELECT a.key AS ka, b.key AS kb, a.doc_id AS da, b.doc_id AS db,
+             a.variant AS va, b.variant AS vb,
+             COUNT(*) AS n_common
+      FROM ksigc a
+      JOIN ksigc b ON a.sig = b.sig AND a.key < b.key
+      GROUP BY a.key, b.key, a.doc_id, b.doc_id, a.variant, b.variant
+    ),
+    kept AS (
+      SELECT s.*, na.n_sigs AS nsa, nb.n_sigs AS nsb
+      FROM shared s
+      JOIN ncnt na ON na.key = s.ka
+      JOIN ncnt nb ON nb.key = s.kb
+      WHERE 2 * s.n_common >= LEAST(na.n_sigs, nb.n_sigs)
+    )
+    SELECT CASE WHEN da = db THEN va || '-' || vb
+                ELSE 'cross' END AS pair_kind,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs,
+           CAST(SUM(CASE WHEN n_common = GREATEST(nsa, nsb)
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_identical,
+           CAST(SUM(n_common) AS BIGINT) AS sum_common,
+           MIN(da) AS min_doc, MAX(db) AS max_doc
+    FROM kept
+    GROUP BY CASE WHEN da = db THEN va || '-' || vb ELSE 'cross' END
+    """
+
+
+@register(
+    "dedup_video_phash",
+    oracle=_video_phash_oracle(),
+    doc="VIDEO near-dup dedup via per-frame perceptual hashing — the "
+    "third dedup modality (text, image, audio, now video): every "
+    "variant is a REAL animated GIF89a (multi-frame LZW streams, "
+    "graphic-control + looping extensions — real inter-frame container "
+    "structure), decoded frame by frame through decode_gif_frames; "
+    "each frame pHashes through the shared integer-DCT core, a video's "
+    "fingerprint is its frame-hash SET, and candidates come from an "
+    "inverted index on frame hash (videos sharing >= half the smaller "
+    "set's hashes pair up) — the standard frame-fingerprint video-dedup "
+    "shape, never all-pairs. Certified end to end by the SQL replay "
+    "(frames -> DCT -> threshold -> per-frame sig -> overlap verdict); "
+    "runtime pins: every comment-extension re-encode (67) is "
+    "IDENTICAL-set, every last-frame trim (50) still pairs with its "
+    "original (shared-prefix class). Scale: |videos|*frames index rows, "
+    "one shuffle on frame hash; hot frame-hashes (corpus-wide static "
+    "intro/black frames — SCALE.md's measured 953x overlay) are capped "
+    "IN PLAN at df <= 64 (_cap_hot_landmarks, mirrored in the oracle's "
+    "ksigc QUALIFY stanza) before the counts and the self-join.",
+    tags=("extension", "dedup", "multimodal", "video", "pandas_udf"),
+)
+def dedup_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from apache_hive_1_2_2_src_spark.extensions.multimodal import (
+        fixture_variant_count,
+        stage_video_payloads,
+        video_frame_sigs,
+    )
+
+    pay = spark.read.parquet(stage_video_payloads(spark, sf_dir))
+    ksig = (
+        _decode_payloads(pay, "video", video_frame_sigs, ("t int", "sig string"))
+        .select("key", "doc_id", "variant", "sig")
+        .distinct()
+    )
+    # frame-index-sized (|videos| x <=8 rows); cap BEFORE the checkpoint
+    # so the df window is materialized once — not recomputed by ncnt plus
+    # both self-join branches — and the self-join never decodes twice
+    ksig = _cap_hot_landmarks(ksig, "sig").localCheckpoint()
+    ncnt = ksig.groupBy("key").agg(F.count(F.lit(1)).alias("n_sigs"))
+    a, b = ksig.alias("a"), ksig.alias("b")
+    shared = (
+        a.join(
+            b,
+            (F.col("a.sig") == F.col("b.sig"))
+            & (F.col("a.key") < F.col("b.key")),
+        )
+        .groupBy(
+            F.col("a.key").alias("ka"), F.col("b.key").alias("kb"),
+            F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"),
+            F.col("a.variant").alias("va"), F.col("b.variant").alias("vb"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    kept = (
+        shared.join(
+            ncnt.select(F.col("key").alias("ka"), F.col("n_sigs").alias("nsa")),
+            "ka",
+        )
+        .join(
+            ncnt.select(F.col("key").alias("kb"), F.col("n_sigs").alias("nsb")),
+            "kb",
+        )
+        .filter(2 * F.col("n_common") >= F.least("nsa", "nsb"))
+        .withColumn("pair_kind", _pair_kind(F.lit("cross")))
+    )
+    out = kept.groupBy("pair_kind").agg(
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        F.sum(
+            F.when(F.col("n_common") == F.greatest("nsa", "nsb"), 1).otherwise(0)
+        ).cast("long").alias("n_identical"),
+        F.sum("n_common").cast("long").alias("sum_common"),
+        F.min("da").alias("min_doc"),
+        F.max("db").alias("max_doc"),
+    )
+    got = {r["pair_kind"]: r for r in out.collect()}
+    if got.get("orig-reenc", {"n_identical": 0})["n_identical"] != fixture_variant_count("video", "reenc"):
+        raise AssertionError(f"reenc recall broken: {got.get('orig-reenc')}")
+    if got.get("orig-trim", {"n_pairs": 0})["n_pairs"] != fixture_variant_count("video", "trim"):
+        raise AssertionError(f"trim recall broken: {got.get('orig-trim')}")
+    return out
+
+
+# ------------------ Video TEMPORAL near-dup / alignment (r15) ------------
+
+
+def _video_temporal_oracle() -> str:
+    return (
+        """
+    WITH docs AS (
+      SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h,
+             4 + doc_id % 5 AS nf
+      FROM documents WHERE doc_id < 200
+    ),
+    variants AS (
+      SELECT doc_id, w, h, nf, 'orig' AS variant, 0 AS vcode FROM docs
+      UNION ALL
+      SELECT doc_id, w, h, nf, 'shift', 1 FROM docs WHERE doc_id % 4 = 0
+      UNION ALL
+      SELECT doc_id, w, h, nf, 'loop', 2 FROM docs WHERE doc_id % 6 = 0
+    ),
+    vf AS (
+      SELECT v.doc_id, v.variant, v.vcode, v.doc_id AS src, v.w, v.h, tt.t,
+             CASE v.variant
+               WHEN 'shift' THEN (tt.t + 2) % v.nf
+               WHEN 'loop' THEN tt.t % v.nf
+               ELSE tt.t
+             END AS torig
+      FROM variants v,
+           UNNEST(range(0, CASE WHEN v.variant = 'loop'
+                                THEN 2 * v.nf ELSE v.nf END)) AS tt(t)
+    ),"""
+        + _gif_fsig_sql()
+        + _shingle_sql(2, ">")
+        + _containment_sql()
+        + """
+    SELECT CASE WHEN da = db THEN va || '-' || vb
+                ELSE 'cross' END AS pair_kind,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs,
+           CAST(SUM(CASE WHEN best_off = 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_off_zero,
+           CAST(SUM(CASE WHEN ABS(best_off) = 2 THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_abs_off_two,
+           CAST(SUM(n_match) AS BIGINT) AS sum_match,
+           MIN(da) AS min_doc, MAX(db) AS max_doc
+    FROM kept
+    GROUP BY CASE WHEN da = db THEN va || '-' || vb ELSE 'cross' END
+    """
+    )
+
+
+@register(
+    "dedup_video_temporal",
+    oracle=_video_temporal_oracle(),
+    doc="Video TEMPORAL near-dup with ALIGNMENT recovery — the "
+    "sequence-aware step beyond dedup_video_phash's set overlap (a "
+    "looped stream captured at a different start has the SAME frame "
+    "set; only ordering tells you it is the same broadcast): frame "
+    "hashes shingle into consecutive 2-grams (one equi-self-join on "
+    "frame position, no per-key window), an inverted index on shingle "
+    "yields matched position pairs, each match votes its offset "
+    "(ta - tb), and the modal offset (ties broken smallest-|off|) IS "
+    "the recovered alignment. Certified end to end by the SQL replay; "
+    "runtime pins: all 50 shifted clips pair with their originals at "
+    "|offset| = 2 (the staged entry-point shift), all 34 doubled "
+    "clips at offset 0, zero spurious cross pairs under the "
+    "half-overlap rule. Scale: |videos| x frames shingle rows, one "
+    "shuffle on shingle; offset voting groups by (pair, offset) — "
+    "bounded by clip length, not corpus; hot shingles (static "
+    "intro/outro SEQUENCES make corpus-wide 2-grams — SCALE.md r15) "
+    "are capped IN PLAN at df <= 64 (_cap_hot_landmarks, mirrored in "
+    "the oracle's shc QUALIFY stanza).",
+    tags=("extension", "dedup", "multimodal", "video", "temporal"),
+)
+def dedup_video_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from apache_hive_1_2_2_src_spark.extensions.multimodal import (
+        fixture_variant_count,
+        stage_video_temporal_payloads,
+        video_frame_sigs,
+    )
+
+    pay = spark.read.parquet(stage_video_temporal_payloads(spark, sf_dir))
+    fsig = _decode_payloads(
+        pay, "vtemporal", video_frame_sigs, ("t int", "sig string")
+    ).localCheckpoint()
+    # the positional verdict of the containment queries; this query
+    # reports cross-doc pairs as 'cross' and ignores the relation
+    kept = _containment_pairs(
+        _frame_shingles(fsig, 2, ">"), ("t",), ("off",)
+    ).withColumn("pair_kind", _pair_kind(F.lit("cross")))
+    out = kept.groupBy("pair_kind").agg(
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        F.sum(F.when(F.col("best_off") == 0, 1).otherwise(0))
+        .cast("long").alias("n_off_zero"),
+        F.sum(F.when(F.abs("best_off") == 2, 1).otherwise(0))
+        .cast("long").alias("n_abs_off_two"),
+        F.sum("n_match").cast("long").alias("sum_match"),
+        F.min("da").alias("min_doc"),
+        F.max("db").alias("max_doc"),
+    )
+    got = {r["pair_kind"]: r for r in out.collect()}
+    s = got.get("orig-shift", {"n_pairs": 0, "n_abs_off_two": 0})
+    n_shift = fixture_variant_count("vtemporal", "shift")
+    if (s["n_pairs"], s["n_abs_off_two"]) != (n_shift, n_shift):
+        raise AssertionError(f"shift alignment broken: {s}")
+    lo = got.get("orig-loop", {"n_pairs": 0, "n_off_zero": 0})
+    n_loop = fixture_variant_count("vtemporal", "loop")
+    if (lo["n_pairs"], lo["n_off_zero"]) != (n_loop, n_loop):
+        raise AssertionError(f"loop alignment broken: {lo}")
+    return out
+
+
+# ------------------ Video clip CONTAINMENT (r15, round-16 plan item) ------
+
+
+def _video_contained_oracle() -> str:
+    return (
+        """
+    WITH docs AS (
+      SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h,
+             8 + doc_id % 5 AS nf
+      FROM documents WHERE doc_id < 200
+    ),
+    variants AS (
+      SELECT doc_id, doc_id AS src, w, h, nf AS len,
+             'orig' AS variant, 0 AS vcode, 0 AS strt
+      FROM docs
+      UNION ALL
+      SELECT doc_id, doc_id, w, h, 4, 'clip', 1, 3
+      FROM docs WHERE doc_id % 3 = 0
+      UNION ALL
+      SELECT doc_id, doc_id, w, h, 5, 'mut', 2, 1
+      FROM docs WHERE doc_id % 5 = 0
+      UNION ALL
+      SELECT d.doc_id, s.doc_id, s.w, s.h, 4, 'steal', 3, 2
+      FROM docs d JOIN docs s ON s.doc_id = d.doc_id + 1
+      WHERE d.doc_id % 7 = 0
+    ),
+    vf AS (
+      SELECT v.doc_id, v.variant, v.vcode, v.src, v.w, v.h, tt.t,
+             CASE WHEN v.variant = 'mut' AND tt.t = 2 THEN 53
+                  ELSE tt.t + v.strt END AS torig
+      FROM variants v, UNNEST(range(0, v.len)) AS tt(t)
+    ),"""
+        + _gif_fsig_sql()
+        + _shingle_sql(2, ">")
+        + _containment_sql()
+        + _containment_summary_sql()
+    )
 
 
 @register(
@@ -3013,73 +2762,20 @@ def _video_contained_oracle() -> str:
     tags=("extension", "dedup", "multimodal", "video", "temporal"),
 )
 def dedup_video_contained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from apache_hive_1_2_2_src_spark.extensions.multimodal import (
         fixture_variant_count,
         stage_video_clip_payloads,
-        video_frame_phashes,
+        video_frame_sigs,
     )
 
     pay = spark.read.parquet(stage_video_clip_payloads(spark, sf_dir))
-
-    def fp_batches(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "variant": [], "t": [], "sig": []}
-            for doc_id, variant, payload in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                for t, h in enumerate(video_frame_phashes(bytes(payload))):
-                    out["doc_id"].append(int(doc_id))
-                    out["variant"].append(str(variant))
-                    out["t"].append(t)
-                    out["sig"].append(":".join(str(x) for x in h))
-            yield pd.DataFrame(out)
-
-    fsig = (
-        pay.mapInPandas(
-            fp_batches, "doc_id bigint, variant string, t int, sig string"
-        )
-        .withColumn(
-            "vcode",
-            F.when(F.col("variant") == "orig", 0)
-            .when(F.col("variant") == "clip", 1)
-            .when(F.col("variant") == "mut", 2)
-            .otherwise(3),
-        )
-        .select(
-            (F.col("doc_id") * 10 + F.col("vcode")).alias("key"),
-            "doc_id", "variant", "t", "sig",
-        )
-        # frame-index-sized; checkpoint so the shingle self-join and the
-        # downstream vote/total/count reuses never re-decode the GIFs
-        .localCheckpoint()
-    )
-    f1, f2 = fsig.alias("f1"), fsig.alias("f2")
-    sh = f1.join(
-        f2,
-        (F.col("f2.key") == F.col("f1.key"))
-        & (F.col("f2.t") == F.col("f1.t") + 1),
-    ).select(
-        F.col("f1.key").alias("key"),
-        F.col("f1.doc_id").alias("doc_id"),
-        F.col("f1.variant").alias("variant"),
-        F.col("f1.t").alias("t"),
-        F.concat(F.col("f1.sig"), F.lit(">"), F.col("f2.sig")).alias(
-            "shingle"
-        ),
-    )
-    kept = _containment_pairs(sh, ("t",), ("off",))
-    out = kept.groupBy("pair_kind", "relation").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum(
-            F.when(F.col("n_match") == F.least("nsa", "nsb"), 1).otherwise(0)
-        ).cast("long").alias("n_full"),
-        F.sum("n_match").cast("long").alias("sum_match"),
-        F.min("best_off").alias("min_off"),
-        F.max("best_off").alias("max_off"),
-        F.min("da").alias("min_doc"),
-        F.max("db").alias("max_doc"),
+    # frame-index-sized; checkpoint so the shingle self-join and the
+    # downstream vote/total/count reuses never re-decode the GIFs
+    fsig = _decode_payloads(
+        pay, "vclip", video_frame_sigs, ("t int", "sig string")
+    ).localCheckpoint()
+    out = _containment_summary(
+        _containment_pairs(_frame_shingles(fsig, 2, ">"), ("t",), ("off",))
     )
     got = {(r["pair_kind"], r["relation"]): r for r in out.collect()}
     c = got.get(("orig-clip", "contained"),
@@ -3140,15 +2836,7 @@ _AUDIO_CLIP_CTES = """
       SELECT doc_id, variant, vcode, doc_id * 10 + vcode AS key, t,
              CAST(e AS VARCHAR) AS sig
       FROM en
-    ),
-    sh AS (
-      SELECT f1.key, f1.doc_id, f1.variant, f1.t,
-             f1.sig || ':' || f2.sig || ':' || f3.sig AS shingle
-      FROM fsig f1
-      JOIN fsig f2 ON f2.key = f1.key AND f2.t = f1.t + 1
-      JOIN fsig f3 ON f3.key = f1.key AND f3.t = f1.t + 2
-    ),
-"""
+    ),""" + _shingle_sql(3, ":")
 
 
 @register(
@@ -3157,7 +2845,7 @@ _AUDIO_CLIP_CTES = """
     # (HAVING COUNT(*)=2 drops an odd tail) -> positional 3-gram energy
     # landmarks -> inverted-index offset voting -> the one-sided verdict,
     # all from the quadratic fixture stream.
-    oracle=_AUDIO_CLIP_CTES + _CONTAIN_TAIL_1D,
+    oracle=_AUDIO_CLIP_CTES + _containment_sql() + _containment_summary_sql(),
     doc="Audio clip CONTAINMENT with offset recovery — the audio twin of "
     "dedup_video_contained and the Shazam shape (Wang 2003) reduced to "
     "its time axis: every variant's REAL RIFF/WAVE bytes decode through "
@@ -3183,8 +2871,6 @@ _AUDIO_CLIP_CTES = """
     tags=("extension", "dedup", "multimodal", "audio", "temporal"),
 )
 def dedup_audio_contained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from apache_hive_1_2_2_src_spark.extensions.multimodal import (
         fixture_variant_count,
         stage_audio_clip_payloads,
@@ -3192,72 +2878,14 @@ def dedup_audio_contained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pay = spark.read.parquet(stage_audio_clip_payloads(spark, sf_dir))
-
-    def fp_batches(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "variant": [], "t": [], "sig": []}
-            for doc_id, variant, payload in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                for t, e in enumerate(wav_energy_frames(bytes(payload))):
-                    out["doc_id"].append(int(doc_id))
-                    out["variant"].append(str(variant))
-                    out["t"].append(t)
-                    out["sig"].append(str(e))
-            yield pd.DataFrame(out)
-
-    fsig = (
-        pay.mapInPandas(
-            fp_batches, "doc_id bigint, variant string, t int, sig string"
-        )
-        .withColumn(
-            "vcode",
-            F.when(F.col("variant") == "orig", 0)
-            .when(F.col("variant") == "clip", 1)
-            .when(F.col("variant") == "mut", 2)
-            .otherwise(3),
-        )
-        .select(
-            (F.col("doc_id") * 10 + F.col("vcode")).alias("key"),
-            "doc_id", "variant", "t", "sig",
-        )
-        # landmark-stream-sized; checkpoint so the 3-gram joins and the
-        # vote/total/count reuses never re-decode the WAVs
-        .localCheckpoint()
-    )
-    f1, f2, f3 = fsig.alias("f1"), fsig.alias("f2"), fsig.alias("f3")
-    sh = (
-        f1.join(
-            f2,
-            (F.col("f2.key") == F.col("f1.key"))
-            & (F.col("f2.t") == F.col("f1.t") + 1),
-        )
-        .join(
-            f3,
-            (F.col("f3.key") == F.col("f1.key"))
-            & (F.col("f3.t") == F.col("f1.t") + 2),
-        )
-        .select(
-            F.col("f1.key").alias("key"),
-            F.col("f1.doc_id").alias("doc_id"),
-            F.col("f1.variant").alias("variant"),
-            F.col("f1.t").alias("t"),
-            F.concat_ws(
-                ":", F.col("f1.sig"), F.col("f2.sig"), F.col("f3.sig")
-            ).alias("shingle"),
-        )
-    )
-    kept = _containment_pairs(sh, ("t",), ("off",))
-    out = kept.groupBy("pair_kind", "relation").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum(
-            F.when(F.col("n_match") == F.least("nsa", "nsb"), 1).otherwise(0)
-        ).cast("long").alias("n_full"),
-        F.sum("n_match").cast("long").alias("sum_match"),
-        F.min("best_off").alias("min_off"),
-        F.max("best_off").alias("max_off"),
-        F.min("da").alias("min_doc"),
-        F.max("db").alias("max_doc"),
+    # landmark-stream-sized; checkpoint so the 3-gram joins and the
+    # vote/total/count reuses never re-decode the WAVs
+    fsig = _decode_payloads(
+        pay, "aclip", lambda buf: enumerate(map(str, wav_energy_frames(buf))),
+        ("t int", "sig string"),
+    ).localCheckpoint()
+    out = _containment_summary(
+        _containment_pairs(_frame_shingles(fsig, 3, ":"), ("t",), ("off",))
     )
     got = {(r["pair_kind"], r["relation"]): r for r in out.collect()}
     c = got.get(("orig-clip", "contained"),
@@ -3329,63 +2957,16 @@ def _crop_oracle() -> str:
                     FROM UNNEST(range(0, v.bw)) AS bxx(bx),
                          UNNEST(range(0, v.bh)) AS byy(by)) AS g
     ),
-    lm AS (
+    sh AS (
       SELECT doc_id, variant, vcode, doc_id * 10 + vcode AS key, bx, by,
              CAST(v00 AS VARCHAR) || ':' || CAST(v10 AS VARCHAR) || ':'
                || CAST(v01 AS VARCHAR) || ':' || CAST(v11 AS VARCHAR)
-               AS sig
+               AS shingle
       FROM corners
     ),
-    lmc AS (SELECT * FROM lm
-            QUALIFY COUNT(*) OVER (PARTITION BY sig) <= {_LANDMARK_DF_CAP}),
-    nlm AS (SELECT key, COUNT(*) AS n_lm FROM lmc GROUP BY key),
-    votes AS (
-      SELECT a.key AS ka, b.key AS kb, a.doc_id AS da, b.doc_id AS db,
-             a.variant AS va, b.variant AS vb,
-             a.bx - b.bx AS dx, a.by - b.by AS dy, COUNT(*) AS cnt
-      FROM lmc a
-      JOIN lmc b ON a.sig = b.sig AND a.key < b.key
-      GROUP BY a.key, b.key, a.doc_id, b.doc_id, a.variant, b.variant,
-               a.bx - b.bx, a.by - b.by
-    ),
-    ranked AS (
-      SELECT *, ROW_NUMBER() OVER (
-               PARTITION BY ka, kb
-               ORDER BY cnt DESC, ABS(dx) + ABS(dy), dx, dy) AS rn
-      FROM votes
-    ),
-    best AS (
-      SELECT ka, kb, da, db, va, vb, dx AS best_dx, dy AS best_dy
-      FROM ranked WHERE rn = 1
-    ),
-    tot AS (SELECT ka, kb, SUM(cnt) AS n_match FROM votes GROUP BY ka, kb),
-    kept AS (
-      SELECT b.*, t.n_match, na.n_lm AS nsa, nb.n_lm AS nsb
-      FROM best b
-      JOIN tot t ON t.ka = b.ka AND t.kb = b.kb
-      JOIN nlm na ON na.key = b.ka
-      JOIN nlm nb ON nb.key = b.kb
-      WHERE 2 * t.n_match >= LEAST(na.n_lm, nb.n_lm)
+""" + _containment_sql(("bx", "by"), ("dx", "dy")) + _containment_summary_sql(
+        ("dx", "dy")
     )
-    SELECT CASE WHEN da = db THEN va || '-' || vb
-                ELSE 'x:' || va || '-' || vb END AS pair_kind,
-           CASE WHEN 2 * n_match >= GREATEST(nsa, nsb) THEN 'neardup'
-                ELSE 'contained' END AS relation,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(CASE WHEN n_match = LEAST(nsa, nsb)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_full,
-           CAST(SUM(n_match) AS BIGINT) AS sum_match,
-           CAST(MIN(best_dx) AS INTEGER) AS min_dx,
-           CAST(MAX(best_dx) AS INTEGER) AS max_dx,
-           CAST(MIN(best_dy) AS INTEGER) AS min_dy,
-           CAST(MAX(best_dy) AS INTEGER) AS max_dy,
-           MIN(da) AS min_doc, MAX(db) AS max_doc
-    FROM kept
-    GROUP BY CASE WHEN da = db THEN va || '-' || vb
-                  ELSE 'x:' || va || '-' || vb END,
-             CASE WHEN 2 * n_match >= GREATEST(nsa, nsb) THEN 'neardup'
-                  ELSE 'contained' END
-    """
 
 
 @register(
@@ -3411,13 +2992,11 @@ def _crop_oracle() -> str:
     "backgrounds (the hot-landmark class — worse than 1-D because 2-D "
     "offset voting multiplies span^2 per pair, SCALE.md r16 overlay) "
     "are capped IN PLAN at df <= 64 inside _containment_pairs, "
-    "mirrored in the oracle's lmc stanza; voting is bounded by crop "
+    "mirrored in the oracle's shc stanza; voting is bounded by crop "
     "area, not corpus.",
     tags=("extension", "dedup", "multimodal", "phash", "temporal"),
 )
 def dedup_image_cropped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from apache_hive_1_2_2_src_spark.extensions.multimodal import (
         fixture_variant_count,
         image_block_signatures,
@@ -3425,57 +3004,14 @@ def dedup_image_cropped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pay = spark.read.parquet(stage_image_crop_payloads(spark, sf_dir))
-
-    def lm_batches(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "variant": [], "bx": [], "by": [],
-                   "sig": []}
-            for doc_id, variant, payload in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                for bx, by, sig in image_block_signatures(bytes(payload)):
-                    out["doc_id"].append(int(doc_id))
-                    out["variant"].append(str(variant))
-                    out["bx"].append(bx)
-                    out["by"].append(by)
-                    out["sig"].append(sig)
-            yield pd.DataFrame(out)
-
-    lm = (
-        pay.mapInPandas(
-            lm_batches,
-            "doc_id bigint, variant string, bx int, by int, sig string",
-        )
-        .withColumn(
-            "vcode",
-            F.when(F.col("variant") == "orig", 0)
-            .when(F.col("variant") == "crop", 1)
-            .when(F.col("variant") == "mut", 2)
-            .otherwise(3),
-        )
-        .select(
-            (F.col("doc_id") * 10 + F.col("vcode")).alias("key"),
-            "doc_id", "variant", "bx", "by", "sig",
-        )
-        # landmark-table-sized; checkpoint so the inverted-index
-        # self-join and count reuses never re-decode the BMPs
-        .localCheckpoint()
-    )
-    kept = _containment_pairs(
-        lm.withColumnRenamed("sig", "shingle"), ("bx", "by"), ("dx", "dy")
-    )
-    out = kept.groupBy("pair_kind", "relation").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum(
-            F.when(F.col("n_match") == F.least("nsa", "nsb"), 1).otherwise(0)
-        ).cast("long").alias("n_full"),
-        F.sum("n_match").cast("long").alias("sum_match"),
-        F.min("best_dx").alias("min_dx"),
-        F.max("best_dx").alias("max_dx"),
-        F.min("best_dy").alias("min_dy"),
-        F.max("best_dy").alias("max_dy"),
-        F.min("da").alias("min_doc"),
-        F.max("db").alias("max_doc"),
+    # landmark-table-sized; checkpoint so the inverted-index self-join
+    # and count reuses never re-decode the BMPs
+    lm = _decode_payloads(
+        pay, "crop", image_block_signatures,
+        ("bx int", "by int", "shingle string"),
+    ).localCheckpoint()
+    out = _containment_summary(
+        _containment_pairs(lm, ("bx", "by"), ("dx", "dy")), ("dx", "dy")
     )
     got = {(r["pair_kind"], r["relation"]): r for r in out.collect()}
 

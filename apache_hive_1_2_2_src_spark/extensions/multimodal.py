@@ -449,14 +449,15 @@ def _fixture_payload(doc_id: int, kind: str) -> bytes:
     return encode_ppm(w, h, pix)
 
 
-def stage_payloads(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    """Stage the fixture blobs into a REAL parquet ``binary`` column —
-    (doc_id, payload) — and return the path. Round 9: the decode queries
-    read THIS table back and their kernels consume ``payload`` from the
-    scan (Arrow binary transport end to end); generation happens only
-    here, in a separate distributed write pass, exactly where a crawler
-    would have written real media. Idempotent per (process, sf, kind);
-    kinds: 'bmp' (all BMP), 'img' (BMP/PPM by doc parity), 'wav'."""
+def _stage_rows(spark: SparkSession, sf_dir: str, kind: str, schema: str, rows) -> str:
+    """The one fixture-corpus stager: write ``rows(doc_id)`` (tuples in
+    ``schema`` order) for every fixture doc into a REAL parquet table at
+    ``_tmp("mm_payloads_<kind>_<tag>")`` and return the path. Generation
+    runs in a separate distributed write pass (8 doc_id partitions of the
+    ``documents`` scan), exactly where a crawler would have written real
+    media; the queries read the table back and decode the scan's bytes.
+    Idempotent per (process, sf, kind): a finished table (``_SUCCESS``)
+    is reused."""
     import hashlib
     import os
 
@@ -474,18 +475,32 @@ def stage_payloads(spark: SparkSession, sf_dir: str, kind: str) -> str:
         .filter(F.col("doc_id") < FIXTURE_DOC_LIMIT)
         .repartition(8, "doc_id")
     )
+    cols = [c.split()[0] for c in schema.split(", ")]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": [_fixture_payload(i, kind) for i in ids]}
-            )
+            out: dict[str, list] = {c: [] for c in cols}
+            for i in (int(x) for x in pdf["doc_id"]):
+                for row in rows(i):
+                    for c, v in zip(cols, row):
+                        out[c].append(v)
+            yield pd.DataFrame(out)
 
-    d.mapInPandas(gen, "doc_id bigint, payload binary").write.mode(
-        "overwrite"
-    ).parquet(path)
+    d.mapInPandas(gen, schema).write.mode("overwrite").parquet(path)
     return path
+
+
+def stage_payloads(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """Stage the fixture blobs into a REAL parquet ``binary`` column —
+    (doc_id, payload) — and return the path. Round 9: the decode queries
+    read THIS table back and their kernels consume ``payload`` from the
+    scan (Arrow binary transport end to end). Idempotent per (process,
+    sf, kind); kinds: 'bmp' (all BMP), 'img' (BMP/PPM by doc parity),
+    'wav'."""
+    return _stage_rows(
+        spark, sf_dir, kind, "doc_id bigint, payload binary",
+        lambda i: [(i, _fixture_payload(i, kind))],
+    )
 
 
 @register(
@@ -2548,6 +2563,34 @@ def fixture_variant_count(corpus: str, variant: str) -> int:
     return sum(1 for d in range(FIXTURE_DOC_LIMIT) if pred(d))
 
 
+def fixture_variants(corpus: str) -> tuple[str, ...]:
+    """The corpus's variants in vcode order: 'orig' (vcode 0) for every
+    fixture doc, then the corpus's FIXTURE_VARIANT_PREDS entries in
+    declaration order. A staged row's key is doc_id*10 + vcode."""
+    return ("orig",) + tuple(v for c, v in FIXTURE_VARIANT_PREDS if c == corpus)
+
+
+def _stage_corpus(
+    spark: SparkSession, sf_dir: str, corpus: str, payloads, kind: str | None = None
+) -> str:
+    """Stage a dedup corpus as (doc_id, variant, payload) through
+    _stage_rows. ``payloads(doc_id)`` maps each of the corpus's variants
+    to a thunk building its bytes; the stager emits 'orig' for every doc
+    and each other variant where its FIXTURE_VARIANT_PREDS predicate
+    holds, in fixture_variants order. ``kind`` names the staged directory
+    (default: the corpus)."""
+
+    def rows(i: int):
+        built = payloads(i)
+        for v in fixture_variants(corpus):
+            if v == "orig" or FIXTURE_VARIANT_PREDS[(corpus, v)](i):
+                yield i, v, built[v]()
+
+    return _stage_rows(
+        spark, sf_dir, kind or corpus,
+        "doc_id bigint, variant string, payload binary", rows,
+    )
+
 
 def stage_phash_payloads(spark: SparkSession, sf_dir: str) -> str:
     """Stage the pHash fixture corpus as (doc_id, variant, payload):
@@ -2558,51 +2601,19 @@ def stage_phash_payloads(spark: SparkSession, sf_dir: str) -> str:
     doc_id%5==0 with width>=9 (byte-different, thumbnail-identical —
     the downsample-robustness class). The dedup query reads this table
     back and hashes REAL bytes."""
-    import hashlib
-    import os
 
-    from apache_hive_1_2_2_src_spark.sources.io import _tmp
+    def payloads(i: int):
+        w, h = _bmp_fixture_dims(i)
+        pix = _phash_fixture_pixel(i)
+        return {
+            "orig": lambda: encode_bmp24(w, h, pix),
+            "reenc": lambda: encode_png(w, h, pix, filter_of=lambda y: (i + y) % 5),
+            # width 4 + i%13 >= 9: the last column is provably
+            # unsampled, so the pert edit must be hash-invisible
+            "pert": lambda: encode_bmp24(w, h, _phash_pert_pixel(i, w)),
+        }
 
-    tag = hashlib.md5(os.path.normpath(sf_dir).encode()).hexdigest()[:12]
-    path = _tmp(f"mm_payloads_phash_{tag}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < FIXTURE_DOC_LIMIT)
-        .repartition(8, "doc_id")
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "variant": [], "payload": []}
-            for i in (int(x) for x in pdf["doc_id"]):
-                w, h = _bmp_fixture_dims(i)
-                pix = _phash_fixture_pixel(i)
-                out["doc_id"].append(i)
-                out["variant"].append("orig")
-                out["payload"].append(encode_bmp24(w, h, pix))
-                if FIXTURE_VARIANT_PREDS[("phash", "reenc")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("reenc")
-                    out["payload"].append(
-                        encode_png(w, h, pix, filter_of=lambda y, i=i: (i + y) % 5)
-                    )
-                if FIXTURE_VARIANT_PREDS[("phash", "pert")](i):
-                    # width 4 + i%13 >= 9: the last column is provably
-                    # unsampled, so the pert edit must be hash-invisible
-                    out["doc_id"].append(i)
-                    out["variant"].append("pert")
-                    out["payload"].append(
-                        encode_bmp24(w, h, _phash_pert_pixel(i, w))
-                    )
-            yield pd.DataFrame(out)
-
-    d.mapInPandas(gen, "doc_id bigint, variant string, payload binary").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
+    return _stage_corpus(spark, sf_dir, "phash", payloads)
 
 
 # --------------- Audio fingerprint (energy-delta signs, r15) --------------
@@ -2660,69 +2671,29 @@ def stage_audiofp_payloads(spark: SparkSession, sf_dir: str) -> str:
     (byte-different, sample-identical); 'noise' = +3 on channel 0 every
     7th frame for doc_id%7==0 (a near-duplicate, Hamming <= 1 measured).
     The dedup query reads this table back and fingerprints REAL bytes."""
-    import hashlib
-    import os
 
-    from apache_hive_1_2_2_src_spark.sources.io import _tmp
+    def payloads(i: int):
+        rate, ch, nf = _wav_fixture(i)
+        frames = [
+            tuple(_wav_fixture_sample(i, j, c) for c in range(ch))
+            for j in range(nf)
+        ]
+        return {
+            "orig": lambda: encode_wav_pcm16(rate, ch, frames),
+            "amp": lambda: encode_wav_pcm16(
+                rate, ch, [tuple(2 * s for s in f) for f in frames]
+            ),
+            "junk": lambda: wav_with_junk_chunk(encode_wav_pcm16(rate, ch, frames)),
+            "noise": lambda: encode_wav_pcm16(
+                rate, ch,
+                [
+                    (f[0] + 3 if j % 7 == 0 else f[0],) + f[1:]
+                    for j, f in enumerate(frames)
+                ],
+            ),
+        }
 
-    tag = hashlib.md5(os.path.normpath(sf_dir).encode()).hexdigest()[:12]
-    path = _tmp(f"mm_payloads_audiofp_{tag}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < FIXTURE_DOC_LIMIT)
-        .repartition(8, "doc_id")
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "variant": [], "payload": []}
-            for i in (int(x) for x in pdf["doc_id"]):
-                rate, ch, nf = _wav_fixture(i)
-                frames = [
-                    tuple(_wav_fixture_sample(i, j, c) for c in range(ch))
-                    for j in range(nf)
-                ]
-                out["doc_id"].append(i)
-                out["variant"].append("orig")
-                out["payload"].append(encode_wav_pcm16(rate, ch, frames))
-                if FIXTURE_VARIANT_PREDS[("audiofp", "amp")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("amp")
-                    out["payload"].append(
-                        encode_wav_pcm16(
-                            rate, ch,
-                            [tuple(2 * s for s in f) for f in frames],
-                        )
-                    )
-                if FIXTURE_VARIANT_PREDS[("audiofp", "junk")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("junk")
-                    out["payload"].append(
-                        wav_with_junk_chunk(
-                            encode_wav_pcm16(rate, ch, frames)
-                        )
-                    )
-                if FIXTURE_VARIANT_PREDS[("audiofp", "noise")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("noise")
-                    out["payload"].append(
-                        encode_wav_pcm16(
-                            rate, ch,
-                            [
-                                (f[0] + 3 if j % 7 == 0 else f[0],) + f[1:]
-                                for j, f in enumerate(frames)
-                            ],
-                        )
-                    )
-            yield pd.DataFrame(out)
-
-    d.mapInPandas(gen, "doc_id bigint, variant string, payload binary").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
+    return _stage_corpus(spark, sf_dir, "audiofp", payloads)
 
 
 # ------------------- Animated GIF (GIF89a) — video container (r15) --------
@@ -2875,6 +2846,17 @@ def _vid_fixture_index(doc_id: int, t: int):
     return idx
 
 
+def _vid_gif(doc_id: int, n_frames: int, frame_of=lambda t: t) -> bytes:
+    """An animated GIF89a of ``doc_id``'s fixture stream at its BMP
+    fixture dimensions: output frame t shows source frame
+    ``frame_of(t)``."""
+    w, h = _bmp_fixture_dims(doc_id)
+    return encode_gif89a_anim(
+        w, h, _gif_palette, lambda t: _vid_fixture_index(doc_id, frame_of(t)),
+        n_frames,
+    )
+
+
 def stage_video_payloads(spark: SparkSession, sf_dir: str) -> str:
     """Stage the video-dedup corpus as (doc_id, variant, payload):
     'orig' = an animated GIF89a per doc_id < 200 (4..8 full-canvas
@@ -2883,55 +2865,16 @@ def stage_video_payloads(spark: SparkSession, sf_dir: str) -> str:
     same video minus its LAST frame for doc_id%4==0 (the
     shared-prefix near-duplicate class). The dedup query decodes REAL
     bytes back from this table."""
-    import hashlib
-    import os
 
-    from apache_hive_1_2_2_src_spark.sources.io import _tmp
+    def payloads(i: int):
+        nf = _vid_fixture_nframes(i)
+        return {
+            "orig": lambda: _vid_gif(i, nf),
+            "reenc": lambda: gif_with_comment(_vid_gif(i, nf)),
+            "trim": lambda: _vid_gif(i, nf - 1),
+        }
 
-    tag = hashlib.md5(os.path.normpath(sf_dir).encode()).hexdigest()[:12]
-    path = _tmp(f"mm_payloads_video_{tag}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < FIXTURE_DOC_LIMIT)
-        .repartition(8, "doc_id")
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "variant": [], "payload": []}
-            for i in (int(x) for x in pdf["doc_id"]):
-                w, h = _bmp_fixture_dims(i)
-                nf = _vid_fixture_nframes(i)
-                orig = encode_gif89a_anim(
-                    w, h, _gif_palette,
-                    lambda t, i=i: _vid_fixture_index(i, t), nf,
-                )
-                out["doc_id"].append(i)
-                out["variant"].append("orig")
-                out["payload"].append(orig)
-                if FIXTURE_VARIANT_PREDS[("video", "reenc")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("reenc")
-                    out["payload"].append(gif_with_comment(orig))
-                if FIXTURE_VARIANT_PREDS[("video", "trim")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("trim")
-                    out["payload"].append(
-                        encode_gif89a_anim(
-                            w, h, _gif_palette,
-                            lambda t, i=i: _vid_fixture_index(i, t),
-                            nf - 1,
-                        )
-                    )
-            yield pd.DataFrame(out)
-
-    d.mapInPandas(gen, "doc_id bigint, variant string, payload binary").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
+    return _stage_corpus(spark, sf_dir, "video", payloads)
 
 
 def video_frame_phashes(buf: bytes) -> list[tuple[int, int, int, int]]:
@@ -2944,6 +2887,15 @@ def video_frame_phashes(buf: bytes) -> list[tuple[int, int, int, int]]:
     return [_phash_bands_from_pixels(w, h, fp) for fp in frames]
 
 
+def video_frame_sigs(buf: bytes) -> list[tuple[int, str]]:
+    """(t, 'b0:b1:b2:b3') per frame: video_frame_phashes as positional
+    frame signatures, the landmark stream of the video dedup queries."""
+    return [
+        (t, ":".join(str(b) for b in h))
+        for t, h in enumerate(video_frame_phashes(buf))
+    ]
+
+
 def stage_video_temporal_payloads(spark: SparkSession, sf_dir: str) -> str:
     """Stage the TEMPORAL video-dedup corpus as (doc_id, variant,
     payload): 'orig' = the animated GIF89a per doc_id < 200; 'shift' =
@@ -2952,66 +2904,16 @@ def stage_video_temporal_payloads(spark: SparkSession, sf_dir: str) -> str:
     for doc_id%4==0; 'loop' = the clip played twice (2*nf frames) for
     doc_id%6==0. Set-based fingerprints call these near-identical; only
     SEQUENCE-aware matching recovers the alignment offset."""
-    import hashlib
-    import os
 
-    from apache_hive_1_2_2_src_spark.sources.io import _tmp
+    def payloads(i: int):
+        nf = _vid_fixture_nframes(i)
+        return {
+            "orig": lambda: _vid_gif(i, nf),
+            "shift": lambda: _vid_gif(i, nf, lambda t: (t + 2) % nf),
+            "loop": lambda: _vid_gif(i, 2 * nf, lambda t: t % nf),
+        }
 
-    tag = hashlib.md5(os.path.normpath(sf_dir).encode()).hexdigest()[:12]
-    path = _tmp(f"mm_payloads_vtemporal_{tag}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < FIXTURE_DOC_LIMIT)
-        .repartition(8, "doc_id")
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "variant": [], "payload": []}
-            for i in (int(x) for x in pdf["doc_id"]):
-                w, h = _bmp_fixture_dims(i)
-                nf = _vid_fixture_nframes(i)
-                out["doc_id"].append(i)
-                out["variant"].append("orig")
-                out["payload"].append(
-                    encode_gif89a_anim(
-                        w, h, _gif_palette,
-                        lambda t, i=i: _vid_fixture_index(i, t), nf,
-                    )
-                )
-                if FIXTURE_VARIANT_PREDS[("vtemporal", "shift")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("shift")
-                    out["payload"].append(
-                        encode_gif89a_anim(
-                            w, h, _gif_palette,
-                            lambda t, i=i, nf=nf: _vid_fixture_index(
-                                i, (t + 2) % nf
-                            ),
-                            nf,
-                        )
-                    )
-                if FIXTURE_VARIANT_PREDS[("vtemporal", "loop")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("loop")
-                    out["payload"].append(
-                        encode_gif89a_anim(
-                            w, h, _gif_palette,
-                            lambda t, i=i, nf=nf: _vid_fixture_index(
-                                i, t % nf
-                            ),
-                            2 * nf,
-                        )
-                    )
-            yield pd.DataFrame(out)
-
-    d.mapInPandas(gen, "doc_id bigint, variant string, payload binary").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
+    return _stage_corpus(spark, sf_dir, "vtemporal", payloads)
 
 
 def stage_video_clip_payloads(spark: SparkSession, sf_dir: str) -> str:
@@ -3029,74 +2931,16 @@ def stage_video_clip_payloads(spark: SparkSession, sf_dir: str) -> str:
     half-overlap near-dup rule under-describes these pairs; the
     containment query applies the one-sided rule and reports the
     direction."""
-    import hashlib
-    import os
 
-    from apache_hive_1_2_2_src_spark.sources.io import _tmp
+    def payloads(i: int):
+        return {
+            "orig": lambda: _vid_gif(i, 8 + i % 5),
+            "clip": lambda: _vid_gif(i, 4, lambda t: t + 3),
+            "mut": lambda: _vid_gif(i, 5, lambda t: 53 if t == 2 else t + 1),
+            "steal": lambda: _vid_gif(i + 1, 4, lambda t: t + 2),
+        }
 
-    tag = hashlib.md5(os.path.normpath(sf_dir).encode()).hexdigest()[:12]
-    path = _tmp(f"mm_payloads_vclip_{tag}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < FIXTURE_DOC_LIMIT)
-        .repartition(8, "doc_id")
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "variant": [], "payload": []}
-            for i in (int(x) for x in pdf["doc_id"]):
-                w, h = _bmp_fixture_dims(i)
-                nf = 8 + i % 5
-                out["doc_id"].append(i)
-                out["variant"].append("orig")
-                out["payload"].append(
-                    encode_gif89a_anim(
-                        w, h, _gif_palette,
-                        lambda t, i=i: _vid_fixture_index(i, t), nf,
-                    )
-                )
-                if FIXTURE_VARIANT_PREDS[("vclip", "clip")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("clip")
-                    out["payload"].append(
-                        encode_gif89a_anim(
-                            w, h, _gif_palette,
-                            lambda t, i=i: _vid_fixture_index(i, t + 3), 4,
-                        )
-                    )
-                if FIXTURE_VARIANT_PREDS[("vclip", "mut")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("mut")
-                    out["payload"].append(
-                        encode_gif89a_anim(
-                            w, h, _gif_palette,
-                            lambda t, i=i: _vid_fixture_index(
-                                i, 53 if t == 2 else t + 1
-                            ),
-                            5,
-                        )
-                    )
-                if FIXTURE_VARIANT_PREDS[("vclip", "steal")](i):
-                    sw, sh = _bmp_fixture_dims(i + 1)
-                    out["doc_id"].append(i)
-                    out["variant"].append("steal")
-                    out["payload"].append(
-                        encode_gif89a_anim(
-                            sw, sh, _gif_palette,
-                            lambda t, j=i + 1: _vid_fixture_index(j, t + 2),
-                            4,
-                        )
-                    )
-            yield pd.DataFrame(out)
-
-    d.mapInPandas(gen, "doc_id bigint, variant string, payload binary").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
+    return _stage_corpus(spark, sf_dir, "vclip", payloads)
 
 
 # --------------- Audio clip containment corpus (r15) ----------------------
@@ -3150,82 +2994,34 @@ def stage_audio_clip_payloads(spark: SparkSession, sf_dir: str) -> str:
     containment); 'steal' = the NEXT doc's excerpt published under this
     doc's id for doc_id%7==0 (cross-document containment, the
     sampled-track shape)."""
-    import hashlib
-    import os
 
-    from apache_hive_1_2_2_src_spark.sources.io import _tmp
+    def payloads(i: int):
+        rate = 8000 + (i % 3) * 4000
+        ch = 1 + i % 2
 
-    tag = hashlib.md5(os.path.normpath(sf_dir).encode()).hexdigest()[:12]
-    path = _tmp(f"mm_payloads_aclip_{tag}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < FIXTURE_DOC_LIMIT)
-        .repartition(8, "doc_id")
-    )
+        def excerpt(src: int, mut: bool) -> bytes:
+            return encode_wav_pcm16(
+                rate, 1,
+                [
+                    (_aclip_sample(src, 8 + j) + (7 if mut and j in (10, 11) else 0),)
+                    for j in range(24)
+                ],
+            )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "variant": [], "payload": []}
-            for i in (int(x) for x in pdf["doc_id"]):
-                rate = 8000 + (i % 3) * 4000
-                ch = 1 + i % 2
-                nf = 50 + i % 101
-                out["doc_id"].append(i)
-                out["variant"].append("orig")
-                out["payload"].append(
-                    encode_wav_pcm16(
-                        rate, ch,
-                        [
-                            tuple(_aclip_sample(i, j, c) for c in range(ch))
-                            for j in range(nf)
-                        ],
-                    )
-                )
-                if FIXTURE_VARIANT_PREDS[("aclip", "clip")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("clip")
-                    out["payload"].append(
-                        encode_wav_pcm16(
-                            rate, 1,
-                            [(_aclip_sample(i, 8 + j),) for j in range(24)],
-                        )
-                    )
-                if FIXTURE_VARIANT_PREDS[("aclip", "mut")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("mut")
-                    out["payload"].append(
-                        encode_wav_pcm16(
-                            rate, 1,
-                            [
-                                (
-                                    _aclip_sample(i, 8 + j)
-                                    + (7 if j in (10, 11) else 0),
-                                )
-                                for j in range(24)
-                            ],
-                        )
-                    )
-                if FIXTURE_VARIANT_PREDS[("aclip", "steal")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("steal")
-                    out["payload"].append(
-                        encode_wav_pcm16(
-                            rate, 1,
-                            [
-                                (_aclip_sample(i + 1, 8 + j),)
-                                for j in range(24)
-                            ],
-                        )
-                    )
-            yield pd.DataFrame(out)
+        return {
+            "orig": lambda: encode_wav_pcm16(
+                rate, ch,
+                [
+                    tuple(_aclip_sample(i, j, c) for c in range(ch))
+                    for j in range(50 + i % 101)
+                ],
+            ),
+            "clip": lambda: excerpt(i, False),
+            "mut": lambda: excerpt(i, True),
+            "steal": lambda: excerpt(i + 1, False),
+        }
 
-    d.mapInPandas(gen, "doc_id bigint, variant string, payload binary").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
+    return _stage_corpus(spark, sf_dir, "aclip", payloads)
 
 
 # --------------- Image crop containment corpus (r15) ----------------------
@@ -3281,21 +3077,6 @@ def stage_image_crop_payloads(spark: SparkSession, sf_dir: str) -> str:
     +9 mod 256 for doc_id%5==0 (partial containment); 'steal' = the
     NEXT doc's crop published under this doc's id for doc_id%7==0
     (cross-document crop — the thumbnail-repost shape)."""
-    import hashlib
-    import os
-
-    from apache_hive_1_2_2_src_spark.sources.io import _tmp
-
-    tag = hashlib.md5(os.path.normpath(sf_dir).encode()).hexdigest()[:12]
-    path = _tmp(f"mm_payloads_icrop_{tag}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < FIXTURE_DOC_LIMIT)
-        .repartition(8, "doc_id")
-    )
 
     def crop_bmp(src: int, mut: bool) -> bytes:
         def pixel(x: int, y: int) -> tuple[int, int, int]:
@@ -3306,36 +3087,15 @@ def stage_image_crop_payloads(spark: SparkSession, sf_dir: str) -> str:
 
         return encode_bmp24(8, 6, pixel)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "variant": [], "payload": []}
-            for i in (int(x) for x in pdf["doc_id"]):
-                w, h = _crop_fixture_dims(i)
-                out["doc_id"].append(i)
-                out["variant"].append("orig")
-                out["payload"].append(
-                    encode_bmp24(
-                        w, h,
-                        lambda x, y, i=i: (
-                            _crop_fixture_pixel(i, x, y),
-                        ) * 3,
-                    )
-                )
-                if FIXTURE_VARIANT_PREDS[("crop", "crop")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("crop")
-                    out["payload"].append(crop_bmp(i, False))
-                if FIXTURE_VARIANT_PREDS[("crop", "mut")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("mut")
-                    out["payload"].append(crop_bmp(i, True))
-                if FIXTURE_VARIANT_PREDS[("crop", "steal")](i):
-                    out["doc_id"].append(i)
-                    out["variant"].append("steal")
-                    out["payload"].append(crop_bmp(i + 1, False))
-            yield pd.DataFrame(out)
+    def payloads(i: int):
+        w, h = _crop_fixture_dims(i)
+        return {
+            "orig": lambda: encode_bmp24(
+                w, h, lambda x, y: (_crop_fixture_pixel(i, x, y),) * 3
+            ),
+            "crop": lambda: crop_bmp(i, False),
+            "mut": lambda: crop_bmp(i, True),
+            "steal": lambda: crop_bmp(i + 1, False),
+        }
 
-    d.mapInPandas(gen, "doc_id bigint, variant string, payload binary").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
+    return _stage_corpus(spark, sf_dir, "crop", payloads, kind="icrop")

@@ -28,11 +28,13 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (kept for parity with sibling modules)
 
 from apache_hive_1_2_2_src_spark.registry import register
+from apache_hive_1_2_2_src_spark.streaming.epoch_store import concurrently
 from apache_hive_1_2_2_src_spark.tmputil import scratch_dir
 from apache_hive_1_2_2_src_spark.tables import hadoop_fs, load_table
 
@@ -640,8 +642,7 @@ def load_data_inpath(spark: SparkSession, sf_dir: str) -> DataFrame:
             if st.getPath().getName().endswith(".parquet")
         ]
 
-        def _mv(i_st) -> None:
-            i, st = i_st
+        def _mv(i: int, st) -> None:
             if not fs.rename(
                 st.getPath(), P(os.path.join(tdir, f"load0_{i:05d}.parquet"))
             ):
@@ -650,10 +651,7 @@ def load_data_inpath(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 16-way like write_hive_bucketed's flatten: a LOAD of a 100 TB
         # drop is thousands of renames, minutes sequential on an object
         # store, seconds pooled. All awaited before the emptiness check.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            list(pool.map(_mv, enumerate(stats)))
+        concurrently(*(partial(_mv, i, st) for i, st in enumerate(stats)))
         moved = len(stats)
         inpath_emptied = moved > 0 and not any(
             st.getPath().getName().endswith(".parquet")

@@ -99,10 +99,14 @@ def drain(writer: DataStreamWriter, ckpt: str, timeout: float, what: str) -> Non
 
 
 def concurrently(*jobs: Callable[[], T]) -> list[T]:
-    """Run independent driver-side jobs on threads (their Spark jobs
-    overlap) and return their results in order. Every job has finished
-    before this returns; the first failure is raised."""
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+    """Run independent driver-side jobs on at most 16 threads (their
+    Spark jobs or FS metadata calls overlap) and return their results in
+    order; no jobs give ``[]``. Every job has finished before this
+    returns or raises, so a caller's cleanup never races a running job;
+    the first failure in job order is then raised."""
+    if not jobs:
+        return []
+    with ThreadPoolExecutor(max_workers=min(len(jobs), 16)) as pool:
         futs = [pool.submit(j) for j in jobs]
     return [f.result() for f in futs]
 

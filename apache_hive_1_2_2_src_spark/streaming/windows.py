@@ -2622,10 +2622,12 @@ def _phash_probe_dedup(
     registered query (n_batches=3) and the batch-count-independence /
     store-pruning pytests. ``store_k`` is the state-store partitioning
     dial — verdicts must be k-invariant (k=1 = no pruning possible)."""
-    import pandas as pd
-
     from apache_hive_1_2_2_src_spark.extensions.dedup import (
+        _BANDS,
+        _HAMMING,
         _PHASH_HAMMING_MAX,
+        _band_rows,
+        _decode_payloads,
     )
     from apache_hive_1_2_2_src_spark.extensions.multimodal import (
         phash64_bands,
@@ -2646,54 +2648,13 @@ def _phash_probe_dedup(
         pay.withColumn("drop", range_drop("doc_id", 200, n_batches)), n_batches, inbox
     )
 
-    def hash_batches(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "variant": [], "b0": [], "b1": [],
-                   "b2": [], "b3": []}
-            for doc_id, variant, payload in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                h = phash64_bands(bytes(payload))
-                out["doc_id"].append(int(doc_id))
-                out["variant"].append(str(variant))
-                for i in range(4):
-                    out[f"b{i}"].append(h[i])
-            yield pd.DataFrame(out)
-
     def probe_and_index(batch: DataFrame, epoch_id: int) -> None:
         sp = batch.sparkSession
-        fp = (
-            batch.mapInPandas(
-                hash_batches,
-                "doc_id bigint, variant string, "
-                "b0 int, b1 int, b2 int, b3 int",
-            )
-            .withColumn(
-                "vcode",
-                F.when(F.col("variant") == "orig", 0)
-                .when(F.col("variant") == "reenc", 1)
-                .otherwise(2),
-            )
-            .withColumn("key", F.col("doc_id") * 10 + F.col("vcode"))
+        fp = _decode_payloads(
+            batch, "phash", lambda buf: (phash64_bands(buf),), _BANDS
         )
         bands = (
-            fp.select(
-                "key", "doc_id", "variant", "b0", "b1", "b2", "b3",
-                F.explode(
-                    F.array(*[
-                        F.struct(
-                            F.lit(i).alias("band_idx"),
-                            F.col(f"b{i}").alias("band_val"),
-                        )
-                        for i in range(4)
-                    ])
-                ).alias("bb"),
-            )
-            .select(
-                "key", "doc_id", "variant", "b0", "b1", "b2", "b3",
-                F.col("bb.band_idx").alias("band_idx"),
-                F.col("bb.band_val").alias("band_val"),
-            )
+            _band_rows(fp)
             .withColumn(
                 "pb",
                 F.pmod(
@@ -2742,13 +2703,7 @@ def _phash_probe_dedup(
             .distinct()
         )
         dups = (
-            cand.withColumn(
-                "hamming",
-                F.expr(
-                    "bit_count(a0 ^ c0) + bit_count(a1 ^ c1) "
-                    "+ bit_count(a2 ^ c2) + bit_count(a3 ^ c3)"
-                ),
-            )
+            cand.withColumn("hamming", F.expr(_HAMMING))
             .filter(F.col("hamming") <= _PHASH_HAMMING_MAX)
             .groupBy("new_key")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -2809,9 +2764,11 @@ def _landmark_probe_contained(
     """``payloads_path``/``n_docs`` let overlay tests drive the SAME probe
     over a synthetic corpus (e.g. the hot-silence overlay); the
     registered query always uses the staged fixture corpus defaults."""
-    import pandas as pd
-
-    from apache_hive_1_2_2_src_spark.extensions.dedup import _LANDMARK_DF_CAP
+    from apache_hive_1_2_2_src_spark.extensions.dedup import (
+        _cap_hot_landmarks,
+        _decode_payloads,
+        _frame_shingles,
+    )
     from apache_hive_1_2_2_src_spark.extensions.multimodal import (
         stage_audio_clip_payloads,
         wav_energy_frames,
@@ -2833,57 +2790,15 @@ def _landmark_probe_contained(
         n_batches, inbox,
     )
 
-    def energy_batches(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "variant": [], "t": [], "sig": []}
-            for doc_id, variant, payload in zip(
-                pdf["doc_id"], pdf["variant"], pdf["payload"]
-            ):
-                for t, e in enumerate(wav_energy_frames(bytes(payload))):
-                    out["doc_id"].append(int(doc_id))
-                    out["variant"].append(str(variant))
-                    out["t"].append(t)
-                    out["sig"].append(str(e))
-            yield pd.DataFrame(out)
-
     def probe_and_index(batch: DataFrame, epoch_id: int) -> None:
         sp = batch.sparkSession
-        fsig = (
-            batch.mapInPandas(
-                energy_batches,
-                "doc_id bigint, variant string, t int, sig string",
-            )
-            .withColumn(
-                "vcode",
-                F.when(F.col("variant") == "orig", 0)
-                .when(F.col("variant") == "clip", 1)
-                .when(F.col("variant") == "mut", 2)
-                .otherwise(3),
-            )
-            .select(
-                (F.col("doc_id") * 10 + F.col("vcode")).alias("key"),
-                "t", "sig",
-            )
+        fsig = _decode_payloads(
+            batch, "aclip",
+            lambda buf: enumerate(map(str, wav_energy_frames(buf))),
+            ("t int", "sig string"),
         )
-        f1, f2, f3 = fsig.alias("f1"), fsig.alias("f2"), fsig.alias("f3")
         sh = (
-            f1.join(
-                f2,
-                (F.col("f2.key") == F.col("f1.key"))
-                & (F.col("f2.t") == F.col("f1.t") + 1),
-            )
-            .join(
-                f3,
-                (F.col("f3.key") == F.col("f1.key"))
-                & (F.col("f3.t") == F.col("f1.t") + 2),
-            )
-            .select(
-                F.col("f1.key").alias("key"),
-                F.col("f1.t").alias("t"),
-                F.concat_ws(
-                    ":", F.col("f1.sig"), F.col("f2.sig"), F.col("f3.sig")
-                ).alias("shingle"),
-            )
+            _frame_shingles(fsig, 3, ":")
             .withColumn(
                 "pb",
                 F.pmod(F.xxhash64(F.col("shingle")), F.lit(store_k)),
@@ -2908,25 +2823,19 @@ def _landmark_probe_contained(
                 "is_new", F.lit(True)
             )
         )
-        # hot-landmark cap, the streaming form of _cap_hot_landmarks
-        # (SCALE.md's measured ~449,000x silence overlay): drop probe
-        # rows whose landmark's SO-FAR document frequency (store rows in
-        # the batch's pb buckets + this batch — complete per landmark,
-        # since pb = hash(shingle) co-locates every occurrence) exceeds
-        # the cap. The landmark STORE keeps hot rows so later batches
-        # still see true prefix df; on a hot-free corpus this equals the
-        # batch query's global cap exactly (the oracle's batch-replay
-        # pins certify it), while a landmark that turns hot mid-stream
-        # stops matching from that batch on — the bounded-state trade
-        # every no-retraction incremental index makes.
-        cool = (
-            earlier.withColumn(
-                "__lm_df",
-                F.count(F.lit(1)).over(Window.partitionBy("shingle")),
-            )
-            .filter(F.col("__lm_df") <= _LANDMARK_DF_CAP)
-            .drop("__lm_df")
-        )
+        # hot-landmark cap: the batch query's _cap_hot_landmarks over
+        # the prefix (SCALE.md's measured ~449,000x silence overlay):
+        # drop probe rows whose landmark's SO-FAR document frequency
+        # (store rows in the batch's pb buckets + this batch — complete
+        # per landmark, since pb = hash(shingle) co-locates every
+        # occurrence) exceeds the cap. The landmark STORE keeps hot rows
+        # so later batches still see true prefix df; on a hot-free
+        # corpus this equals the batch query's global cap exactly (the
+        # oracle's batch-replay pins certify it), while a landmark that
+        # turns hot mid-stream stops matching from that batch on — the
+        # bounded-state trade every no-retraction incremental index
+        # makes.
+        cool = _cap_hot_landmarks(earlier)
         votes = (
             cool.filter(F.col("is_new")).alias("nb")
             .join(
@@ -3016,10 +2925,10 @@ def _stream_contained_oracle() -> str:
     # arrival order, drop count, and store partitioning all invisible.
     from apache_hive_1_2_2_src_spark.extensions.dedup import (
         _AUDIO_CLIP_CTES,
-        _CONTAIN_KEPT_1D,
+        _containment_sql,
     )
 
-    return _AUDIO_CLIP_CTES + _CONTAIN_KEPT_1D + """
+    return _AUDIO_CLIP_CTES + _containment_sql() + """
     SELECT ka, kb, CAST(best_off AS INTEGER) AS best_off,
            CAST(n_match AS BIGINT) AS n_match,
            CASE WHEN 2 * n_match >= GREATEST(nsa, nsb) THEN 'neardup'

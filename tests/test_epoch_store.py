@@ -6,11 +6,17 @@
   result unchanged;
 - a drain past its timeout stops its query and raises TimeoutError;
 - a compacted store is terminal: an append to it is refused;
-- staged drops are one file per drop, mtime-ordered, empty drops kept."""
+- staged drops are one file per drop, mtime-ordered, empty drops kept;
+- the driver-side fan-out (``concurrently``) runs at most 16 jobs at a
+  time, lets every job finish before it raises the first failure, and
+  gives ``[]`` for no jobs."""
 
 from __future__ import annotations
 
 import os
+import threading
+import time
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +25,7 @@ from pyspark.sql.streaming import DataStreamWriter
 from apache_hive_1_2_2_src_spark.streaming import windows as sw
 from apache_hive_1_2_2_src_spark.streaming.epoch_store import (
     EpochStore,
+    concurrently,
     drain,
     stage_drops,
 )
@@ -110,3 +117,36 @@ def test_stage_drops_writes_one_file_per_drop_in_order(spark, tmp_path):
     assert counts == [2, 0, 1]
     assert spark.read.parquet(os.path.join(inbox, names[0])).columns == ["k"]
     assert not os.path.exists(inbox + "__stage")
+
+
+def test_fanout_finishes_every_job_before_raising():
+    # The bucket-file flatten deletes its output dir when a placement
+    # fails; that is only safe if no other placement is still renaming
+    # into it when the failure reaches the caller.
+    lock = threading.Lock()
+    running, peak, done = [0], [0], []
+
+    def slow(i: int) -> int:
+        with lock:
+            running[0] += 1
+            peak[0] = max(peak[0], running[0])
+        time.sleep(0.2)
+        with lock:
+            running[0] -= 1
+            done.append(i)
+        return i
+
+    def fail() -> None:
+        raise RuntimeError("placement failed")
+
+    jobs = [fail] + [partial(slow, i) for i in range(20)]
+    with pytest.raises(RuntimeError, match="placement failed"):
+        concurrently(*jobs)
+    assert sorted(done) == list(range(20))
+    assert running[0] == 0 and peak[0] <= 16
+    assert concurrently(*(partial(slow, i) for i in range(3))) == [0, 1, 2]
+
+
+def test_fanout_of_no_jobs_is_empty():
+    # an inpath without parquet files or a layout check of no partitions
+    assert concurrently() == []

@@ -644,7 +644,7 @@ def test_containment_queries_no_cartesian_no_bnlj(spark, registry):
     the only window is the (ka, kb) pair-partitioned modal-offset rank
     (SCALE.md r15 containment audit: 0 cartesians, 0 BNLJ)."""
     for name in ("dedup_video_contained", "dedup_audio_contained",
-                 "dedup_image_cropped"):
+                 "dedup_image_cropped", "dedup_video_temporal"):
         p = plan_text(registry[name].build(spark, SF_DIR))
         assert "CartesianProduct" not in p, name
         assert "BroadcastNestedLoopJoin" not in p, name
